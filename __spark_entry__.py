@@ -287,13 +287,16 @@ def q_updatedb_adaptive(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def q_updatedb_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Same inputs and oracle as updatedb_states, through the
-    bloom/fingerprint URL-seen split path (urls/urlseen.py): untouched
-    rows bypass the merge shuffle; result must be row-identical."""
-    from nutch_spark.operators.updatedb import updatedb_incremental
+    fingerprint URL-seen split (updatedb_split, urls/urlseen.py):
+    untouched rows bypass the merge shuffle; result must be
+    row-identical. Called directly because this fixture's segment is
+    larger than its CrawlDb, so updatedb_incremental's dispatch would
+    take the plain merge."""
+    from nutch_spark.operators.updatedb import updatedb_split
 
     docs = _docs(spark, sf_dir)
     old, seg_rows = _updatedb_inputs(docs)
-    out = updatedb_incremental(old, seg_rows, CFG, UPD_NOW, membership="bloom")
+    out = updatedb_split(old, seg_rows, CFG, UPD_NOW)
     return out.select(
         "url", "status", "fetch_time", "retries", "fetch_interval",
         F.col("score").cast("double").alias("score"), "signature",

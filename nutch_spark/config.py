@@ -26,8 +26,8 @@ class NutchConfig:
     db_update_additions_allowed: bool = True  # db.update.additions.allowed
     db_update_purge_404: bool = False  # db.update.purge.404
     db_update_purge_orphans: bool = False  # db.update.purge.orphans
-    # membership="auto" split threshold for updatedb_incremental: use the
-    # fingerprint-split bypass only when segment rows < this fraction of
+    # updatedb_incremental dispatch threshold: use the fingerprint-split
+    # bypass (updatedb_split) only when segment rows < this fraction of
     # crawldb rows. Measured on the 20M-frontier scaling fixture
     # (BENCH/MEASUREMENT_LOG.md round-3f): at touched fraction 0.31 the
     # plain full merge beats the split at local[4] (55.3s vs 64.2s) and

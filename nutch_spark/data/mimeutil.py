@@ -89,6 +89,10 @@ _ALIASES = {
     "application/x-zip-compressed": "application/zip",
 }
 KNOWN_NAMES = {**{n: n for n in _PARENT}, **_ALIASES}
+# whitespace for_name ignores around a header type; the JVM twin strips
+# the same set (F.trim would strip spaces only)
+_NAME_WS = " \t\r\n\x0b\f"
+_NAME_WS_JVM = r"^[ \t\r\n\x0B\f]+|[ \t\r\n\x0B\f]+$"
 
 # URL-extension map (tika.detect(url)); shares the indexer's table and
 # adds the archive formats this module introduces
@@ -174,7 +178,7 @@ def for_name(name: str | None) -> str | None:
     for known spellings (case/whitespace-insensitive), else None."""
     if not name:
         return None
-    return KNOWN_NAMES.get(name.strip().lower())
+    return KNOWN_NAMES.get(name.strip(_NAME_WS).lower())
 
 
 def mime_type_from_url(url: str | None) -> str:
@@ -275,7 +279,9 @@ def _map_lookup(table: dict, key: Column) -> Column:
 def header_mime_col(content_type: Column) -> Column:
     """cleanMimeType + forName as one expression: canonical name for
     known header spellings, NULL otherwise."""
-    cleaned = F.lower(F.trim(F.substring_index(content_type, ";", 1)))
+    cleaned = F.lower(
+        F.regexp_replace(F.substring_index(content_type, ";", 1), _NAME_WS_JVM, "")
+    )
     return _map_lookup(KNOWN_NAMES, cleaned)
 
 

@@ -56,6 +56,7 @@ from nutch_spark.schema import (
 )
 
 from nutch_spark.schema import EMPTY_META_EXPR as _EMPTY_MAP
+from nutch_spark.urls.urlseen import fingerprint_split
 
 _DATUM_COLS = [
     "status",
@@ -438,73 +439,69 @@ def crawldb_filter(
     return df
 
 
+def updatedb_split(
+    crawldb: DataFrame,
+    segment_rows: DataFrame,
+    cfg: NutchConfig,
+    now_ms: int,
+    **kw,
+) -> DataFrame:
+    """updatedb through the fingerprint URL-seen split.
+
+    At frontier scale the plain merge shuffles the entire CrawlDb every
+    cycle even though a cycle touches ≤ topN + discovered-outlink URLs.
+    Here the CrawlDb is split by the broadcast fingerprints of the
+    *segment's* URLs (:func:`nutch_spark.urls.urlseen.fingerprint_split`):
+
+    - untouched rows (provably not in the segment: the split has no
+      false negatives) bypass the merge entirely: no shuffle, emitted
+      as-is, exactly the reducer's "no new data, emit old" path
+      (CrawlDbReducer.java:155-172);
+    - touched rows (including fingerprint collisions) go through the
+      exact :func:`updatedb` state machine; a collision has no segment
+      rows, lands in keep_old_only, and comes out unchanged.
+
+    Result is row-identical to ``updatedb(crawldb, segment_rows, ...)``.
+    """
+    touched, untouched = fingerprint_split(crawldb, segment_rows)
+    merged = updatedb(touched, segment_rows, cfg, now_ms, **kw)
+    return merged.unionByName(untouched.select(*merged.columns))
+
+
 def updatedb_incremental(
     crawldb: DataFrame | None,
     segment_rows: DataFrame,
     cfg: NutchConfig,
     now_ms: int,
-    *,
-    membership: str = "auto",
-    bloom_fpp: float = 0.01,
     **kw,
 ) -> DataFrame:
-    """Bloom/fingerprint-accelerated updatedb (north rule: URL-seen
-    membership as a shuffle accelerator).
+    """updatedb that takes :func:`updatedb_split` when a cycle touches
+    a small share of the CrawlDb, and the plain merge otherwise.
 
-    At frontier scale the plain merge shuffles the entire CrawlDb every
-    cycle even though a cycle touches ≤ topN + discovered-outlink URLs.
-    Here the CrawlDb is split with a broadcast membership structure
-    over the *segment's* URLs:
-
-    - untouched rows (provably not in the segment — membership has no
-      false negatives) bypass the merge entirely: no shuffle, emitted
-      as-is, exactly the reducer's "no new data, emit old" path
-      (CrawlDbReducer.java:155-172);
-    - touched rows (including false positives) go through the exact
-      :func:`updatedb` state machine; a false positive has no segment
-      rows, lands in keep_old_only, and comes out unchanged.
-
-    ``membership="auto"`` (default) dispatches on input shape: when the
-    segment is a large fraction of the CrawlDb (row-count ratio ≥
-    ``cfg.db_update_incremental_max_touched``; segment rows over-count
-    touched URLs, so the test is conservative toward the full merge)
-    the plain single-shuffle merge is used. The threshold is set for
-    CLUSTER economics, not single-box wall time: the split broadcasts
-    one fingerprint per distinct segment URL to EVERY executor, so its
-    cost grows as (touched x executors) while the shuffle it avoids
-    shrinks with the untouched fraction — at 10^3 executors and a
-    dense (>15%) touch ratio the replicated broadcast dwarfs the
-    saved shuffle, while in the true frontier regime (10^7 touched of
-    10^10) the bypass of the untouched 99.9% dominates at any cluster
-    size. A single-JVM probe reads the opposite at dense ratios
+    When the segment is a large fraction of the CrawlDb (row-count ratio
+    ≥ ``cfg.db_update_incremental_max_touched``; segment rows
+    over-count touched URLs, so the test is conservative toward the full
+    merge) the plain single-shuffle merge is used. The threshold is set
+    for CLUSTER economics, not single-box wall time: the split
+    broadcasts one fingerprint per distinct segment URL to EVERY
+    executor, so its cost grows as (touched x executors) while the
+    shuffle it avoids shrinks with the untouched fraction — at 10^3
+    executors and a dense (>15%) touch ratio the replicated broadcast
+    dwarfs the saved shuffle, while in the true frontier regime (10^7
+    touched of 10^10) the bypass of the untouched 99.9% dominates at any
+    cluster size. A single-JVM probe reads the opposite at dense ratios
     precisely because local mode materializes the broadcast ONCE
     (BENCH/MEASUREMENT_LOG.md round-3i: fair per-variant probe at 31%
     touched, local[4] split 62.8s vs full 90.8s — both dispatches are
     measured, the constant chooses the cluster-honest one). The two
-    counts auto spends are column-pruned scans, negligible next to
-    either merge plan.
+    counts spent here are column-pruned scans, negligible next to either
+    merge plan.
 
     Result is row-identical to ``updatedb(crawldb, segment_rows, ...)``
-    on every path.
+    on both paths.
     """
-    if crawldb is None:
-        return updatedb(None, segment_rows, cfg, now_ms, **kw)
-    from nutch_spark.urls.urlseen import BloomBitmap, CuckooFilter, FingerprintSet
-
-    if membership == "auto":
-        max_touched = getattr(cfg, "db_update_incremental_max_touched", 0.15)
+    if crawldb is not None:
         db_n = crawldb.count()
-        if db_n == 0 or segment_rows.count() >= max_touched * db_n:
-            return updatedb(crawldb, segment_rows, cfg, now_ms, **kw)
-        membership = "fingerprint"
-
-    seg_urls = segment_rows.select("url")
-    if membership == "bloom":
-        seen = BloomBitmap(seg_urls, fpp=bloom_fpp)
-    elif membership == "cuckoo":
-        seen = CuckooFilter(seg_urls)
-    else:
-        seen = FingerprintSet(seg_urls)
-    touched, untouched = seen.split(crawldb)
-    merged = updatedb(touched, segment_rows, cfg, now_ms, **kw)
-    return merged.unionByName(untouched.select(*merged.columns))
+        if db_n and segment_rows.count() < cfg.db_update_incremental_max_touched * db_n:
+            return updatedb_split(crawldb, segment_rows, cfg, now_ms, **kw)
+    return updatedb(crawldb, segment_rows, cfg, now_ms, **kw)

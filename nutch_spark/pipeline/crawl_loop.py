@@ -183,8 +183,8 @@ class Crawler:
         )
 
         base_db = mark_generated(crawldb, fl) if self.cfg.generate_update_crawldb else crawldb
-        # bloom/fingerprint URL-seen split: untouched CrawlDb rows bypass
-        # the merge shuffle (north rule; row-identical to plain updatedb)
+        # fingerprint URL-seen split: untouched CrawlDb rows bypass the
+        # merge shuffle (row-identical to plain updatedb)
         newdb = updatedb_incremental(base_db, segment_rows, self.cfg, now_ms)
         if self.cfg.scoring_depth_enabled:
             # newly discovered URLs take min(parent depth)+1; redirect

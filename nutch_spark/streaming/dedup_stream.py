@@ -2,9 +2,9 @@
 Structured Streaming operator.
 
 The crawl-loop batch engine keeps its URL-seen set in the CrawlDb
-(groupBy(url) in updatedb) with bloom/cuckoo/fingerprint accelerators
-(urls/urlseen.py). A continuously-ingesting frontier wants the same
-semantics over an unbounded stream: emit each key the FIRST time it is
+(groupBy(url) in updatedb), with a broadcast fingerprint split as its
+accelerator (urls/urlseen.py). A continuously-ingesting frontier wants the
+same semantics over an unbounded stream: emit each key the FIRST time it is
 seen, drop every later duplicate, and bound the state store with an
 event-time watermark (a key re-appearing after the lateness horizon is
 treated as new — the streaming analogue of the crawldb's refetch
@@ -22,7 +22,7 @@ Shapes:
   expires with the watermark).
 
 Scale: streaming dedup state is one entry per distinct key inside the
-lateness horizon — the bounded-frontier equivalent of the bloom split;
+lateness horizon — the bounded-frontier equivalent of the fingerprint split;
 partitioned by key hash across executors, no driver state.
 """
 

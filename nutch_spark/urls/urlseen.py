@@ -1,405 +1,38 @@
-"""URL-seen membership structures (north rule: bloom/cuckoo URL-seen).
+"""URL-seen membership: the fingerprint split of the CrawlDb.
 
 The CrawlDb itself is the *exact* URL-seen set (groupBy(url) in
 updatedb, as in the reference where the CrawlDb MapFile is the seen
-set). These structures are **accelerators**: probabilistic pre-filters
-whose false positives are always resolved by an exact operator
-downstream, so exactness is preserved while shuffle volume collapses.
+set). ``fingerprint_split`` is only a pre-filter: it splits the CrawlDb
+into rows that may be in a segment and rows that provably are not, so
+``operators.updatedb.updatedb_split`` merges the first slice and passes
+the second through without a shuffle. A 64-bit xxhash collision only
+sends an untouched row down the exact path, so the result never
+changes.
 
-Two implementations, same contract:
-
-- ``FingerprintSet`` (default): broadcast the distinct ``xxhash64(url)``
-  values of the small side and split the big side with broadcast
-  semi/anti hash-joins — JVM-side, zero Python. 8 bytes/url; morally a
-  cuckoo filter (64-bit fingerprint table). A 64-bit collision behaves
-  exactly like a bloom false positive (row takes the slow exact path).
-- ``BloomBitmap``: k-hash bloom bitmap built distributively (bit_or
-  aggregation over 64-bit word partials; the driver only materializes
-  the non-zero words, never raw positions), broadcast as one long-word
-  array row and probed by pure-JVM element_at/shiftleft/'&' columns
-  (numpy UDF kept as fallback). ~1.2 bytes/url at 1% fpp — for when
-  the small side reaches 10^8+ urls and 8 bytes/url no longer
-  broadcasts.
-- ``CuckooFilter``: partitioned (2,4) partial-key cuckoo filter —
-  ~2.4 bytes/url at fpp ≈ 0.02%, built per hash-partition in Arrow
-  batches, probed by a pure-JVM broadcast equi-join on the key
-  partition (see its split docstring; numpy UDF kept as fallback).
-
-Used by ``operators.updatedb.updatedb_incremental``: the 10^10-row
-CrawlDb is split into touched (might be in the segment) and untouched
-(provably not in the segment — no false negatives) partitions; only the
-touched slice enters the merge shuffle, the untouched slice passes
-through without moving.
+The broadcast costs 8 bytes per distinct segment URL. A compact filter
+(bloom, or cuckoo as in "A Learned Cuckoo Filter for Approximate
+Membership Queries over Variable-sized Sliding Windows on Data
+Streams", SIGMOD 2023) would pay off only beyond ~10^8 touched URLs per
+cycle, where that broadcast stops fitting an executor; per-cycle topN is
+orders of magnitude below it.
 """
 
 from __future__ import annotations
 
-import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 
-class FingerprintSet:
-    """Broadcast 64-bit fingerprint membership (exact split on hashes)."""
+def fingerprint_split(big: DataFrame, members: DataFrame) -> tuple[DataFrame, DataFrame]:
+    """Returns (maybe_member, not_member); they partition ``big``.
 
-    def __init__(self, small: DataFrame, url_col: str = "url"):
-        # Both split() joins share this frame; under AQE the distinct
-        # shuffle AND the broadcast exchange are materialized ONCE and
-        # the second join plans a ReusedExchange (verify on the FINAL
-        # adaptive plan — the pre-adaptive executedPlan() string shows
-        # two BroadcastExchange nodes and no Reused*, which is how the
-        # round-3f log misread this as a double build).
-        self._fp = (
-            small.select(F.xxhash64(url_col).alias("_fp")).distinct()
-        )
-
-    def split(self, big: DataFrame, url_col: str = "url") -> tuple[DataFrame, DataFrame]:
-        """Returns (maybe_member, not_member); they partition ``big``."""
-        fp = F.broadcast(self._fp)
-        h = F.xxhash64(url_col)
-        maybe = big.join(fp, h == F.col("_fp"), "left_semi")
-        definitely_not = big.join(fp, h == F.col("_fp"), "left_anti")
-        return maybe, definitely_not
-
-
-class BloomBitmap:
-    """Classic k-hash bloom bitmap; built by a distributed bit_or
-    aggregation over word-indexed partials, probed via Arrow numpy."""
-
-    def __init__(
-        self,
-        small: DataFrame,
-        url_col: str = "url",
-        expected_items: int | None = None,
-        fpp: float = 0.01,
-        num_hashes: int = 5,
-    ):
-        if expected_items is None:
-            expected_items = small.count() or 1
-        # m = -n ln p / (ln 2)^2, rounded up to whole long words
-        m = int(-expected_items * np.log(fpp) / (np.log(2) ** 2)) + 64
-        m = ((m + 63) // 64) * 64
-        self.m = m
-        self.k = num_hashes
-        # distributed build: per-word bit_or partials (one groupBy on the
-        # 64-bit word index, map-side combined — no distinct shuffle, no
-        # collect() of O(k*n) raw positions). The driver materializes
-        # only the non-zero words: <= m/64 rows of 16 bytes, i.e. the
-        # same order as the bitmap it must hold to broadcast anyway.
-        pos = small.select(
-            F.explode(
-                F.array(
-                    *[
-                        F.pmod(F.xxhash64(url_col, F.lit(i)), F.lit(m))
-                        for i in range(num_hashes)
-                    ]
-                )
-            ).alias("p")
-        )
-        words = (
-            pos.select(
-                F.expr("p DIV 64").alias("w"),
-                F.expr("shiftleft(CAST(1 AS BIGINT), CAST(p % 64 AS INT))").alias("b"),
-            )
-            .groupBy("w")
-            .agg(F.bit_or("b").alias("mask"))
-        )
-        pdf = words.toPandas()
-        # single retained view: the word-indexed int64 array — exactly
-        # the bit_or aggregation layout (bit p = bit p%64 of word p//64).
-        # The old byte view duplicated ~m/8 bytes per bitmap for the
-        # Arrow fallback probe, which derives the test from words just
-        # as cheaply.
-        words_arr = np.zeros(m // 64, dtype=np.int64)
-        if len(pdf):
-            words_arr[pdf["w"].to_numpy().astype(np.int64)] = (
-                pdf["mask"].to_numpy().astype(np.int64)
-            )
-        self._words = words_arr
-        self._wdf = None  # lazily-built one-row (array<bigint>) probe table
-
-    def might_contain_udf(self):
-        words, m, k = self._words, self.m, self.k
-
-        @F.pandas_udf("boolean")
-        def _mc(hcols: pd.DataFrame) -> pd.Series:
-            out = np.ones(len(hcols), dtype=bool)
-            for c in hcols.columns:
-                p = hcols[c].to_numpy()
-                # arithmetic >> then &1 still extracts the original bit
-                out &= ((words[p // 64] >> (p % 64)) & 1) != 0
-            return pd.Series(out)
-
-        return _mc
-
-    def _words_df(self, spark) -> DataFrame:
-        """One-row (array<bigint>) DataFrame of the dense word array.
-
-        Plan built ONCE per bitmap and reused: the (index, word) rows
-        travel executor-ward Arrow-batched (createDataFrame on a pandas
-        frame), and the positional array is assembled JVM-side — never a
-        multi-hundred-MB transient Python list through py4j per split()
-        call (at fpp=0.01 over 10^8 urls the array is ~19M longs).
-
-        Deliberately NOT persist()ed: a long-running crawl loop builds a
-        fresh bitmap per cycle and there is no unpersist hook once the
-        lazy split() frames escape — persisting would leak one ~150 MB
-        block per cycle. Within one plan both split() branches share the
-        broadcast via ReuseExchange; across separate actions the rebuild
-        is a single local-array agg, noise next to the probe side."""
-        if self._wdf is None:
-            rows = pd.DataFrame(
-                {"i": np.arange(len(self._words), dtype=np.int64), "v": self._words}
-            )
-            self._wdf = spark.createDataFrame(rows).agg(
-                F.transform(
-                    F.array_sort(F.collect_list(F.struct("i", "v"))),
-                    lambda s: s["v"],
-                ).alias("_bf_words")
-            )
-        return self._wdf
-
-    def split(self, big: DataFrame, url_col: str = "url") -> tuple[DataFrame, DataFrame]:
-        """Pure-JVM probe: the bitmap rides along as ONE broadcast row
-        holding the long-word array, and each of the k bit tests is an
-        element_at + shiftleft + '&' column expression — the 10^10-row
-        big side never enters a Python worker. (might_contain_udf
-        remains as the Arrow fallback for exotic deployments.)"""
-        spark = big.sparkSession
-        wdf = self._words_df(spark)
-        terms = []
-        for i in range(self.k):
-            # xxhash64(url, <int literal>) matches the build side's
-            # F.xxhash64(url_col, F.lit(i)) — same IntegerType seed column
-            p = f"pmod(xxhash64(`{url_col}`, {i}), CAST({self.m} AS BIGINT))"
-            word = f"element_at(_bf_words, CAST(({p}) DIV 64 AS INT) + 1)"
-            bit = f"shiftleft(CAST(1 AS BIGINT), CAST(({p}) % 64 AS INT))"
-            terms.append(f"(({word} & {bit}) != 0)")
-        mc = F.expr(" AND ".join(terms))
-        j = big.crossJoin(F.broadcast(wdf))
-        return j.filter(mc).drop("_bf_words"), j.filter(~mc).drop("_bf_words")
-
-
-class CuckooFilter:
-    """Partitioned (2,4)-cuckoo filter — the north rule's third URL-seen
-    membership structure (bloom / cuckoo / exact fingerprints).
-
-    Classic partial-key cuckoo hashing (Fan et al., "Cuckoo Filter:
-    Practically Better Than Bloom", CoNEXT'14): each key stores a 16-bit
-    fingerprint in one of two candidate buckets of ``slots`` entries;
-    the alternate bucket is ``i XOR H(fp)``, so a membership probe
-    touches exactly ``2*slots`` table cells. ~2.4 bytes/key at the 0.84
-    load target with fpp ≈ 2*slots/2^15 ≈ 0.02% — denser than the
-    8-byte FingerprintSet broadcast and a far tighter fpp than the
-    bloom bitmap at similar size; unlike bloom it also supports
-    deletion (not needed here, the seen-set only grows per cycle).
-
-    Distributed build: keys are routed to ``partitions`` disjoint
-    sub-filters by the sign-correct floor-mod of their xxhash64 (the
-    eviction chain is inherently sequential, so parallelism comes from
-    partitioning the key space, the standard scale-out for cuckoo
-    tables); each sub-table is built in one Arrow batch inside
-    ``applyInPandas`` (numpy eviction loop, O(1) amortized per insert,
-    table doubled and rebuilt on the rare eviction-chain failure).
-
-    **The packed tables never reside on the driver**: the build output
-    stays a persisted ``(part, m, table array<int>)`` DataFrame on the
-    executors, and ``split`` probes it with a broadcast equi-join on
-    the key partition — the broadcast exchange ships executor→executor.
-    At a 10^10-URL frontier the tables total ~24 GB cluster-wide
-    (~2.4 bytes/key), which persists fine distributed but must never be
-    ``collect()``ed. Only the opt-in Arrow-fallback probe
-    (``might_contain_udf``) materializes tables driver-side, behind an
-    asserted slot cap.
-
-    Probe fingerprint / bucket / alternate-bucket arithmetic derives
-    from the single JVM ``xxhash64(url)`` with identical semantics on
-    both build (numpy) and probe (column expr) sides, so the two can
-    never disagree. A 64-bit xxhash collision behaves exactly like a
-    filter false positive (the row takes the exact downstream path) —
-    the same no-false-negative contract as FingerprintSet and
-    BloomBitmap, so ``updatedb_incremental`` stays row-identical to the
-    full merge.
-    """
-
-    _MIX = np.uint64(0x5BD1E995)  # murmur2 M: spreads fp into bucket space
-    _MAX_KICKS = 500
-
-    def __init__(
-        self,
-        small: DataFrame,
-        url_col: str = "url",
-        partitions: int | None = None,
-        slots: int = 4,
-        load: float = 0.84,
-    ):
-        import pyspark.sql.types as T
-
-        if partitions is None:
-            n = small.count()
-            # ~4M keys (~10 MB table) per sub-filter build task
-            partitions = max(1, (n + 3_999_999) // 4_000_000)
-        self.partitions = int(partitions)
-        self.slots = int(slots)
-        mix, max_kicks, slots_, load_ = self._MIX, self._MAX_KICKS, self.slots, load
-
-        hashes = small.select(F.xxhash64(url_col).alias("h")).withColumn(
-            "part", F.pmod(F.col("h"), F.lit(self.partitions))
-        )
-        out_schema = T.StructType(
-            [
-                T.StructField("_ck_part", T.IntegerType()),
-                T.StructField("_ck_m", T.LongType()),
-                T.StructField("_ck_tbl", T.ArrayType(T.IntegerType())),
-            ]
-        )
-
-        def build(key, pdf: pd.DataFrame) -> pd.DataFrame:
-            h = pdf["h"].to_numpy().astype(np.int64).astype(np.uint64)
-            fp = ((h >> np.uint64(8)) & np.uint64(0xFFFF)).astype(np.uint64)
-            fp = np.where(fp == 0, np.uint64(1), fp)
-            n_keys = len(h)
-            m = 1
-            while m * slots_ * load_ < n_keys:
-                m *= 2
-            while True:  # grow ×2 on eviction-chain failure (rare)
-                mask = np.uint64(m - 1)
-                i1 = ((h >> np.uint64(32)) & mask).astype(np.int64)
-                table = np.zeros(m * slots_, dtype=np.uint16)
-                ok = True
-                for j in range(n_keys):
-                    i, f = int(i1[j]), int(fp[j])
-                    placed = False
-                    for _ in range(max_kicks):
-                        base = i * slots_
-                        free = -1
-                        for s in range(slots_):
-                            if table[base + s] == 0:
-                                free = s
-                            elif table[base + s] == f:
-                                placed = True  # already present
-                                break
-                        if placed:
-                            break
-                        if free >= 0:
-                            table[base + free] = f
-                            placed = True
-                            break
-                        # evict a pseudo-random victim, relocate it
-                        s = (i + f) % slots_
-                        f, table[base + s] = int(table[base + s]), f
-                        i = int((np.uint64(i) ^ ((np.uint64(f) * mix) & mask)))
-                    if not placed:
-                        ok = False
-                        break
-                if ok:
-                    return pd.DataFrame(
-                        {
-                            "_ck_part": [int(key[0])],
-                            "_ck_m": [m],
-                            "_ck_tbl": [table.astype(np.int32)],
-                        }
-                    )
-                m *= 2
-
-        # The tables stay a DataFrame on the executors (persisted so the
-        # eviction-loop build runs once, not per action); never collected
-        # to the driver — split() broadcasts it executor->executor.
-        self._tdf = hashes.groupBy("part").applyInPandas(build, out_schema).persist()
-        self._tables = None  # driver-side copy exists only for the fallback UDF
-
-    def unpersist(self) -> None:
-        """Release the persisted sub-tables (e.g. between crawl cycles)."""
-        self._tdf.unpersist()
-
-    def _collect_tables(self, max_slots: int = 50_000_000) -> dict:
-        """Driver-side table copy for the Arrow-fallback probe ONLY.
-
-        Asserts a hard slot cap (default 50M slots = 100 MB) — the
-        production split() path never calls this; at frontier scale the
-        tables are tens of GB and must stay distributed."""
-        if self._tables is None:
-            total = self._tdf.agg(
-                F.coalesce(F.sum(F.size("_ck_tbl")), F.lit(0)).alias("s")
-            ).collect()[0]["s"]
-            assert total <= max_slots, (
-                f"CuckooFilter fallback probe would collect {total} slots to "
-                f"the driver (cap {max_slots}); use split() — the broadcast-"
-                "join probe keeps tables distributed"
-            )
-            self._tables = {
-                int(r["_ck_part"]): (
-                    int(r["_ck_m"]),
-                    np.array(r["_ck_tbl"], dtype=np.uint16),
-                )
-                for r in self._tdf.collect()
-            }
-        return self._tables
-
-    def might_contain_udf(self):
-        tables, P, slots_, mix = (
-            self._collect_tables(),
-            self.partitions,
-            self.slots,
-            self._MIX,
-        )
-
-        @F.pandas_udf("boolean")
-        def _mc(hs: pd.Series) -> pd.Series:
-            h_i64 = hs.to_numpy().astype(np.int64)
-            out = np.zeros(len(h_i64), dtype=bool)
-            part = h_i64 % P  # numpy floor-mod == JVM pmod for P > 0
-            for p, (m, table) in tables.items():
-                sel = part == p
-                if not sel.any():
-                    continue
-                h = h_i64[sel].astype(np.uint64)
-                mask = np.uint64(m - 1)
-                fp = (h >> np.uint64(8)) & np.uint64(0xFFFF)
-                fp = np.where(fp == 0, np.uint64(1), fp).astype(np.uint16)
-                i1 = ((h >> np.uint64(32)) & mask).astype(np.int64)
-                i2 = (i1 ^ ((fp.astype(np.uint64) * mix) & mask).astype(np.int64))
-                hit = np.zeros(len(h), dtype=bool)
-                for s in range(slots_):
-                    hit |= table[i1 * slots_ + s] == fp
-                    hit |= table[i2 * slots_ + s] == fp
-                out[sel] = hit
-            return pd.Series(out)
-
-        return _mc
-
-    def split(self, big: DataFrame, url_col: str = "url") -> tuple[DataFrame, DataFrame]:
-        """Returns (maybe_member, not_member); they partition ``big``.
-
-        Pure-JVM probe: the packed sub-tables ride along as a broadcast
-        equi-join on the key partition (pmod(xxhash64(url), P)), and the
-        fingerprint / bucket / alternate-bucket arithmetic is column
-        expressions — arithmetic '>>' equals the build side's uint64
-        logical shift for every bit below the mask width, and fp*MIX
-        (< 2^47) cannot overflow under ANSI. An unmatched partition
-        (no keys hashed there, or an empty build side) left-joins null
-        tables; element_at(null) is null and coalesce(false) lands the
-        row in not_member, the numpy probe's zeros-initialized
-        behavior. might_contain_udf remains as the Arrow fallback
-        (driver-resident, capped — see _collect_tables)."""
-        tdf = self._tdf
-        part = F.pmod(F.xxhash64(F.col(url_col)), F.lit(self.partitions)).cast("int")
-        j = big.join(F.broadcast(tdf), part == F.col("_ck_part"), "left")
-        h = f"xxhash64(`{url_col}`)"
-        fp0 = f"(shiftright({h}, 8) & CAST(65535 AS BIGINT))"
-        fp = f"(CASE WHEN {fp0} = 0 THEN CAST(1 AS BIGINT) ELSE {fp0} END)"
-        mask = "(_ck_m - 1)"
-        i1 = f"(shiftright({h}, 32) & {mask})"
-        i2 = f"({i1} ^ (({fp} * CAST({int(self._MIX)} AS BIGINT)) & {mask}))"
-        terms = []
-        for s in range(self.slots):
-            terms.append(
-                f"element_at(_ck_tbl, CAST({i1} * {self.slots} + {s} AS INT) + 1) = {fp}"
-            )
-            terms.append(
-                f"element_at(_ck_tbl, CAST({i2} * {self.slots} + {s} AS INT) + 1) = {fp}"
-            )
-        mc = F.coalesce(F.expr(" OR ".join(terms)), F.lit(False))
-        drop = ["_ck_part", "_ck_m", "_ck_tbl"]
-        return j.filter(mc).drop(*drop), j.filter(~mc).drop(*drop)
+    The distinct ``xxhash64(url)`` values of ``members`` are broadcast
+    and ``big`` is split by a broadcast semi join and anti join on
+    them."""
+    # Both joins share this frame; under AQE the distinct shuffle and
+    # the broadcast exchange are materialized once and the second join
+    # plans a ReusedExchange (visible on the final adaptive plan only:
+    # the pre-adaptive plan shows two BroadcastExchange nodes).
+    fp = F.broadcast(members.select(F.xxhash64("url").alias("_fp")).distinct())
+    on = F.xxhash64("url") == F.col("_fp")
+    return big.join(fp, on, "left_semi"), big.join(fp, on, "left_anti")

@@ -147,6 +147,9 @@ FIXTURES = [
     ("bogus;;nonsense", URL_PREFIX + "b.js", b"var x = 1;\n"),
     (None, URL_PREFIX + "w", b"WARC/1.0\r\nWARC-Type: response\r\n"),
     (None, URL_PREFIX + "j.jpg", b"\xff\xd8\xff\xe0JFIF"),
+    # header padded with non-space whitespace: both surfaces strip it
+    ("text/html\t", URL_PREFIX + "t.txt", b"plain words"),
+    ("\r\napplication/xml\t; x=y", URL_PREFIX + "x", b"plain words"),
 ]
 
 
@@ -194,7 +197,7 @@ _header = st.one_of(
         "text/css", "application/msword", "image/png", "bogus/type",
         "application/octet-stream", ";;", "text/HTML ; x=y",
     ]),
-    st.text(alphabet=list("abctext/html;= "), max_size=20),
+    st.text(alphabet=list("abctext/html;= \t\r"), max_size=20),
 )
 _url = st.builds(
     lambda stem, ext: f"http://h.example.com/{stem}{ext}",

@@ -193,7 +193,7 @@ def test_reader_schemas_and_fetchdb(server):
     assert [n["url"] for n in nodes] == ["http://b/"]
 
 
-def test_db_crawldb_end_to_end(spark, tmp_path):
+def test_db_crawldb_end_to_end(spark, tmp_path, tmp_path_factory):
     """POST /db/crawldb stats/topN/dump/url over a real injected
     crawldb at <crawlId>/crawldb — the DbResource.readdb decision tree
     delegating to operators/stats (end-to-end like the INJECT test)."""
@@ -264,6 +264,18 @@ def test_db_crawldb_end_to_end(spark, tmp_path):
         assert code == 400
         code, _ = _post(base, "/db/crawldb", {"crawlId": "/", "type": "stats"})
         assert code == 400
+        # glob escapes: resolve() keeps "{../}" and "\.." as literal
+        # names under the root, but spark.read expands them to ".."
+        outside = tmp_path_factory.mktemp("outside")
+        spark.range(1).write.parquet(str(outside / "db"))
+        for escape in (
+            f"{{../}}{outside.name}/db",
+            f"crawl/{{../}}{{../}}{outside.name}/db",
+            f"crawl/\\../\\../{outside.name}/db",
+            "crawl/{..}/{..}/outside",
+        ):
+            code, _ = _post(base, "/reader/sequence/read?count=true", {"path": escape})
+            assert code == 400, escape
         # relative path under the root still resolves
         code, out = _post(
             base, "/reader/sequence/read?count=true", {"path": "crawl/crawldb"}

@@ -1,10 +1,11 @@
-"""URL-seen membership accelerators (bloom / fingerprint split)."""
+"""URL-seen fingerprint split and the updatedb paths built on it:
+``updatedb_split`` and ``updatedb_incremental``'s count-ratio dispatch."""
 
 from pyspark.sql import functions as F
 
 from nutch_spark.config import NutchConfig
-from nutch_spark.operators.updatedb import updatedb, updatedb_incremental
-from nutch_spark.urls.urlseen import BloomBitmap, FingerprintSet
+from nutch_spark.operators.updatedb import updatedb, updatedb_incremental, updatedb_split
+from nutch_spark.urls.urlseen import fingerprint_split
 
 
 def _urls(spark, n, prefix="http://h.example.com/"):
@@ -16,7 +17,7 @@ def _urls(spark, n, prefix="http://h.example.com/"):
 def test_fingerprint_split_partitions_exactly(spark):
     big = _urls(spark, 1000)
     small = _urls(spark, 100).filter(F.col("url").endswith("7"))
-    maybe, not_in = FingerprintSet(small).split(big)
+    maybe, not_in = fingerprint_split(big, small)
     m = {r["url"] for r in maybe.collect()}
     n = {r["url"] for r in not_in.collect()}
     assert m | n == {r["url"] for r in big.collect()}
@@ -24,22 +25,9 @@ def test_fingerprint_split_partitions_exactly(spark):
     assert {r["url"] for r in small.collect()} <= m
 
 
-def test_bloom_split_no_false_negatives(spark):
-    big = _urls(spark, 2000)
-    small = big.filter(F.col("url").endswith("3"))
-    bloom = BloomBitmap(small, fpp=0.01)
-    maybe, not_in = bloom.split(big)
-    m = {r["url"] for r in maybe.collect()}
-    n = {r["url"] for r in not_in.collect()}
-    truth = {r["url"] for r in small.collect()}
-    assert truth <= m  # no false negatives, ever
-    assert m | n == {r["url"] for r in big.collect()} and not (m & n)
-    # false-positive rate in the ballpark of fpp (generous bound)
-    fp = len(m - truth) / max(1, len(n) + len(m - truth))
-    assert fp < 0.05
-
-
 def test_updatedb_incremental_equals_exact(spark):
+    """The split path is row-identical to the plain merge. This 3-row
+    CrawlDb sits above the dispatch ratio, so call the split directly."""
     cfg = NutchConfig()
     cols = (
         "url string, status int, fetch_time long, retries int, fetch_interval int,"
@@ -66,25 +54,23 @@ def test_updatedb_incremental_equals_exact(spark):
             (r["url"], r["status"], r["fetch_time"], r["score"]) for r in df.collect()
         )
     exact = snap(updatedb(old, seg, cfg, 9000))
-    for kind in ("fingerprint", "bloom"):
-        assert snap(updatedb_incremental(old, seg, cfg, 9000, membership=kind)) == exact
+    assert snap(updatedb_split(old, seg, cfg, 9000)) == exact
 
 
 def test_updatedb_auto_dispatch(spark, monkeypatch):
-    """membership="auto" uses the split only below the touched-ratio
-    threshold (BENCH/MEASUREMENT_LOG.md round-3f crossover), and is
-    result-identical to the exact merge on both sides of it."""
-    import nutch_spark.urls.urlseen as urlseen
+    """updatedb_incremental takes updatedb_split only below the
+    touched-ratio threshold (BENCH/MEASUREMENT_LOG.md round-3f
+    crossover), and is result-identical to the exact merge on both
+    sides of it."""
+    import nutch_spark.operators.updatedb as U
 
     built = []
-    real_fps = urlseen.FingerprintSet
 
-    class SpyFps(real_fps):
-        def __init__(self, *a, **kw):
-            built.append(1)
-            super().__init__(*a, **kw)
+    def spy_split(*a, **kw):
+        built.append(1)
+        return updatedb_split(*a, **kw)
 
-    monkeypatch.setattr(urlseen, "FingerprintSet", SpyFps)
+    monkeypatch.setattr(U, "updatedb_split", spy_split)
     cfg = NutchConfig()
     cols = (
         "url string, status int, fetch_time long, retries int, fetch_interval int,"
@@ -105,130 +91,13 @@ def test_updatedb_auto_dispatch(spark, monkeypatch):
     def snap(df):
         return sorted((r["url"], r["status"], r["fetch_time"]) for r in df.collect())
 
-    # ratio 1/200 < 0.15 -> split path (FingerprintSet built)
+    # ratio 1/200 < 0.15 -> split path
     assert snap(updatedb_incremental(old, seg_small, cfg, 9000)) == snap(
         updatedb(old, seg_small, cfg, 9000)
     )
     assert built == [1]
-    # ratio 200/200 >= 0.15 -> full merge, no membership structure
+    # ratio 200/200 >= 0.15 -> full merge, no split
     assert snap(updatedb_incremental(old, seg_big, cfg, 9000)) == snap(
         updatedb(old, seg_big, cfg, 9000)
     )
     assert built == [1]
-
-
-def test_cuckoo_split_no_false_negatives(spark):
-    from nutch_spark.urls.urlseen import CuckooFilter
-
-    big = _urls(spark, 2000)
-    small = big.filter(F.col("url").endswith("3"))
-    ck = CuckooFilter(small, partitions=3)  # multi-partition build path
-    maybe, not_in = ck.split(big)
-    m = {r["url"] for r in maybe.collect()}
-    n = {r["url"] for r in not_in.collect()}
-    truth = {r["url"] for r in small.collect()}
-    assert truth <= m  # no false negatives, ever
-    assert m | n == {r["url"] for r in big.collect()} and not (m & n)
-    # 16-bit fingerprints: fpp ~ 0.02%; generous bound
-    fp = len(m - truth) / max(1, len(n) + len(m - truth))
-    assert fp < 0.01
-
-
-def test_cuckoo_empty_and_high_load(spark):
-    from nutch_spark.urls.urlseen import CuckooFilter
-
-    big = _urls(spark, 300)
-    # empty member set: everything lands in not_member
-    empty = big.filter(F.lit(False))
-    maybe, not_in = CuckooFilter(empty).split(big)
-    assert maybe.count() == 0 and not_in.count() == 300
-    # single partition at high load exercises the eviction/grow path
-    ck = CuckooFilter(_urls(spark, 5000), partitions=1, load=0.95)
-    m, _ = ck.split(_urls(spark, 5000))
-    assert m.count() == 5000
-
-
-def test_updatedb_incremental_cuckoo_equals_exact(spark):
-    cfg = NutchConfig()
-    cols = (
-        "url string, status int, fetch_time long, retries int, fetch_interval int,"
-        " score float, signature string, modified_time long,"
-        " metadata map<string,string>, gen_time long, repr_url string"
-    )
-    old = spark.createDataFrame(
-        [
-            ("u1", 1, 1000, 0, 3600, 1.0, None, 0, {}, None, None),
-            ("u2", 2, 1000, 0, 3600, 2.0, "sig2", 0, {}, None, None),
-            ("u3", 1, 1000, 1, 3600, 0.5, None, 0, {}, None, None),
-        ],
-        cols,
-    )
-    seg = spark.createDataFrame(
-        [
-            ("u1", 0x21, 5000, 0, 3600, 1.0, "new", 0, {}, None, None),
-            ("u9", 0x43, 5000, 0, 3600, 0.25, None, 0, {}, None, None),
-        ],
-        cols,
-    )
-
-    def snap(df):
-        return sorted(
-            (r["url"], r["status"], r["fetch_time"], r["score"]) for r in df.collect()
-        )
-
-    exact = snap(updatedb(old, seg, cfg, 9000))
-    assert snap(updatedb_incremental(old, seg, cfg, 9000, membership="cuckoo")) == exact
-
-
-def test_jvm_probes_match_numpy_probes(spark):
-    """The JVM split (element_at/shiftleft/'&' columns, broadcast
-    tables) must classify every row exactly like the Arrow numpy probe
-    it replaced — both derive every quantity from the same xxhash64,
-    so any disagreement is an arithmetic translation bug, not noise."""
-    from nutch_spark.urls.urlseen import CuckooFilter
-
-    big = _urls(spark, 3000)
-    small = big.filter(F.col("url").endswith("9"))
-
-    bloom = BloomBitmap(small, fpp=0.02)
-    jvm_m, jvm_n = bloom.split(big)
-    probe = F.struct(
-        *[
-            F.pmod(F.xxhash64("url", F.lit(i)), F.lit(bloom.m)).alias(f"h{i}")
-            for i in range(bloom.k)
-        ]
-    )
-    mc = bloom.might_contain_udf()(probe)
-    arrow_m = {r["url"] for r in big.filter(mc).collect()}
-    assert {r["url"] for r in jvm_m.collect()} == arrow_m
-    assert {r["url"] for r in jvm_n.collect()} == (
-        {r["url"] for r in big.collect()} - arrow_m
-    )
-
-    ck = CuckooFilter(small, partitions=3)
-    jvm_m, jvm_n = ck.split(big)
-    mc = ck.might_contain_udf()(F.xxhash64("url"))
-    arrow_m = {r["url"] for r in big.filter(mc).collect()}
-    assert {r["url"] for r in jvm_m.collect()} == arrow_m
-    assert {r["url"] for r in jvm_n.collect()} == (
-        {r["url"] for r in big.collect()} - arrow_m
-    )
-
-
-def test_cuckoo_tables_stay_off_driver(spark):
-    """The production probe path must never collect tables to the
-    driver (VERDICT r02: O(frontier) driver residency); only the
-    opt-in fallback UDF materializes them, behind an asserted cap."""
-    import pytest
-
-    from nutch_spark.urls.urlseen import CuckooFilter
-
-    small = _urls(spark, 2000)
-    ck = CuckooFilter(small, partitions=2)
-    assert ck._tables is None  # build did not collect
-    maybe, not_in = ck.split(_urls(spark, 3000))
-    assert maybe.count() == 2000 and ck._tables is None  # probe did not collect
-    with pytest.raises(AssertionError, match="cap"):
-        ck._collect_tables(max_slots=1)
-    assert ck._collect_tables() is not None  # capped fallback still works
-    ck.unpersist()

@@ -78,20 +78,21 @@ def run_pair(tag: str) -> dict | None:
         "NUTCH_BENCH_REPEATS": "1",
     })
     vmstat_log = REPO / f"BENCH/probes/vmstat_r5{tag}_pair.log"
-    vm = subprocess.Popen(
-        ["vmstat", "5"], stdout=open(vmstat_log, "w"),
-        stderr=subprocess.DEVNULL,
-    )
-    SENTINEL.write_text(tag)
-    try:
-        out = subprocess.run(
-            [sys.executable, str(REPO / "bench.py"), "--scaling"],
-            env=env, capture_output=True, text=True,
-            timeout=4200, cwd=str(REPO),
+    with open(vmstat_log, "w") as vm_out:
+        vm = subprocess.Popen(
+            ["vmstat", "5"], stdout=vm_out, stderr=subprocess.DEVNULL,
         )
-    finally:
-        vm.terminate()
-        SENTINEL.unlink(missing_ok=True)
+        SENTINEL.write_text(tag)
+        try:
+            out = subprocess.run(
+                [sys.executable, str(REPO / "bench.py"), "--scaling"],
+                env=env, capture_output=True, text=True,
+                timeout=4200, cwd=str(REPO),
+            )
+        finally:
+            vm.terminate()
+            vm.wait()
+            SENTINEL.unlink(missing_ok=True)
     shutil.copy(
         REPO / "BENCH/scaling_details.json",
         REPO / f"BENCH/scaling_details_r5{tag}.json",
@@ -131,9 +132,15 @@ def main() -> int:
             # skip tags whose artifacts exist (a re-armed gate process
             # must not overwrite a previous attempt's committed files)
             tag = next(
-                t for t in tags
-                if not (REPO / f"BENCH/scaling_details_r5{t}.json").exists()
+                (t for t in tags
+                 if not (REPO / f"BENCH/scaling_details_r5{t}.json").exists()),
+                None,
             )
+            if tag is None:
+                print(f"all tags r5{tags[0]}..r5{tags[-1]} already have "
+                      "scaling_details artifacts; nothing left to launch",
+                      flush=True)
+                return 1
             attempts += 1
             consecutive = 0
             print(f"window healthy — launching pinned pair r5{tag}", flush=True)

@@ -62,6 +62,8 @@ from urllib.parse import parse_qs, urlparse
 # driver: REST reads are for inspection, not extraction — a 10^10-row
 # crawldb must never be streamed through a JSON response
 MAX_READ_ROWS = 10_000
+# Hadoop glob metacharacters (and its escape), refused by _confined
+_GLOB_CHARS = frozenset("{}[]*?,\\")
 
 JOB_TYPES = (
     "INJECT", "GENERATE", "FETCH", "PARSE", "UPDATEDB",
@@ -205,7 +207,12 @@ class NutchServerState:
     def _confined(self, path: str) -> str:
         """Resolve ``path`` (relative paths against data_root) and
         reject anything escaping data_root — symlinks and ``..``
-        included, since resolve() normalizes both."""
+        included, since resolve() normalizes both. Hadoop glob syntax
+        is rejected first: spark.read expands ``{../}`` and unescapes
+        ``\\..`` into ``..`` after this check has passed them as literal
+        names."""
+        if any(c in _GLOB_CHARS for c in path):
+            raise ValueError(f"glob characters not allowed in path: {path!r}")
         p = Path(path)
         if not p.is_absolute():
             p = self.data_root / p

@@ -497,7 +497,7 @@ def q_crawldb_404_purge(spark: SparkSession, sf_dir: str) -> DataFrame:
     from nutch_spark.operators.updatedb import crawldb_filter
 
     db = _crawldb(_docs(spark, sf_dir))
-    return crawldb_filter(db, CFG, purge_404=True).select("url", "status")
+    return crawldb_filter(db, replace(CFG, db_update_purge_404=True)).select("url", "status")
 
 
 def q_urlfilter_domain(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -13,7 +13,7 @@ AbstractFetchSchedule.java:121).
 
 from __future__ import annotations
 
-from dataclasses import dataclass, field, replace
+from dataclasses import dataclass, replace
 
 
 @dataclass(frozen=True)
@@ -74,7 +74,6 @@ class NutchConfig:
 
     # --- fetcher politeness (nutch-default.xml:1010-1075) ---
     fetcher_server_delay: float = 5.0  # s, fetcher.server.delay
-    fetcher_server_min_delay: float = 0.0  # s, fetcher.server.min.delay
     fetcher_threads_per_queue: int = 1  # fetcher.threads.per.queue
     fetcher_max_crawl_delay: float = 30.0  # s, fetcher.max.crawl.delay
     fetcher_queue_mode: str = "byHost"  # fetcher.queue.mode
@@ -94,7 +93,6 @@ class NutchConfig:
     fetcher_bandwidth_target_kbps: int = -1  # fetcher.bandwidth.target (kbit/s)
     fetcher_bandwidth_check_every_secs: int = 30  # fetcher.bandwidth.target.check.everyNSecs
     fetcher_max_num_threads: int = -1  # fetcher.maxNum.threads (< threads => threads)
-    http_redirect_max: int = 0  # http.redirect.max (0 = record as linked)
 
     # in-fetch outlink following (F9, FetcherThread.java:840-886):
     # depth <= 0 disables; num.links caps follows per page; the config
@@ -125,10 +123,11 @@ class NutchConfig:
     linkdb_ignore_external_links: bool = False
 
     # --- engine / physical execution knobs (ours, not Nutch's) ---
+    # unread by the engine (get_spark sets spark.sql.shuffle.partitions);
+    # kept because perfbench/run.py constructs NutchConfig with it
     shuffle_partitions: int = 32
     fetch_partitions: int = 32  # numLists equivalent (Generator numLists)
     partition_url_seed: int = 42  # partition.url.seed analogue, injected
-    generator_parity_mode: bool = False  # exact single-stream replay (tests)
 
     def with_(self, **kw) -> "NutchConfig":
         return replace(self, **kw)

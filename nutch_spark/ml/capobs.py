@@ -10,13 +10,13 @@ caller's own first action instead, via ``DataFrame.observe``
 cap filter, so it sees the pre-filter row set): zero extra Spark jobs,
 same logged numbers.
 
-Because observed metrics only materialize when the caller runs an
-action, the log line is emitted from a small daemon thread parked on
-``Observation.get`` (which blocks JVM-side until the first action on
-the observed plan completes). Production callers get the warning
-automatically; deterministic consumers (tests, the crawl loop's
-metrics table) call :func:`flush_cap_drop_logs` after their action to
-join any finished logger threads before asserting.
+Observed metrics only materialize when the caller runs an action, so
+each observation joins a pending list swept by at most one daemon
+poller thread, which logs an observation once its JVM future has
+completed (a non-blocking check). A plan that never runs costs a list
+entry, not a parked thread. Deterministic consumers (tests, the crawl
+loop's metrics table) call :func:`flush_cap_drop_logs` after their
+action to log every finished observation before asserting.
 """
 
 from __future__ import annotations
@@ -26,13 +26,17 @@ import logging
 import threading
 import time
 
+from py4j.protocol import Py4JError
+from pyspark import SparkContext
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.observation import Observation
 
 _SEQ = itertools.count()
 _LOCK = threading.Lock()
-_PENDING: list[threading.Thread] = []
+# (observation, bucket_cap, op_name, logger, detail) awaiting their action
+_PENDING: list[tuple[Observation, int, str, logging.Logger, str]] = []
+_POLLER: threading.Thread | None = None
 
 
 def observe_cap_drops(
@@ -50,10 +54,11 @@ def observe_cap_drops(
     CollectMetrics node because ``rank_col`` is produced by the window
     below it, so the metric always sees the uncapped row set.
 
-    When the caller's first action completes, a daemon thread logs
+    When the caller's first action completes, the poller logs
     ``logger.warning`` with the drop count iff it is nonzero, with
     ``detail`` appended (the operator-specific recall-loss guidance).
     """
+    global _POLLER
     obs = Observation(f"{op_name}_cap_drops_{next(_SEQ)}")
     observed = ranked.observe(
         obs,
@@ -61,54 +66,69 @@ def observe_cap_drops(
             F.when(F.col(rank_col) > bucket_cap, F.lit(1)).otherwise(F.lit(0))
         ).alias("dropped"),
     )
-    t = threading.Thread(
-        target=_wait_and_log,
-        args=(obs, bucket_cap, op_name, logger, detail),
-        daemon=True,
-        name=f"cap-drops-{op_name}",
-    )
-    t.start()
     with _LOCK:
-        _PENDING.append(t)
+        _PENDING.append((obs, bucket_cap, op_name, logger, detail))
+        if _POLLER is None:
+            _POLLER = threading.Thread(target=_poll, daemon=True, name="cap-drops-poller")
+            _POLLER.start()
     return observed
 
 
-def _wait_and_log(
-    obs: Observation,
-    bucket_cap: int,
-    op_name: str,
-    logger: logging.Logger,
-    detail: str,
-) -> None:
+def _poll() -> None:
+    """Sweep every 0.2 s; exit once nothing is pending (the next
+    :func:`observe_cap_drops` starts a fresh poller)."""
+    global _POLLER
+    while True:
+        time.sleep(0.2)
+        _sweep()
+        with _LOCK:
+            if not _PENDING:
+                _POLLER = None
+                return
+
+
+def _completed(obs: Observation) -> bool:
     try:
-        dropped = obs.get.get("dropped")
-    except Exception:  # session torn down before the action ran
-        return
-    if dropped:
-        logger.warning(
-            "%s: bucket_cap=%d dropped %d bucket memberships — %s",
-            op_name,
-            bucket_cap,
-            dropped,
-            detail,
-        )
+        return obs._jo.future().isCompleted()
+    except Py4JError:  # JVM gone: the plan can never run
+        return True
+
+
+def _sweep() -> int:
+    """Log and drop every pending observation whose action has
+    completed; returns how many. Logging happens under the lock, so a
+    sweep that returns has every earlier sweep's warnings out."""
+    with _LOCK:
+        done = [p for p in _PENDING if _completed(p[0])]
+        for p in done:
+            _PENDING.remove(p)
+            obs, bucket_cap, op_name, logger, detail = p
+            try:
+                dropped = obs.get.get("dropped")
+            except Py4JError:  # session torn down before the action ran
+                continue
+            if dropped:
+                logger.warning(
+                    "%s: bucket_cap=%d dropped %d bucket memberships — %s",
+                    op_name,
+                    bucket_cap,
+                    dropped,
+                    detail,
+                )
+    return len(done)
 
 
 def flush_cap_drop_logs(timeout: float = 60.0) -> int:
-    """Join logger threads whose observed action has completed, so
-    their warnings are visible to the caller (tests assert on caplog
-    after this). Threads still parked on a never-executed plan are left
-    pending. Returns the number of threads joined."""
-    with _LOCK:
-        pending = _PENDING[:]
-        del _PENDING[:]
-    deadline = time.monotonic() + timeout
-    joined = 0
-    for t in pending:
-        t.join(max(0.0, deadline - time.monotonic()))
-        if t.is_alive():
-            with _LOCK:
-                _PENDING.append(t)
-        else:
-            joined += 1
-    return joined
+    """Log every observation whose action has completed, so its warning
+    is visible to the caller (tests assert on caplog after this).
+    Observed metrics reach the driver through the listener bus, so this
+    first waits up to ``timeout`` seconds for the bus to drain.
+    Observations of never-executed plans stay pending. Returns the
+    number logged."""
+    sc = SparkContext._active_spark_context
+    if sc is not None:
+        try:
+            sc._jsc.sc().listenerBus().waitUntilEmpty(int(timeout * 1000))
+        except Py4JError:  # bus still busy at the deadline: sweep anyway
+            pass
+    return _sweep()

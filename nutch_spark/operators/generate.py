@@ -15,16 +15,24 @@ G1 select (SelectorMapper :218-300): chained column filters —
   - sort value = score * 1.0f (OPIC generatorSortValue).
 
 G2 quota (SelectorReducer :391-566): topN + ``generate.max.count`` per
-  host/domain with segment spill. Two modes:
-  - *scale mode* (default): per-host ``row_number`` window caps any
-    host to maxCount*maxNumSegments rows BEFORE any global shuffle
-    (the reference's own skew bound, :509-552), then ``orderBy.limit``
-    (TakeOrdered — distributed partial top-N) + a window over the
-    pruned <=topN*segments rows for exact segment assignment.
-  - *parity mode* (cfg.generator_parity_mode): single-group
-    applyInPandas replaying the reference's reducer loop exactly —
-    used by the ported TestGenerator suite and small crawls; both
-    modes satisfy the crawl-ordering contract (SURVEY §2.5).
+  host/domain with segment spill, as windows: a per-host ``row_number``
+  caps any host to maxCount*maxNumSegments rows BEFORE any global
+  shuffle (the reference's own skew bound, :509-552), hosts without a
+  cap spill across segments by rank, and a per-segment window applies
+  the reducer budget. With no cap, no hostdb and one reducer it is
+  ``orderBy.limit`` (TakeOrdered, a distributed partial top-N) plus one
+  window over the pruned <=topN*segments rows.
+
+  With one reducer this equals the reducer loop (:427-561) when there
+  is one segment or no host has a cap. With caps and
+  ``maxNumSegments > 1`` it does not: the loop moves a capped host on
+  to the next segment once the current one is full, while here a
+  capped host's row ranks into segment ``ceil(rank/maxCount)`` and is
+  dropped if that segment's budget is spent. Minimal case: ``h1`` scores 3, ``h2`` scores 1, maxCount=2,
+  topN=1, 2 segments — the loop gives ``h2`` segment 2; this drops it.
+  A hostdb cap <= 0 also differs: the loop reads it as uncapped, the
+  windows drop the host.
+  ``tests/test_generate.py`` holds the loop as a plain-Python oracle.
 
 G3 partition (:998-1042): repartition by URLPartitioner host-hash with
   an injected seed (politeness unit = partition, host never spans two)
@@ -38,9 +46,6 @@ G4 mark (:640-689): fetchlist rows carry ``gen_time=genTime`` (the
 
 from __future__ import annotations
 
-from typing import Iterator
-
-import pandas as pd
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
@@ -146,7 +151,7 @@ def apply_quota_windowed(
     df: DataFrame, cfg: NutchConfig, top_n: int, max_num_segments: int,
     num_reducers: int = 1,
 ) -> DataFrame:
-    """G2 scale mode. Adds ``segnum`` (1-based); drops over-quota rows.
+    """G2 quota. Adds ``segnum`` (1-based); drops over-quota rows.
 
     ``num_reducers`` mirrors the reference exactly: the SelectorReducer
     budget is ``limit = topN / numReduceTasks`` applied *independently
@@ -217,73 +222,6 @@ def apply_quota_windowed(
     pruned = pruned.withColumn("rn", F.row_number().over(w))
     pruned = pruned.withColumn("segnum", ((F.col("rn") - 1) / top_n).cast("int") + 1)
     return pruned.filter(F.col("segnum") <= max_num_segments).drop("rn")
-
-
-def apply_quota_parity(
-    df: DataFrame, cfg: NutchConfig, top_n: int, max_num_segments: int
-) -> DataFrame:
-    """G2 parity mode: replay the reducer loop (Generator.java:427-561)
-    in one pandas group — exact single-reducer semantics for tests and
-    small frontiers."""
-    from pyspark.sql import types as T
-
-    max_count = cfg.generate_max_count
-    schema = T.StructType(
-        list(df.schema.fields) + [T.StructField("segnum", T.IntegerType())]
-    )
-
-    def replay(pdf: pd.DataFrame) -> pd.DataFrame:
-        pdf = pdf.sort_values(["sort", "url"], ascending=[False, True], kind="mergesort")
-        limit = top_n
-        seg_counts = [0] * max_num_segments
-        host_state: dict[str, list[int]] = {}
-        has_hdb = "_hdb_max_count" in pdf.columns
-        count, current_seg = 0, 1
-        keep_idx, segnums = [], []
-        for idx, row in pdf.iterrows():
-            if count == limit:
-                if current_seg < max_num_segments:
-                    count = 0
-                    current_seg += 1
-                else:
-                    break
-            hk = row["host_key"]
-            if hk is None:
-                continue
-            # hostdb variable maxCount overrides the config cap per host
-            # (Generator.java:445-457), same as the windowed mode
-            mc = max_count
-            if has_hdb and pd.notna(row["_hdb_max_count"]):
-                mc = int(row["_hdb_max_count"])
-            if mc > 0:
-                st = host_state.setdefault(hk, [1, 0])
-                st[1] += 1
-                while seg_counts[st[0] - 1] >= limit and st[0] < max_num_segments:
-                    st[0] += 1
-                    st[1] = 0
-                if st[1] > mc:
-                    if st[0] < max_num_segments:
-                        st[0] += 1
-                        st[1] = 1
-                    else:
-                        continue  # skip: per-host overflow
-                segnum = st[0]
-            else:
-                segnum = current_seg
-            seg_counts[segnum - 1] += 1
-            keep_idx.append(idx)
-            segnums.append(segnum)
-            count += 1
-        out = pdf.loc[keep_idx].copy()
-        out["segnum"] = pd.Series(segnums, index=keep_idx, dtype="int32")
-        return out
-
-    return (
-        df.groupBy(F.lit(1).alias("_g"))
-        .applyInPandas(lambda _k, pdf: replay(pdf), schema=schema)
-        .drop("_g")
-    )
-
 
 
 def politeness_partition(
@@ -425,12 +363,9 @@ def generate(
         )
         df = df.join(F.broadcast(h), "host_key", "left")
 
-    if cfg.generator_parity_mode:
-        df = apply_quota_parity(df, cfg, top_n, max_num_segments)
-    else:
-        df = apply_quota_windowed(
-            df, cfg, top_n, max_num_segments, num_reducers=cfg.generate_num_reducers
-        )
+    df = apply_quota_windowed(
+        df, cfg, top_n, max_num_segments, num_reducers=cfg.generate_num_reducers
+    )
 
     if hostdb is not None and "_hdb_fetch_delay" in df.columns:
         from nutch_spark.schema import META_VARIABLE_FETCH_DELAY

@@ -123,16 +123,8 @@ def inject(
     crawldb: DataFrame | None,
     seeds: DataFrame,
     cfg: NutchConfig,
-    *,
-    overwrite: bool | None = None,
-    update: bool | None = None,
 ) -> DataFrame:
     """Inject merge (Injector.InjectReducer, :292-348) as a full outer join."""
-    if overwrite is None:
-        overwrite = cfg.db_injector_overwrite
-    if update is None:
-        update = cfg.db_injector_update
-
     # dedup seeds per url (the reference's reduce keeps the last injected
     # value; any single one is fine — keep max by score for determinism)
     s = seeds.groupBy("url").agg(
@@ -162,8 +154,9 @@ def inject(
     has_inj = F.col("inj").isNotNull()
     has_old = F.col("old").isNotNull()
 
-    use_injected = has_inj & (~has_old | F.lit(overwrite))
-    upd = has_inj & has_old & F.lit(update) & ~F.lit(overwrite)
+    overwrite = F.lit(cfg.db_injector_overwrite)
+    use_injected = has_inj & (~has_old | overwrite)
+    upd = has_inj & has_old & F.lit(cfg.db_injector_update) & ~overwrite
 
     def field(name, default_expr=None):
         inj_v = F.col("inj." + name)
@@ -206,12 +199,13 @@ def inject_full(
     seed_path_or_df: str | DataFrame,
     cfg: NutchConfig,
     now_ms: int,
-    **kw,
+    *,
+    url_filter_rules: list[str] | None = None,
+    do_normalize: bool = True,
 ) -> DataFrame:
     """Convenience: parse seeds then merge into the crawldb."""
-    seeds = parse_seeds(spark, seed_path_or_df, cfg, now_ms, **{
-        k: v for k, v in kw.items() if k in ("url_filter_rules", "do_normalize")
-    })
-    return inject(crawldb, seeds, cfg, **{
-        k: v for k, v in kw.items() if k in ("overwrite", "update")
-    })
+    seeds = parse_seeds(
+        spark, seed_path_or_df, cfg, now_ms,
+        url_filter_rules=url_filter_rules, do_normalize=do_normalize,
+    )
+    return inject(crawldb, seeds, cfg)

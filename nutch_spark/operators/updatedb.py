@@ -23,8 +23,10 @@ order-independent by construction.
 Scale notes (10^10-URL frontier):
 - one shuffle on url; partial aggregation happens map-side for max_by /
   collect_list; the linked top-K bound (10000, ``db.update.max.inlinks``)
-  caps any hot URL's reduce-side state exactly as the reference's
-  priority queue does;
+  caps each URL's merged inlinks as the reference's priority queue
+  does, but partial aggregation does not truncate ``collect_list``, so
+  a URL with 10^8 inlink rows still gathers them all in one reducer
+  before the slice;
 - AQE skew-join/partition splitting stays ON for this stage (no
   politeness constraint here).
 """
@@ -82,14 +84,9 @@ def updatedb(
     cfg: NutchConfig,
     now_ms: int,
     *,
-    additions_allowed: bool | None = None,
     max_inlinks: int = 10000,
-    link_shards: int = 0,
 ) -> DataFrame:
     """Merge segment output into the CrawlDb; returns the new CrawlDb.
-
-    ``link_shards`` > 1 enables the two-phase sharded top-K pre-cap for
-    link rows (skew safety for mega-hot URLs; result-identical).
 
     ``segment_rows``: union of crawl_fetch and crawl_parse rows (fetch
     statuses + linked/signature/parse_meta transients), crawldb schema.
@@ -97,9 +94,6 @@ def updatedb(
     discovered URLs (replaces System.currentTimeMillis,
     AbstractFetchSchedule.java:75-76).
     """
-    if additions_allowed is None:
-        additions_allowed = cfg.db_update_additions_allowed
-
     seg = segment_rows.select("url", *_DATUM_COLS)
     if crawldb is not None:
         both = crawldb.select("url", *_DATUM_COLS).unionByName(seg)
@@ -122,48 +116,6 @@ def updatedb(
         F.col("fetch_interval").alias("fetch_interval"),
         F.col("modified_time").alias("modified_time"),
     )
-
-    if link_shards and link_shards > 1:
-        # two-phase top-K for mega-hot URLs (SURVEY §4: Spark's partial
-        # aggregation does not truncate collect_list, so a URL with 10^8
-        # inlink rows would materialize them all in one reducer). Pre-cap
-        # per (url, shard): each shard keeps its local top-K, bounding
-        # the main aggregation to <= link_shards * max_inlinks link rows
-        # per URL. Exact: the struct order is total (score first, then
-        # the remaining fields), so the global top-K multiset equals the
-        # top-K of the shard-wise top-Ks.
-        linked_rows = both.filter(is_link)
-        rest = both.filter(F.col("status") != STATUS_LINKED)
-        # the shard key MUST carry per-row entropy (the link fields), not
-        # just the url — hashing the url alone puts every inlink row of a
-        # hot URL in ONE shard and the pre-cap protects nothing
-        shard = F.pmod(
-            F.xxhash64(
-                F.col("url"), F.col("score"), F.col("fetch_time"),
-                F.col("retries"), F.col("fetch_interval"),
-                F.col("modified_time"), F.lit(9173),
-            ),
-            F.lit(link_shards),
-        )
-        pre = linked_rows.groupBy("url", shard.alias("_s")).agg(
-            F.slice(
-                F.reverse(F.array_sort(F.collect_list(link_struct))), 1, max_inlinks
-            ).alias("_arr")
-        )
-        exploded = pre.select("url", F.explode("_arr").alias("l")).select(
-            F.col("url"),
-            F.lit(STATUS_LINKED).cast("int").alias("status"),
-            F.col("l.fetch_time").alias("fetch_time"),
-            F.col("l.retries").alias("retries"),
-            F.col("l.fetch_interval").alias("fetch_interval"),
-            F.col("l.score").alias("score"),
-            F.lit(None).cast("string").alias("signature"),
-            F.col("l.modified_time").alias("modified_time"),
-            F.expr(_EMPTY_MAP).alias("metadata"),
-            F.lit(None).cast("long").alias("gen_time"),
-            F.lit(None).cast("string").alias("repr_url"),
-        )
-        both = rest.unionByName(exploded.select("url", *_DATUM_COLS))
 
     agg = both.groupBy("url").agg(
         F.max_by(F.when(is_db, _datum_struct()), F.when(is_db, F.col("fetch_time"))).alias("old"),
@@ -218,7 +170,7 @@ def updatedb(
 
     # row disposition (:144-172)
     keep_old_only = has_old & ~has_fetch
-    drop = (~has_old & ~has_fetch) | (~has_old & ~F.lit(additions_allowed))
+    drop = (~has_old & ~has_fetch) | (~has_old & ~F.lit(cfg.db_update_additions_allowed))
     agg = agg.filter(~drop)
 
     # ---- merged base (result.set(fetch) + metadata/modifiedTime merge, :174-194)
@@ -410,8 +362,6 @@ def crawldb_filter(
     df: DataFrame,
     cfg: NutchConfig,
     *,
-    purge_404: bool | None = None,
-    purge_orphans: bool | None = None,
     url_normalize: bool = False,
     url_filter_rules: list[str] | None = None,
 ) -> DataFrame:
@@ -422,13 +372,9 @@ def crawldb_filter(
     from nutch_spark.urls.filters import url_filter_cond
     from nutch_spark.urls.normalizer import normalize_col
 
-    if purge_404 is None:
-        purge_404 = cfg.db_update_purge_404
-    if purge_orphans is None:
-        purge_orphans = cfg.db_update_purge_orphans
-    if purge_404:
+    if cfg.db_update_purge_404:
         df = df.filter(F.col("status") != STATUS_DB_GONE)
-    if purge_orphans:
+    if cfg.db_update_purge_orphans:
         df = df.filter(F.col("status") != STATUS_DB_ORPHAN)
     if url_normalize:
         df = df.withColumn("url", normalize_col(F.col("url"), "crawldb")).filter(

@@ -1,18 +1,24 @@
 """Port of TestGenerator.java (topN-by-score :79-107, generate.max.count
 byHost :140-196 / byDomain :205-264, filter :273-302) plus the fork's
-unfetched-only rule and the politeness-partitioning invariants — run in
-both quota modes (windowed scale mode and parity replay mode)."""
+unfetched-only rule and the politeness-partitioning invariants.
+
+Quota cases are also checked against :func:`reducer_replay`, a plain
+Python replay of the reference's SelectorReducer loop over the same
+``select_eligible`` rows."""
 
 import pytest
+from hypothesis import given, settings
+from hypothesis import strategies as st
 from pyspark.sql import functions as F
 
 from nutch_spark import schema as S
 from nutch_spark.config import NutchConfig
 from nutch_spark.operators.generate import generate, mark_generated, select_eligible
 from nutch_spark.schema import crawldb_schema
-from nutch_spark.urls.urlutil import get_host, nutch_url_hash32
+from nutch_spark.urls.urlutil import get_domain, get_host, nutch_url_hash32
 
 NOW = 1_700_000_000_000
+HOSTDB_SCHEMA = "host string, max_count int, fetch_delay_ms long"
 
 
 def datum(url, score=1.0, status=S.STATUS_DB_UNFETCHED, fetch_time=NOW - 10_000,
@@ -24,46 +30,114 @@ def db(spark, rows):
     return spark.createDataFrame(rows, crawldb_schema())
 
 
-MODES = [False, True]  # parity_mode
+def reducer_replay(rows, cfg, top_n, max_num_segments=1, host_caps=None):
+    """Reference oracle: the single-reducer SelectorReducer loop
+    (Generator.java:427-561) over eligible rows carrying ``url`` and
+    ``sort``. ``host_caps`` maps a host (or domain) key to its hostdb
+    maxCount, which overrides ``generate.max.count`` for that key
+    (Generator.java:445-457). Returns ``{url: segnum}``."""
+    by_domain = cfg.generate_count_mode == "domain" and cfg.generate_max_count != -1
+    host_caps = host_caps or {}
+    seg_counts = [0] * max_num_segments
+    host_state = {}  # key -> [segment, rows counted in it]
+    count, current_seg = 0, 1
+    out = {}
+    for r in sorted(rows, key=lambda r: (-r["sort"], r["url"])):
+        if count == top_n:
+            if current_seg < max_num_segments:
+                count, current_seg = 0, current_seg + 1
+            else:
+                break
+        hk = get_domain(r["url"]) if by_domain else get_host(r["url"])
+        if hk is None:
+            continue
+        mc = host_caps.get(hk, cfg.generate_max_count)
+        if mc > 0:
+            hs = host_state.setdefault(hk, [1, 0])
+            hs[1] += 1
+            while seg_counts[hs[0] - 1] >= top_n and hs[0] < max_num_segments:
+                hs[0] += 1
+                hs[1] = 0
+            if hs[1] > mc:
+                if hs[0] < max_num_segments:
+                    hs[0] += 1
+                    hs[1] = 1
+                else:
+                    continue  # per-host overflow
+            segnum = hs[0]
+        else:
+            segnum = current_seg
+        seg_counts[segnum - 1] += 1
+        out[r["url"]] = segnum
+        count += 1
+    return out
 
 
-@pytest.mark.parametrize("parity", MODES)
-def test_generate_highest(spark, parity):
+def hostdb_caps(hostdb):
+    if hostdb is None:
+        return {}
+    return {r["host"].lower(): r["max_count"] for r in hostdb.collect()
+            if r["max_count"] is not None}
+
+
+def generate_checked(crawldb, cfg, cur_time=NOW, *, top_n=50000, max_num_segments=1,
+                     hostdb=None, num_lists=1):
+    """``generate()`` rows, after asserting their ``{url: segnum}``
+    equals the reducer oracle run on the same eligible rows."""
+    out = generate(crawldb, cfg, cur_time, top_n=top_n, max_num_segments=max_num_segments,
+                   num_lists=num_lists, hostdb=hostdb).collect()
+    eligible = select_eligible(crawldb, cfg, cur_time).collect()
+    want = reducer_replay(eligible, cfg, top_n, max_num_segments, hostdb_caps(hostdb))
+    assert {r["url"]: r["segnum"] for r in out} == want
+    return out
+
+
+def unlisted_hostdb(spark, on):
+    """A hostdb naming no crawled host: its join routes the quota
+    through the per-row cap windows without changing any cap."""
+    if not on:
+        return None
+    return spark.createDataFrame([("unlisted.example.org", 1, None)], HOSTDB_SCHEMA)
+
+
+MODES = [False, True]  # join unlisted_hostdb
+
+
+@pytest.mark.parametrize("hostdb", MODES)
+def test_generate_highest(spark, hostdb):
     rows = [datum(f"http://aaa/{i:03d}", score=float(i)) for i in range(101)]
-    cfg = NutchConfig(generator_parity_mode=parity)
-    out = generate(db(spark, rows), cfg, NOW, top_n=2, num_lists=1).collect()
+    out = generate_checked(db(spark, rows), NutchConfig(), top_n=2,
+                           hostdb=unlisted_hostdb(spark, hostdb))
     urls = sorted((r["url"] for r in out))
     assert len(out) == 2
     assert urls == ["http://aaa/099", "http://aaa/100"]
 
 
-@pytest.mark.parametrize("parity", MODES)
+@pytest.mark.parametrize("hostdb", MODES)
 @pytest.mark.parametrize("max_per_host", [1, 2, 3])
-def test_generate_host_limit(spark, parity, max_per_host):
+def test_generate_host_limit(spark, hostdb, max_per_host):
     rows = [
         datum("http://www.example.com/index1.html"),
         datum("http://www.example.com/index2.html"),
         datum("http://www.example.com/index3.html"),
     ]
-    cfg = NutchConfig(generate_max_count=max_per_host, generator_parity_mode=parity)
-    out = generate(db(spark, rows), cfg, NOW, top_n=1_000_000, num_lists=1).collect()
+    cfg = NutchConfig(generate_max_count=max_per_host)
+    out = generate_checked(db(spark, rows), cfg, top_n=1_000_000,
+                           hostdb=unlisted_hostdb(spark, hostdb))
     assert len(out) == min(max_per_host, 3)
 
 
-@pytest.mark.parametrize("parity", MODES)
+@pytest.mark.parametrize("hostdb", MODES)
 @pytest.mark.parametrize("max_per_domain", [1, 2, 3])
-def test_generate_domain_limit(spark, parity, max_per_domain):
+def test_generate_domain_limit(spark, hostdb, max_per_domain):
     rows = [
         datum("http://a.example.com/index.html"),
         datum("http://b.example.com/index.html"),
         datum("http://c.example.com/index.html"),
     ]
-    cfg = NutchConfig(
-        generate_max_count=max_per_domain,
-        generate_count_mode="domain",
-        generator_parity_mode=parity,
-    )
-    out = generate(db(spark, rows), cfg, NOW, top_n=1_000_000, num_lists=1).collect()
+    cfg = NutchConfig(generate_max_count=max_per_domain, generate_count_mode="domain")
+    out = generate_checked(db(spark, rows), cfg, top_n=1_000_000,
+                           hostdb=unlisted_hostdb(spark, hostdb))
     assert len(out) == min(max_per_domain, 3)
 
 
@@ -110,15 +184,14 @@ def test_should_fetch_and_gen_delay(spark):
     ]
 
 
-@pytest.mark.parametrize("parity", MODES)
-def test_segment_spill(spark, parity):
+@pytest.mark.parametrize("hostdb", MODES)
+def test_segment_spill(spark, hostdb):
     """maxCount overflow spills into the next segment up to maxNumSegments,
     then drops (Generator.java:509-552)."""
     rows = [datum(f"http://spill.example.com/{i}", score=float(10 - i)) for i in range(10)]
-    cfg = NutchConfig(generate_max_count=2, generator_parity_mode=parity)
-    out = generate(
-        db(spark, rows), cfg, NOW, top_n=1_000_000, max_num_segments=3, num_lists=1
-    ).collect()
+    cfg = NutchConfig(generate_max_count=2)
+    out = generate_checked(db(spark, rows), cfg, top_n=1_000_000, max_num_segments=3,
+                           hostdb=unlisted_hostdb(spark, hostdb))
     assert len(out) == 6  # 2 per segment x 3 segments, 4 dropped
     by_seg = {}
     for r in out:
@@ -219,33 +292,20 @@ def test_hostdb_variable_budgets(spark):
 
 
 def test_hostdb_budgets_parity_mode(spark):
-    """Parity-mode replay honors hostdb per-host maxCount overrides the
-    same way the windowed mode does."""
-    from pyspark.sql import functions as F
-
-    from nutch_spark.config import NutchConfig
-    from nutch_spark.operators.generate import generate
-
-    cfg = NutchConfig(generate_max_count=3, fetch_partitions=2,
-                      generator_parity_mode=True)
+    """hostdb per-host maxCount overrides match the reducer oracle
+    (Generator.java:445-457)."""
+    cfg = NutchConfig(generate_max_count=3, fetch_partitions=2)
     rows = [
         (f"http://h{h}.example.com/doc/{i}", 1, 0, 0, 3600, 1.0 + i / 4.0,
          None, 0, {}, None, None)
         for h in (1, 2) for i in range(6)
     ]
-    db = spark.createDataFrame(
-        rows,
-        "url string, status int, fetch_time long, retries int, fetch_interval int,"
-        " score float, signature string, modified_time long,"
-        " metadata map<string,string>, gen_time long, repr_url string",
-    )
-    hostdb = spark.createDataFrame(
-        [("h1.example.com", 5, None)],
-        "host string, max_count int, fetch_delay_ms long",
-    )
-    fl = generate(db, cfg, 1_000, top_n=100, num_lists=2, hostdb=hostdb)
-    per_host = {r["h"]: r["count"] for r in
-                fl.select(F.col("host_key").alias("h")).groupBy("h").count().collect()}
+    hostdb = spark.createDataFrame([("h1.example.com", 5, None)], HOSTDB_SCHEMA)
+    fl = generate_checked(db(spark, rows), cfg, 1_000, top_n=100, num_lists=2,
+                          hostdb=hostdb)
+    per_host = {}
+    for r in fl:
+        per_host[r["host_key"]] = per_host.get(r["host_key"], 0) + 1
     assert per_host == {"h1.example.com": 5, "h2.example.com": 3}
 
 
@@ -254,35 +314,79 @@ def test_windowed_uncapped_hosts_spill_segments_like_parity(spark):
     across segments by rank exactly like the reference reducer loop —
     not be pinned to segment 1 where the per-segment budget silently
     drops everything past the limit (Generator.java:427-443)."""
-    from pyspark.sql import functions as F
-
-    from nutch_spark.config import NutchConfig
-    from nutch_spark.operators.generate import generate
-
     rows = [
         (f"http://h{h}.example.com/doc/{i}", 1, 0, 0, 3600, 1.0 + i / 4.0,
          None, 0, {}, None, None)
         for h in range(5) for i in range(5)
     ]  # 25 eligible rows, all from hosts absent in hostdb
-    db = spark.createDataFrame(
-        rows,
-        "url string, status int, fetch_time long, retries int, fetch_interval int,"
-        " score float, signature string, modified_time long,"
-        " metadata map<string,string>, gen_time long, repr_url string",
-    )
     hostdb = spark.createDataFrame(
         [("h9.example.com", 2, None)],  # no crawldb row matches
-        "host string, max_count int, fetch_delay_ms long",
+        HOSTDB_SCHEMA,
     )
+    cfg = NutchConfig(generate_max_count=-1, fetch_partitions=1)
+    fl = generate_checked(db(spark, rows), cfg, 1_000, top_n=10, max_num_segments=3,
+                          hostdb=hostdb)
+    per_seg = {}
+    for r in fl:
+        per_seg[r["segnum"]] = per_seg.get(r["segnum"], 0) + 1
+    assert per_seg == {1: 10, 2: 10, 3: 5}  # all 25 emitted, none dropped
 
-    def counts(parity):
-        cfg = NutchConfig(generate_max_count=-1, fetch_partitions=1,
-                          generator_parity_mode=parity)
-        fl = generate(db, cfg, 1_000, top_n=10, max_num_segments=3,
-                      num_lists=1, hostdb=hostdb)
-        return {r["segnum"]: r["count"]
-                for r in fl.groupBy("segnum").count().collect()}
 
-    windowed, parity = counts(False), counts(True)
-    assert windowed == {1: 10, 2: 10, 3: 5}  # all 25 emitted, none dropped
-    assert windowed == parity
+def test_capped_multi_segment_divergence_from_reducer_loop(spark):
+    """The documented limit of the windowed quota: with a per-host cap
+    and several segments, the reducer loop spills a capped host into the
+    next segment once the current one is full; the windowed path ranks
+    it into segment ceil(rank/maxCount) and drops it there."""
+    rows = [datum("http://h1.example.com/", score=3.0),
+            datum("http://h2.example.com/", score=1.0)]
+    cfg = NutchConfig(generate_max_count=2)
+    out = generate(db(spark, rows), cfg, NOW, top_n=1, max_num_segments=2,
+                   num_lists=1).collect()
+    eligible = select_eligible(db(spark, rows), cfg, NOW).collect()
+    assert reducer_replay(eligible, cfg, 1, 2) == {
+        "http://h1.example.com/": 1, "http://h2.example.com/": 2}
+    assert {r["url"]: r["segnum"] for r in out} == {"http://h1.example.com/": 1}
+
+
+@settings(max_examples=30, deadline=None)
+@given(
+    picks=st.lists(st.tuples(st.integers(0, 4), st.integers(0, 12)),
+                   min_size=1, max_size=30),
+    max_count=st.sampled_from([-1, 1, 2, 3]),
+    caps=st.none() | st.dictionaries(st.integers(0, 4), st.integers(1, 3), max_size=5),
+    top_n=st.integers(1, 12),
+    max_num_segments=st.integers(1, 3),
+)
+def test_windowed_quota_matches_reducer_oracle(spark, picks, max_count, caps, top_n,
+                                               max_num_segments):
+    """Random frontiers (<=30 rows, <=5 hosts, dyadic scores): the
+    windowed quota equals the reducer loop whenever there is one segment
+    or no row is capped; otherwise it still keeps every segment within
+    topN and every host within its cap."""
+    rows = [datum(f"http://h{h}.example.com/p{i}", score=q / 4.0)
+            for i, (h, q) in enumerate(picks)]
+    cfg = NutchConfig(generate_max_count=max_count)
+    hostdb = None
+    host_caps = {}
+    if caps is not None:
+        host_caps = {f"h{h}.example.com": c for h, c in caps.items()}
+        hostdb = spark.createDataFrame(
+            [(h, c, None) for h, c in host_caps.items()], HOSTDB_SCHEMA)
+    out = generate(db(spark, rows), cfg, NOW, top_n=top_n,
+                   max_num_segments=max_num_segments, num_lists=1,
+                   hostdb=hostdb).collect()
+    got = {r["url"]: r["segnum"] for r in out}
+    eligible = [{"url": r[0], "sort": r[5]} for r in rows]
+    cap_of = {get_host(r["url"]): host_caps.get(get_host(r["url"]), max_count)
+              for r in eligible}
+    if max_num_segments == 1 or all(c <= 0 for c in cap_of.values()):
+        assert got == reducer_replay(eligible, cfg, top_n, max_num_segments, host_caps)
+        return
+    per_seg, per_host_seg = {}, {}
+    for url, seg in got.items():
+        assert 1 <= seg <= max_num_segments
+        per_seg[seg] = per_seg.get(seg, 0) + 1
+        key = (get_host(url), seg)
+        per_host_seg[key] = per_host_seg.get(key, 0) + 1
+    assert all(n <= top_n for n in per_seg.values())
+    assert all(n <= cap_of[h] for (h, _), n in per_host_seg.items() if cap_of[h] > 0)

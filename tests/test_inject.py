@@ -83,7 +83,7 @@ def test_inject_overwrite(spark):
     url = "http://ow.example.com/"
     db = _db(spark, [olddatum(url)])
     seeds = parse_seeds(spark, seeds_df(spark, [f"{url}\tnutch.score=9.0"]), CFG, NOW)
-    row = inject(db, seeds, CFG, overwrite=True).collect()[0]
+    row = inject(db, seeds, CFG.with_(db_injector_overwrite=True)).collect()[0]
     assert row["status"] == S.STATUS_DB_UNFETCHED
     assert row["score"] == pytest.approx(9.0)
 
@@ -95,7 +95,7 @@ def test_inject_update_merges_meta_and_custom_values(spark):
     seeds = parse_seeds(
         spark, seeds_df(spark, [f"{url}\tnutch.score=9.0\tboth=new\tk2=v2"]), CFG, NOW
     )
-    row = inject(db, seeds, CFG, update=True).collect()[0]
+    row = inject(db, seeds, CFG.with_(db_injector_update=True)).collect()[0]
     assert row["status"] == S.STATUS_DB_FETCHED  # status untouched by update
     assert row["score"] == pytest.approx(9.0)
     assert row["fetch_interval"] == 999  # injected interval was default -> old kept
@@ -106,7 +106,7 @@ def test_inject_update_default_score_keeps_old(spark):
     url = "http://up2.example.com/"
     db = _db(spark, [olddatum(url)])
     seeds = parse_seeds(spark, seeds_df(spark, [url]), CFG, NOW)
-    row = inject(db, seeds, CFG, update=True).collect()[0]
+    row = inject(db, seeds, CFG.with_(db_injector_update=True)).collect()[0]
     assert row["score"] == pytest.approx(5.0)
 
 

@@ -250,6 +250,52 @@ def test_simhash32_bucket_cap(spark, caplog):
     )
 
 
+def test_unexecuted_cap_observations_share_one_thread(spark, caplog):
+    """Observing capped plans that never run must not park one thread
+    per plan: 50 unexecuted observations, made from 10 threads at once,
+    leave at most one cap-drops thread alive, and running the plans
+    later logs every drop exactly once."""
+    import functools
+    import logging
+    import sys
+    import threading
+
+    from pyspark.sql import DataFrame
+
+    from nutch_spark.ml.capobs import flush_cap_drop_logs, observe_cap_drops
+
+    log = logging.getLogger("nutch_spark.ml.dedup")
+    ranked = spark.range(10).withColumn("_rn", F.col("id") + 1)
+    observed = []
+
+    def observe_five():
+        for _ in range(5):
+            observed.append(
+                observe_cap_drops(ranked, "_rn", 5, "unexecuted_probe", log, "probe"))
+
+    interval = sys.getswitchinterval()
+    sys.setswitchinterval(1e-6)
+    try:
+        workers = [threading.Thread(target=observe_five) for _ in range(10)]
+        for w in workers:
+            w.start()
+        for w in workers:
+            w.join(timeout=60)
+    finally:
+        sys.setswitchinterval(interval)
+    assert not any(w.is_alive() for w in workers)
+    assert len(observed) == 50
+    alive = [t for t in threading.enumerate() if t.name.startswith("cap-drops-")]
+    assert len(alive) <= 1
+    with caplog.at_level(logging.WARNING, logger="nutch_spark.ml.dedup"):
+        assert functools.reduce(DataFrame.unionByName, observed).count() == 500
+        flush_cap_drop_logs()
+    assert sum(
+        "unexecuted_probe: bucket_cap=5 dropped 5" in rec.getMessage()
+        for rec in caplog.records
+    ) == 50
+
+
 def test_shingles(spark):
     d = docs(spark, ["a b c d", "a b"])
     rows = d.select("doc_id", word_shingles(F.col("text"), 3).alias("sh")).collect()

@@ -137,6 +137,25 @@ def test_ignore_external_links_policy(spark):
     assert [r["to_url"] for r in out["outlinks"].collect()] == ["http://src.example.com/other"]
 
 
+def test_ignore_external_links_exemption_keeps_accepted_targets(spark):
+    """urlfilter-ignoreexempt (ExemptionUrlFilter.java:38-44): with
+    db.ignore.external.links on, an external outlink the exemption chain
+    accepts is kept and one it rejects is dropped."""
+    spans = [
+        span("link", "in", "http://src.example.com/other", 0),
+        span("link", "exempt", "http://cdn.example.org/a.png", 1),
+        span("link", "out", "http://ext.example.com/x", 2),
+    ]
+    c = content(spark, [("http://src.example.com/", 1.0, NOW, None, spans, True)])
+    cfg = CFG.with_(db_ignore_external_links=True)
+    out = parse(c, cfg, normalize_outlinks=False,
+                exemption_rules=[r"+^http://cdn\.example\.org/", "-."])
+    assert sorted(r["to_url"] for r in out["outlinks"].collect()) == [
+        "http://cdn.example.org/a.png",
+        "http://src.example.com/other",
+    ]
+
+
 def test_regex_parse_filter_sources(spark):
     from nutch_spark.operators.parse import regex_parse_filter
 

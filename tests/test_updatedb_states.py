@@ -200,12 +200,12 @@ def test_opic_score_update_and_discovery(spark):
 
 
 def test_additions_not_allowed_drops_new(spark):
-    cfg = NutchConfig()
+    cfg = NutchConfig().with_(db_update_additions_allowed=False)
     sch = crawldb_schema()
     seg = spark.createDataFrame(
         [datum("http://x.example.com/", S.STATUS_LINKED, score=0.1)], sch
     )
-    assert updatedb(None, seg, cfg, NOW, additions_allowed=False).count() == 0
+    assert updatedb(None, seg, cfg, NOW).count() == 0
 
 
 def test_metadata_merge_fetch_wins_and_ngt_stripped(spark):
@@ -249,14 +249,10 @@ def test_gone_schedule_growth(spark):
     assert row2["fetch_interval"] == round(cfg.db_fetch_interval_max * 0.9)
 
 
-def test_link_shards_equivalence(spark):
-    """Two-phase sharded link top-K == plain collect+slice (skew-safety
-    pre-cap, SURVEY §4); exercised past the max_inlinks cutoff."""
-    from pyspark.sql import functions as F
-
-    from nutch_spark.config import NutchConfig
-    from nutch_spark.operators.updatedb import updatedb
-
+def test_linked_top_k_caps_at_max_inlinks(spark):
+    """The linked priority queue keeps only the ``max_inlinks`` highest
+    inlink scores (CrawlDbReducer.java:60-61,:328-342): a hot URL's
+    OPIC sum counts its top-K inlinks, past the cutoff."""
     cfg = NutchConfig()
     cols = (
         "url string, status int, fetch_time long, retries int, fetch_interval int,"
@@ -269,15 +265,8 @@ def test_link_shards_equivalence(spark):
         for i in range(40)
     ] + [("cold", 0x43, 1000, 0, 3600, 0.25, None, 0, {}, None, None)]
     seg = spark.createDataFrame(links, cols)
-    plain = updatedb(None, seg, cfg, 5000, max_inlinks=5)
-    sharded = updatedb(None, seg, cfg, 5000, max_inlinks=5, link_shards=8)
-
-    def snap(df):
-        return sorted(
-            (r["url"], r["status"], r["fetch_time"], r["score"]) for r in df.collect()
-        )
-
-    assert snap(plain) == snap(sharded)
-    hot = {r["url"]: r["score"] for r in sharded.collect()}["hot"]
+    scores = {r["url"]: r["score"] for r in
+              updatedb(None, seg, cfg, 5000, max_inlinks=5).collect()}
     # top-5 scores 39..35 quarters = (39+38+37+36+35)/4
-    assert hot == (39 + 38 + 37 + 36 + 35) / 4.0
+    assert scores["hot"] == (39 + 38 + 37 + 36 + 35) / 4.0
+    assert scores["cold"] == 0.25

@@ -667,10 +667,10 @@ def fetch_follow_outlinks(
         redir_waves.append(redirs)
         if d == depth:
             if return_parsed:
-                # the final wave is parsed only here, but under
-                # write_segments the caller consumes three of its
-                # products (crawl_parse, parse_text, parse_data) — the
-                # persist keeps extraction from running per consumer
+                # the final wave is parsed only here, but the caller
+                # commits several of its products (crawl_parse,
+                # parse_text, parse_data, parse_meta) — the persist
+                # keeps extraction from running per consumer
                 parsed_waves.append(
                     parse(fetched_content(crawl_fetch, docs), cfg,
                           url_filter_rules=url_filter_rules,

@@ -440,8 +440,10 @@ def updatedb_incremental(
     (BENCH/MEASUREMENT_LOG.md round-3i: fair per-variant probe at 31%
     touched, local[4] split 62.8s vs full 90.8s — both dispatches are
     measured, the constant chooses the cluster-honest one). The two
-    counts spent here are column-pruned scans, negligible next to either
-    merge plan.
+    counts spent here run over committed parquet in the crawl loop (the
+    CrawlDb snapshot and the segment tables committed before the merge),
+    so they are column-free parquet scans and re-execute no cycle
+    lineage.
 
     Result is row-identical to ``updatedb(crawldb, segment_rows, ...)``
     on both paths.

@@ -2,15 +2,24 @@
 
     inject(crawldb, seeds)                     # once
     for cycle in 1..N:
-        generate -> fetch -> parse -> updatedb
+        generate -> fetch -> parse -> commit segment -> updatedb
         [invertlinks, dedup, hostdb updates via operators.*]
 
 Where the reference hands state across process boundaries through HDFS
-directories, this driver hands it through catalog snapshots: every
-cycle commits crawldb (+ segment tables) with lineage
-{cycle_id, stage, input snapshot ids} and a metrics map (status
-counts, fetched pages, virtual makespan) — the north rule's
-per-partition lineage + fetch/parse metrics. Resume-from-checkpoint =
+directories, this loop hands it through catalog snapshots. A cycle
+first commits its segment tables (``segment_NNNN_`` + ``crawl_fetch``,
+``crawl_parse``, ``crawl_redirect``, ``parse_text``, ``parse_data``,
+``parse_meta``), then merges the CrawlDb from the three datum tables
+read back at the snapshot ids those commits returned — as the
+reference's ``CrawlDb`` job merges the committed ``crawl_fetch`` /
+``crawl_parse`` parts — and commits it last. So each cycle product
+executes once, in its own commit, and the merge plan's segment side is
+parquet scans. The CrawlDb commit's lineage {cycle_id, stage, parent
+snapshot, ``segment_snapshots``} names those segment snapshots, so
+``updatedb`` over the parent snapshot and the named tables reproduces
+the committed CrawlDb; its metrics map carries the fetcher counters
+(observed on the ``crawl_fetch`` write) and the status counts (observed
+on the CrawlDb write). Resume-from-checkpoint =
 ``SnapshotCatalog.rollback`` + rerun; determinism comes from injected
 clocks and seeds (no wall-clock in logic paths, SURVEY §2.8).
 
@@ -22,6 +31,7 @@ from __future__ import annotations
 
 import time
 from dataclasses import dataclass, field
+from functools import reduce
 from typing import Any
 
 from pyspark.sql import DataFrame, SparkSession
@@ -44,6 +54,20 @@ CRAWLDB = "crawldb"
 _DB_STATUS_CODES = tuple(range(0x01, 0x09))
 # fetch statuses (STATUS_FETCH_*) for the fetcher counter table
 _FETCH_STATUS_CODES = tuple(range(0x21, 0x27))
+_DATUM_COLS = (
+    "url", "status", "fetch_time", "retries", "fetch_interval", "score",
+    "signature", "modified_time", "metadata", "gen_time", "repr_url",
+)
+# the segment tables updatedb merges into the CrawlDb
+_MERGE_TABLES = ("crawl_fetch", "crawl_parse", "crawl_redirect")
+
+
+def _status_sums(codes) -> list:
+    return [F.sum((F.col("status") == c).cast("long")).alias(f"s{c}") for c in codes]
+
+
+def _named_counts(row, codes) -> dict[str, int]:
+    return {STATUS_NAMES.get(c, str(c)): int(row[f"s{c}"]) for c in codes if row[f"s{c}"]}
 
 
 @dataclass
@@ -70,8 +94,13 @@ class Crawler:
         outcomes: DataFrame,
         *,
         url_filter_rules: list[str] | None = None,
-        write_segments: bool = False,
+        write_segments: bool = True,
     ):
+        if not write_segments:
+            raise ValueError(
+                "write_segments=False is not supported: updatedb merges the "
+                "CrawlDb from the segment tables each cycle commits first"
+            )
         self.spark = spark
         self.catalog = catalog
         self.cfg = cfg
@@ -79,7 +108,6 @@ class Crawler:
         self.robots = robots
         self.outcomes = outcomes
         self.url_filter_rules = url_filter_rules
-        self.write_segments = write_segments
 
     # -- stages ------------------------------------------------------------
     def inject(self, seeds, now_ms: int) -> int:
@@ -144,10 +172,6 @@ class Crawler:
 
             materialize_parse_caches(wave_handles)
 
-        datum_cols = [
-            "url", "status", "fetch_time", "retries", "fetch_interval", "score",
-            "signature", "modified_time", "metadata", "gen_time", "repr_url",
-        ]
         gates = bool(self.cfg.urlmeta_tags) or self.cfg.scoring_depth_enabled
         # meta-refresh datums bypass the scoring filters in the reference
         # (appended to crawlOut before the outlink-targets loop,
@@ -176,11 +200,58 @@ class Crawler:
             crawl_parse = crawl_parse.unionByName(
                 parsed["refresh_links"].select(*crawl_parse.columns)
             )
-        segment_rows = (
-            crawl_fetch.select(*datum_cols)
-            .unionByName(crawl_parse.select(*datum_cols))
-            .unionByName(redirect_links.select(*datum_cols))
-        )
+
+        # commit the segment FIRST: each product executes once, in its
+        # own write, and the merge below reads only committed parquet.
+        # The fetcher counters ride the crawl_fetch write via
+        # DataFrame.observe (SURVEY §4's fetcher counter table)
+        obs_fetch = Observation(f"cycle_{cycle_id}_fetch")
+        seg = f"segment_{cycle_id:04d}"
+        products = {
+            "crawl_fetch": crawl_fetch.observe(
+                obs_fetch,
+                F.count(F.lit(1)).alias("n"),
+                F.max("fetch_time").alias("mk"),
+                *_status_sums(_FETCH_STATUS_CODES),
+            ),
+            # the urlmeta/depth-PATCHED crawl_parse — the rows updatedb
+            # consumes — not parsed['crawl_parse']
+            "crawl_parse": crawl_parse,
+            # redirect-target datums: the reference writes them into
+            # crawl_fetch, but here every crawl_fetch row is a fetched
+            # fetchlist entry, so they get a table of their own
+            "crawl_redirect": redirect_links.select(*_DATUM_COLS),
+            "parse_text": parsed["parse_text"],
+            "parse_data": parsed["parse_data"],
+            # per-doc meta directives (robots/noindex/base/refresh): the
+            # reference persists these inside ParseData's parse metadata
+            # (ParseOutputFormat.java:364-366) — IndexerMapReduce reads
+            # them for indexer.delete.robots.noindex, so an index job
+            # replayed from committed segments needs this table
+            "parse_meta": parsed["parse_meta"],
+        }
+        segment_snapshots = {}
+        for name, df in products.items():
+            table = f"{seg}_{name}"
+            segment_snapshots[table] = self.catalog.commit(
+                df, table, now_ms=now_ms, lineage={"cycle_id": cycle_id}
+            ).snapshot_id
+        _fetch_row = obs_fetch.get
+        fetched = int(_fetch_row["n"])
+        makespan = _fetch_row["mk"] or now_ms
+        fetch_status_counts = _named_counts(_fetch_row, _FETCH_STATUS_CODES)
+        # the merge reads the committed segment, not these caches (nor
+        # the per-wave follow intermediates persisted inside
+        # fetch_follow_outlinks); fl stays for mark_generated
+        crawl_fetch.unpersist()
+        for h in wave_handles:
+            h.unpersist()
+        segment_rows = reduce(DataFrame.unionByName, [
+            self.catalog.read(
+                self.spark, f"{seg}_{name}", segment_snapshots[f"{seg}_{name}"]
+            ).select(*_DATUM_COLS)
+            for name in _MERGE_TABLES
+        ])
 
         base_db = mark_generated(crawldb, fl) if self.cfg.generate_update_crawldb else crawldb
         # fingerprint URL-seen split: untouched CrawlDb rows bypass the
@@ -200,38 +271,13 @@ class Crawler:
                 newdb, base_db, segment_rows, list(self.cfg.urlmeta_tags)
             )
 
-        # metrics: one aggregation pass over the persisted segment
-        # (count + max + per-status fetch counts in a single job, not
-        # three scans — SURVEY §4's fetcher counter table)
-        _fetch_row = crawl_fetch.agg(
-            F.count("*").alias("n"),
-            F.max("fetch_time").alias("mk"),
-            *[
-                F.sum((F.col("status") == code).cast("long")).alias(f"s{code}")
-                for code in _FETCH_STATUS_CODES
-            ],
-        ).collect()[0]
-        fetched, makespan = _fetch_row["n"], _fetch_row["mk"]
-        makespan = makespan or now_ms
-        fetch_status_counts = {
-            STATUS_NAMES.get(code, str(code)): int(_fetch_row[f"s{code}"])
-            for code in _FETCH_STATUS_CODES
-            if _fetch_row[f"s{code}"]
-        }
-
-        # commit FIRST: the parquet write is the only execution of the
-        # merge lineage. The crawldb status counts ride THAT write via
-        # DataFrame.observe (CollectMetrics on the written plan) — no
-        # post-commit re-scan of the committed snapshot, one fewer
-        # Spark job per cycle (job-count probe in test_crawl_loop)
+        # the parquet write is the only execution of the merge lineage;
+        # the CrawlDb status counts ride it via DataFrame.observe — no
+        # post-commit re-scan of the committed snapshot (read-contract
+        # probe in test_crawl_loop)
         obs_db = Observation(f"cycle_{cycle_id}_db_status")
         observed_db = newdb.observe(
-            obs_db,
-            F.count(F.lit(1)).alias("total"),
-            *[
-                F.sum((F.col("status") == code).cast("long")).alias(f"s{code}")
-                for code in _DB_STATUS_CODES
-            ],
+            obs_db, F.count(F.lit(1)).alias("total"), *_status_sums(_DB_STATUS_CODES)
         )
         snap = self.catalog.commit(
             observed_db, CRAWLDB, now_ms=now_ms,
@@ -239,6 +285,7 @@ class Crawler:
                 "stage": "updatedb",
                 "cycle_id": cycle_id,
                 "crawldb_parent_snapshot": parent,
+                "segment_snapshots": segment_snapshots,
             },
             metrics={
                 "generated": generated,
@@ -251,44 +298,12 @@ class Crawler:
         # the write completed, so the observed metrics are available
         # immediately (get would otherwise block)
         _db_row = obs_db.get
-        status_counts = {
-            STATUS_NAMES.get(code, str(code)): int(_db_row[f"s{code}"])
-            for code in _DB_STATUS_CODES
-            if _db_row[f"s{code}"]
-        }
+        status_counts = _named_counts(_db_row, _DB_STATUS_CODES)
         db_size = int(_db_row["total"])
         self.catalog.update_snapshot_metrics(
             CRAWLDB, snap.snapshot_id, {"db_status_counts": status_counts}
         )
-        if self.write_segments:
-            seg = f"segment_{cycle_id:04d}"
-            self.catalog.commit(crawl_fetch, f"{seg}_crawl_fetch", now_ms=now_ms,
-                                lineage={"cycle_id": cycle_id})
-            # the urlmeta/depth-PATCHED crawl_parse — the rows updatedb
-            # actually consumed — not parsed['crawl_parse']: replaying
-            # updatedb from the committed segment must reproduce the
-            # committed crawldb (resume/lineage contract)
-            self.catalog.commit(crawl_parse, f"{seg}_crawl_parse", now_ms=now_ms,
-                                lineage={"cycle_id": cycle_id})
-            self.catalog.commit(parsed["parse_text"], f"{seg}_parse_text", now_ms=now_ms,
-                                lineage={"cycle_id": cycle_id})
-            self.catalog.commit(parsed["parse_data"], f"{seg}_parse_data", now_ms=now_ms,
-                                lineage={"cycle_id": cycle_id})
-            # per-doc meta directives (robots/noindex/base/refresh): the
-            # reference persists these inside ParseData's parse metadata
-            # (ParseOutputFormat.java:364-366) — IndexerMapReduce reads
-            # them for indexer.delete.robots.noindex, so an index job
-            # replayed from committed segments needs this table
-            self.catalog.commit(parsed["parse_meta"], f"{seg}_parse_meta", now_ms=now_ms,
-                                lineage={"cycle_id": cycle_id})
-
         fl.unpersist()
-        crawl_fetch.unpersist()
-        for h in wave_handles:
-            # per-wave follow intermediates (persisted inside
-            # fetch_follow_outlinks) — released here, after the commit
-            # materialized everything derived from them
-            h.unpersist()
         return CycleResult(
             cycle_id=cycle_id,
             generated=generated,
@@ -344,7 +359,6 @@ def main(argv: list[str] | None = None) -> int:
     p.add_argument("--cycle-ms", type=int, default=3_600_000)
     p.add_argument("--num-reducers", type=int, default=0,
                    help="generate quota reducers (0 = one, exact-global)")
-    p.add_argument("--write-segments", action="store_true")
     p.add_argument("--resume", action="store_true",
                    help="continue from the warehouse's current crawldb snapshot")
     args = p.parse_args(argv)
@@ -355,10 +369,7 @@ def main(argv: list[str] | None = None) -> int:
     )
     web = synth_web(spark, n_docs=args.n_docs, n_hosts=args.n_hosts, seed=args.seed)
     catalog = SnapshotCatalog(args.warehouse)
-    crawler = Crawler(
-        spark, catalog, cfg, web["docs"], web["robots"], web["outcomes"],
-        write_segments=args.write_segments,
-    )
+    crawler = Crawler(spark, catalog, cfg, web["docs"], web["robots"], web["outcomes"])
     if args.resume and catalog.exists(CRAWLDB):
         done = sum(
             1 for s in catalog.snapshots(CRAWLDB)

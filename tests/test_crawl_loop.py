@@ -4,11 +4,12 @@ politeness accounting, and deterministic resume-from-snapshot."""
 
 import pytest
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from nutch_spark import schema as S
 from nutch_spark.catalog import SnapshotCatalog
 from nutch_spark.config import NutchConfig
-from nutch_spark.data.frontier import synth_web
+from nutch_spark.data.frontier import synth_seeds, synth_web
 from nutch_spark.pipeline.crawl_loop import Crawler
 from nutch_spark.urls.filters import CRAWL_RULES
 
@@ -62,10 +63,12 @@ def test_end_to_end_crawl(spark, web, tmp_path):
 
 
 def test_cycle_metrics_ride_the_commit_write(spark, web, tmp_path):
-    """Round-5 contract (SURVEY §4 counters via observe): the per-cycle
-    db status counts are CollectMetrics on the committed write — the
-    committed snapshot is never re-read inside run_cycle (the round-4
-    code re-scanned it with a groupBy/count job)."""
+    """Counters via observe (SURVEY §4): the db status counts are
+    CollectMetrics on the CrawlDb write and the fetcher counters on the
+    crawl_fetch write. The only catalog reads are the cycle's input
+    CrawlDb and the three segment tables the merge consumes, at the
+    snapshot ids this cycle committed; the committed CrawlDb is never
+    re-read inside run_cycle."""
     crawler, cat = make_crawler(spark, web, tmp_path)
     crawler.inject(web["seeds"], START)
     reads = []
@@ -80,11 +83,65 @@ def test_cycle_metrics_ride_the_commit_write(spark, web, tmp_path):
         res = crawler.run_cycle(1, START + 3_600_000, top_n=100)
     finally:
         SnapshotCatalog.read = orig_read
-    # exactly one catalog read: the cycle's input crawldb; metrics came
-    # from the observation, not a post-commit scan
-    assert reads == [("crawldb", None)]
+    seg_tables = [f"segment_0001_{t}" for t in ("crawl_fetch", "crawl_parse", "crawl_redirect")]
+    assert reads == [("crawldb", None)] + [
+        (t, cat.current_snapshot_id(t)) for t in seg_tables
+    ]
     assert res.db_size == cat.read(spark, "crawldb").count()
     assert sum(res.status_counts.values()) == res.db_size
+    metrics = cat.snapshots("crawldb")[-1].metrics
+    assert sum(metrics["fetch_status_counts"].values()) == res.fetched
+    assert res.fetched == cat.read(spark, seg_tables[0]).count()
+
+
+def test_write_segments_false_is_rejected(spark, web, tmp_path):
+    """The CrawlDb merge reads the committed segment, so a cycle cannot
+    skip writing it."""
+    with pytest.raises(ValueError, match="write_segments=False"):
+        Crawler(
+            spark, SnapshotCatalog(str(tmp_path / "catalog")), NutchConfig(),
+            web["docs"], web["robots"], web["outcomes"], write_segments=False,
+        )
+
+
+def _value_hash(df):
+    """(rows, order-independent sum of per-row xxhash64 over every
+    column); maps are hashed as their key-sorted entry arrays."""
+    cols = [
+        F.array_sort(F.map_entries(f.name)) if isinstance(f.dataType, T.MapType)
+        else F.col(f.name)
+        for f in df.schema.fields
+    ]
+    row = df.select(F.xxhash64(*cols).cast("decimal(38,0)").alias("h")).agg(
+        F.count("*").alias("n"), F.sum("h").alias("h")
+    ).collect()[0]
+    return row["n"], row["h"]
+
+
+def test_committed_segment_replays_to_the_committed_crawldb(spark, web, tmp_path):
+    """Resume/lineage contract: updatedb over the parent CrawlDb
+    snapshot and the segment tables the CrawlDb commit's lineage names
+    reproduces the committed CrawlDb, redirect-target datums included."""
+    from nutch_spark.operators.updatedb import updatedb
+
+    crawler, cat = make_crawler(spark, web, tmp_path)
+    # ten seeds per host: enough fetches that some end in redirects
+    crawler.inject(synth_seeds(web["docs"], per_host=10), START)
+    now_ms = START + 3_600_000
+    crawler.run_cycle(1, now_ms, top_n=100)
+    lineage = cat.snapshots("crawldb")[-1].lineage
+    seg = lineage["segment_snapshots"]
+    datum_cols = S.crawldb_schema().fieldNames()
+    parts = [
+        cat.read(spark, f"segment_0001_{t}", seg[f"segment_0001_{t}"]).select(*datum_cols)
+        for t in ("crawl_fetch", "crawl_parse", "crawl_redirect")
+    ]
+    assert parts[2].count() > 0  # the crawl followed redirects
+    segment_rows = parts[0].unionByName(parts[1]).unionByName(parts[2])
+    parent = cat.read(spark, "crawldb", lineage["crawldb_parent_snapshot"])
+    replay = updatedb(parent, segment_rows, crawler.cfg, now_ms)
+    committed = cat.read(spark, "crawldb")
+    assert _value_hash(replay.select(*committed.columns)) == _value_hash(committed)
 
 
 def test_resume_from_snapshot_is_deterministic(spark, web, tmp_path):

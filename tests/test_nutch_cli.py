@@ -226,6 +226,32 @@ def test_readseg_catalog_warehouse_and_multiseg(spark, tmp_path, capsys):
     assert nutch_cli.main(["snapshots", wh, "nosuch"]) == 2
 
 
+def test_readseg_dumps_redirect_datums(spark, tmp_path, capsys):
+    """The crawl loop commits redirect-target datums as the segment's
+    crawl_redirect table; readseg shows them as CrawlDatum records, as
+    the reference's dump shows them under crawl_fetch."""
+    from nutch_spark.catalog import SnapshotCatalog
+
+    wh = str(tmp_path / "wh")
+    cat = SnapshotCatalog(wh)
+    schema = "url string, status int, fetch_time long"
+    cat.commit(spark.createDataFrame([("http://a.example.com/", 35, 2_000)], schema),
+               "segment_0001_crawl_fetch", now_ms=1)
+    cat.commit(spark.createDataFrame([("http://b.example.com/", 67, 2_000)], schema),
+               "segment_0001_crawl_redirect", now_ms=1)
+    seg = os.path.join(wh, "segment_0001")
+
+    assert nutch_cli.main(["readseg", seg, "-get", "http://b.example.com/"]) == 0
+    out = capsys.readouterr().out
+    assert "crawl_redirect CrawlDatum::" in out and '"status":67' in out
+
+    dump = str(tmp_path / "redump")
+    assert nutch_cli.main(["readseg", seg, "-dump", dump]) == 0
+    assert "dumped 2 records" in capsys.readouterr().out
+    text = "\n".join(r["value"] for r in spark.read.text(dump).collect())
+    assert "URL:: http://b.example.com/\ncrawl_redirect CrawlDatum::" in text
+
+
 def _stage_crawldb(spark, path, rows):
     """rows: (url, status, score) triples -> full datum-schema parquet."""
     df = spark.createDataFrame(

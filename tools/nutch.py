@@ -348,9 +348,10 @@ def cmd_indexchecker(args) -> int:
 # SegmentReader parts (segment/SegmentReader.java:66-74) — ours are the
 # parquet tables crawl_loop commits per cycle; crawl_generate/content
 # only exist when a caller staged them (bench does), and a missing part
-# prints '?' exactly like the reference's per-part flags
+# prints '?' exactly like the reference's per-part flags. crawl_redirect
+# holds the redirect-target datums the reference keeps in crawl_fetch
 _SEG_PARTS = (
-    "crawl_generate", "crawl_fetch", "content",
+    "crawl_generate", "crawl_fetch", "crawl_redirect", "content",
     "crawl_parse", "parse_data", "parse_text", "parse_meta",
 )
 
@@ -424,6 +425,7 @@ def cmd_readseg(args) -> int:
         label = {
             "crawl_generate": "CrawlDatum::",
             "crawl_fetch": "CrawlDatum::",
+            "crawl_redirect": "CrawlDatum::",
             "crawl_parse": "CrawlDatum::",
             "content": "Content::",
             "parse_data": "ParseData::",

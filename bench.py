@@ -42,16 +42,17 @@ def _noop(df) -> int:
 
 
 def run_bench(master: str | None = None) -> dict:
+    import shutil
+    import tempfile
+
     from pyspark.sql import functions as F
 
+    from nutch_spark.catalog import SnapshotCatalog
     from nutch_spark.config import NutchConfig
     from nutch_spark.data.frontier import synth_web
-    from nutch_spark.operators.fetchsim import fetch, fetched_content
-    from nutch_spark.operators.generate import generate
     from nutch_spark.operators.inject import inject_full
-    from nutch_spark.operators.parse import parse
-    from nutch_spark.operators.updatedb import updatedb_incremental
-    from nutch_spark.session import get_spark
+    from nutch_spark.pipeline.crawl_loop import Crawler
+    from nutch_spark.session import _parse_local_cores, get_spark
 
     sf = _sf_of(SF_DIR)
     n_docs = int(os.environ.get("NUTCH_BENCH_DOCS", max(10_000, int(1_000_000 * sf))))
@@ -61,8 +62,6 @@ def run_bench(master: str | None = None) -> dict:
     master = master or f"local[{CPUS}]"
     # session's parser handles 'local[*]' / 'local[N,F]' — a naive
     # int(master[6:-1]) crashes on the '*' default tools/nutch.py uses
-    from nutch_spark.session import _parse_local_cores
-
     cores = _parse_local_cores(master) or CPUS
     # strong-scaling runs pin the partition count so every parallelism
     # level executes the IDENTICAL plan over identical file layouts and
@@ -82,132 +81,60 @@ def run_bench(master: str | None = None) -> dict:
 
     timings: dict[str, float] = {}
     t_all = time.time()
-
-    import shutil
-    import tempfile
-
     tmp = tempfile.mkdtemp(prefix="nutch_bench_")
-
-    def _swap(df, name: str):
-        path = f"{tmp}/{name}"
-        df.write.mode("overwrite").parquet(path)
-        return spark.read.parquet(path)
 
     web = synth_web(spark, n_docs=n_docs, n_hosts=n_hosts)
     # materialize the corpus to parquet outside the timed region (the
     # "web"); large frontiers must not live in executor cache
-    docs = _swap(web["docs"], "docs")
+    web["docs"].write.parquet(f"{tmp}/docs")
+    docs = spark.read.parquet(f"{tmp}/docs")
+    # the production crawl loop: every cycle commits its segment and
+    # CrawlDb snapshots to this catalog, as a real crawl does
+    crawler = Crawler(
+        spark, SnapshotCatalog(f"{tmp}/wh"), cfg, docs, web["robots"], web["outcomes"]
+    )
+    now_ms = 1_704_000_000_000
 
     # ---- inject: all frontier urls as seeds -------------------------------
     seeds = docs.select(F.col("doc_id").alias("value"))
     t0 = time.time()
-    db_injected = inject_full(spark, None, seeds, cfg, now_ms=1_704_000_000_000)
-    db_injected = db_injected.persist()
-    n_urls = db_injected.count()
+    n_urls = crawler.inject(seeds, now_ms)
     timings["inject"] = time.time() - t0
-
-    # ---- two full cycles; cycle 2 (warm JIT/codegen) is the headline ------
-    datum_cols = [
-        "url", "status", "fetch_time", "retries", "fetch_interval", "score",
-        "signature", "modified_time", "metadata", "gen_time", "repr_url",
-    ]
-
-    # state hand-off between stages goes through parquet tables, like the
-    # real loop's catalog snapshots — honest IO, no cache/lineage buildup
-    def run_cycle(tag: str, dbin, now_ms: int):
-        t0 = time.time()
-        fl = _swap(
-            generate(dbin, cfg, now_ms, top_n=top_n, num_lists=parts),
-            f"{tag}_fetchlist",
-        )
-        timings[f"{tag}_generate"] = time.time() - t0
-
-        t0 = time.time()
-        crawl_fetch, redirect_links = fetch(
-            fl, web["robots"], web["outcomes"], cfg, now_ms
-        )
-        crawl_fetch = _swap(crawl_fetch, f"{tag}_crawl_fetch")
-        redirect_links = _swap(redirect_links, f"{tag}_redirects")
-        nf = crawl_fetch.count()
-        timings[f"{tag}_fetch"] = time.time() - t0
-
-        t0 = time.time()
-        content = fetched_content(crawl_fetch, docs)
-        handles: list = []
-        # A/B knob: NUTCH_BENCH_NO_PERSIST=1 recomputes the annotated
-        # content frame per product branch instead of caching it
-        no_persist = os.environ.get("NUTCH_BENCH_NO_PERSIST") == "1"
-        parsed = parse(content, cfg, persist_handles=None if no_persist else handles)
-        from nutch_spark.operators.parse import materialize_parse_caches
-
-        materialize_parse_caches(handles)
-        seg = _swap(
-            crawl_fetch.select(*datum_cols)
-            .unionByName(parsed["crawl_parse"].select(*datum_cols))
-            .unionByName(redirect_links.select(*datum_cols)),
-            f"{tag}_segment",
-        )
-        for h in handles:
-            h.unpersist()
-        timings[f"{tag}_parse"] = time.time() - t0
-
-        t0 = time.time()
-        # the pipeline's own scale path (crawl_loop.py): fingerprint
-        # URL-seen split keeps untouched frontier rows out of the merge
-        # shuffle; result-identical to the full merge (oracle-checked)
-        dbout = _swap(
-            updatedb_incremental(dbin, seg, cfg, now_ms + 3_600_000), f"{tag}_crawldb"
-        )
-        timings[f"{tag}_updatedb"] = time.time() - t0
-        # generated = fetchlist size (metadata-only count of the written
-        # parquet) — NOT the fetched count: robots/exception-gated rows
-        # are generated but never fetched
-        return dbout, nf, fl.count()
 
     # 5 cycles = 4 warm samples. The box shows 5-17% hypervisor steal
     # whenever a job demands all 32 threads (BENCH/MEASUREMENT_LOG.md,
-    # r2e/r3a): a single steal burst inflates one stage's single timing
-    # sample by up to 5x, and the headline sums four such samples. The
-    # headline is therefore the best WARM cycle (min-of-warm-runs —
-    # standard single-box noise reduction; the frontier is >> topN so
-    # successive cycles are comparable work), and more warm cycles make
-    # that min an order statistic over 4 samples instead of 1-2.
+    # r2e/r3a): a single steal burst inflates one cycle's timing sample
+    # by up to 5x. The headline is therefore the best WARM cycle
+    # (min-of-warm-runs — standard single-box noise reduction; the
+    # frontier is >> topN so successive cycles are comparable work), and
+    # more warm cycles make that min an order statistic over 4 samples
+    # instead of 1-2.
     # Scaling mode runs ONE cycle: cycle 1 is the only cycle whose input
-    # (crawldb_0, staged with a pinned partition count) is bit-identical
-    # across parallelism levels — cycle N>1 reads files the phase itself
-    # wrote, making the work a function of the core count under test.
+    # (the injected CrawlDb, written with a pinned partition count) is
+    # bit-identical across parallelism levels — cycle N>1 reads files
+    # the phase itself wrote, making the work a function of the core
+    # count under test.
     n_cycles = int(os.environ.get("NUTCH_BENCH_CYCLES", "5"))
-    db = _swap(db_injected, "crawldb_0")
-    # release the cached inject result: a 20M-row MEMORY_AND_DISK block
-    # held across cycles starves execution memory at high parallelism
-    # (observed: cycle-2 stages slower than cycle-1 at local[8]+)
-    db_injected.unpersist()
-    cycle_stats: list[tuple[str, int, int]] = []  # (tag, fetched, generated)
-    dbin = db
+    cycles = []
     for ci in range(1, n_cycles + 1):
-        tag = f"c{ci}"
-        dbin, nf, ng = run_cycle(tag, dbin, 1_704_000_000_000 + (ci - 1) * 7_200_000)
-        cycle_stats.append((tag, nf, ng))
+        res = crawler.run_cycle(ci, now_ms + (ci - 1) * 7_200_000, top_n=top_n)
+        timings[f"c{ci}"] = res.wall_seconds
+        cycles.append(res)
 
     if not os.environ.get("NUTCH_BENCH_SKIP_EXTRAS"):
         # warm inject: the first inject above also pays session/codegen
         # warm-up (it is the first query of the run); this one is the
         # true steady-state cost of the operator
         t0 = time.time()
-        _noop(inject_full(spark, None, seeds, cfg, now_ms=1_704_000_000_000))
+        _noop(inject_full(spark, None, seeds, cfg, now_ms=now_ms))
         timings["inject_warm"] = time.time() - t0
     shutil.rmtree(tmp, ignore_errors=True)
 
-    stage_keys = ("generate", "fetch", "parse", "updatedb")
     # headline = best warm cycle (cycles 2..n); cycle 1 pays session /
     # codegen warm-up and is reported but never the headline
-    warm = cycle_stats[1:] or cycle_stats
-    cycle_sec, n_for_rate, n_gen = min(
-        (sum(timings[f"{tag}_{k}"] for k in stage_keys), nf, ng)
-        for tag, nf, ng in warm
-    )
-    n_fetched = n_for_rate
-    urls_per_sec = n_for_rate / cycle_sec if cycle_sec else 0.0
+    best = min(cycles[1:] or cycles, key=lambda r: r.wall_seconds)
+    cycle_sec = best.wall_seconds
+    urls_per_sec = best.fetched / cycle_sec if cycle_sec else 0.0
 
     # ---- training-data operators over the sf-dir tables -------------------
     if not os.environ.get("NUTCH_BENCH_SKIP_EXTRAS"):
@@ -228,8 +155,10 @@ def run_bench(master: str | None = None) -> dict:
         "sf": sf,
         "total_sec": round(total, 3),
         "frontier_urls": n_urls,
-        "generated": n_gen,
-        "fetched": n_fetched,
+        # generated = fetchlist size, NOT the fetched count:
+        # robots/exception-gated rows are generated but never fetched
+        "generated": best.generated,
+        "fetched": best.fetched,
         "fetched_urls_per_sec": round(urls_per_sec, 1),
         "master": master,
     }
@@ -271,8 +200,8 @@ def run_scaling() -> None:
             env.setdefault("NUTCH_BENCH_DOCS", "20000000")
             env.setdefault("NUTCH_BENCH_TOPN", "2000000")
             env.setdefault("NUTCH_BENCH_SHUFFLE", "128")
-            # cycle 1 only: the sole cycle whose input (crawldb_0,
-            # deterministically staged) is identical across phases
+            # cycle 1 only: the sole cycle whose input (the injected
+            # CrawlDb) is identical across phases
             env.setdefault("NUTCH_BENCH_CYCLES", "1")
             env.setdefault("NUTCH_BENCH_SKIP_EXTRAS", "1")
             # same heap at every parallelism level (the box has 128 GiB;
@@ -344,7 +273,7 @@ def run_scaling() -> None:
     # raw auto-report; BENCH/BASELINE.md is the hand-consolidated story
     # across all measured pairs/conditions and must not be clobbered
     with open("BENCH/scaling_autoreport.md", "w") as f:
-        per_stage = "\n".join(
+        per_query = "\n".join(
             f"- local[{c}]: `{json.dumps(results[c]['queries'])}`"
             for c in core_list
         )
@@ -354,10 +283,10 @@ def run_scaling() -> None:
             "N to 4N executors, evidenced at multiple local parallelism\n"
             "levels on the same input (sandbox stand-in per driver "
             "instruction).\n\n"
-            f"Workload: one generate->fetch->parse->updatedb cycle over the\n"
-            f"deterministically staged crawldb_0 — identical input files and\n"
-            f"identical 128-partition plans at EVERY phase, so only the\n"
-            f"thread count varies — topN={any_r['generated']}, "
+            "Workload: one production Crawler cycle (segment and CrawlDb\n"
+            "commits included) over the injected CrawlDb — identical input\n"
+            "files and identical 128-partition plans at EVERY phase, so\n"
+            f"only the thread count varies — topN={any_r['generated']}, "
             f"frontier={any_r['frontier_urls']} URLs;\n"
             f"best of {os.environ.get('NUTCH_BENCH_REPEATS', '2')} repeats "
             f"per phase (shared-box page-cache/DRAM noise).\n\n"
@@ -372,7 +301,7 @@ def run_scaling() -> None:
             "anywhere). The low-N pair is the contention-free regime a real\n"
             "N→4N executor scale-out resembles. Full per-phase data incl.\n"
             "every repeat: BENCH/scaling_details.json.\n\n"
-            f"Per-stage seconds (best repeat):\n{per_stage}\n"
+            f"Per-query seconds (best repeat):\n{per_query}\n"
         )
 
 

@@ -90,7 +90,6 @@ def _filter_normalize(
     cfg: NutchConfig,
     url_filter_rules: list[str] | None,
     exemption_rules: list[str] | None,
-    normalize_outlinks: bool,
 ) -> DataFrame:
     """``ParseOutputFormat.filterNormalize`` (:401-467) as ONE shared
     column pipeline for both call sites — outlinks (SCOPE_OUTLINK) and
@@ -110,12 +109,9 @@ def _filter_normalize(
     evaluate it on the normalized URL — the normalizer lowercases hosts
     without remapping them, so the comparison is host-equivalent."""
     df = df.filter(F.col(raw_col) != F.col(from_col))
-    if normalize_outlinks:
-        df = df.withColumn("to_url", normalize_col(F.col(raw_col), scope)).filter(
-            F.col("to_url").isNotNull()
-        )
-    else:
-        df = df.withColumn("to_url", F.col(raw_col))
+    df = df.withColumn("to_url", normalize_col(F.col(raw_col), scope)).filter(
+        F.col("to_url").isNotNull()
+    )
     if url_filter_rules is not None:
         df = df.filter(url_filter_cond(F.col("to_url"), url_filter_rules))
     src, dst = host_col(F.col(from_col)), host_col(F.col("to_url"))
@@ -159,7 +155,6 @@ def parse(
     cfg: NutchConfig,
     *,
     url_filter_rules: list[str] | None = None,
-    normalize_outlinks: bool = True,
     exemption_rules: list[str] | None = None,
     persist_handles: list | None = None,
 ) -> dict[str, DataFrame]:
@@ -252,7 +247,7 @@ def parse(
     )
     exploded = _filter_normalize(
         exploded, "url", "to_url_raw", "outlink", cfg,
-        url_filter_rules, exemption_rules, normalize_outlinks,
+        url_filter_rules, exemption_rules,
     )
     # ONE exchange for both windows below: hash-partitioning on `url`
     # alone satisfies the dedup window's ClusteredDistribution(url,
@@ -374,7 +369,7 @@ def parse(
     )
     refresh = _filter_normalize(
         refresh, "from_url", "to_raw", "fetcher", cfg,
-        url_filter_rules, exemption_rules, normalize_outlinks,
+        url_filter_rules, exemption_rules,
     )
     from nutch_spark.operators.fetchsim import _choose_repr_udf
 

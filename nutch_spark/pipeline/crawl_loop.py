@@ -24,7 +24,8 @@ on the CrawlDb write). Resume-from-checkpoint =
 clocks and seeds (no wall-clock in logic paths, SURVEY §2.8).
 
 Run on a cluster via ``spark-submit --py-files nutch_spark.zip
-bench.py`` — the driver itself is plain PySpark.
+nutch_spark/pipeline/crawl_loop.py`` (``main`` below) — the driver
+itself is plain PySpark.
 """
 
 from __future__ import annotations

@@ -16,7 +16,6 @@ from nutch_spark.urls.urlutil import (  # noqa: F401
     java_string_hashcode,
     nutch_url_hash32,
     nutch_url_hash32_expr,
-    partition_expr,
     partition_hash_udf,
     url_hash32_udf,
 )

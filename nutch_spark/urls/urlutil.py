@@ -377,17 +377,6 @@ def java_hashcode_expr(s_col: Column) -> Column:
     ).cast("int")
 
 
-def partition_expr(key_col: Column, seed: int, num_partitions: int) -> Column:
-    """Exact JVM twin of ``partition_index`` / URLPartitioner.getPartition:
-    (hashCode(key) ^ seed) & MAX_INT % N, null key -> hash of '' (the
-    pandas UDF's default)."""
-    h = java_hashcode_expr(F.coalesce(key_col, F.lit("")))
-    return F.pmod(
-        h.bitwiseXOR(F.lit(seed)).bitwiseAND(F.lit(0x7FFFFFFF)),
-        F.lit(num_partitions),
-    ).cast("int")
-
-
 # Java twin of _HOST_RE — the character classes are dialect-neutral, and
 # regexp_extract's find() is anchored by the leading '^'
 _HOST_RE_JAVA = r"^[a-zA-Z][a-zA-Z0-9+.\-]*://(?:[^/?#@]*@)?([^/?#:]*)"

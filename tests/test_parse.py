@@ -38,7 +38,7 @@ def test_outlinks_in_span_order_with_dedup_and_text(spark):
         span("text", "world", None, 5),
     ]
     c = content(spark, [("http://src.example.com/", 1.0, NOW, None, spans, True)])
-    out = parse(c, CFG, normalize_outlinks=False)
+    out = parse(c, CFG)
     pd_rows = out["parse_data"].collect()[0]
     assert [o["to_url"] for o in pd_rows["outlinks"]] == [
         "http://t.example.com/1",
@@ -54,7 +54,7 @@ def test_outlinks_in_span_order_with_dedup_and_text(spark):
 def test_outlink_cap_applies_before_filtering(spark):
     spans = [span("link", f"a{i}", f"http://t.example.com/{i}", i) for i in range(150)]
     c = content(spark, [("http://src.example.com/", 1.0, NOW, None, spans, True)])
-    out = parse(c, CFG, normalize_outlinks=False)
+    out = parse(c, CFG)
     assert out["outlinks"].count() == CFG.db_max_outlinks_per_page
 
 
@@ -64,7 +64,7 @@ def test_opic_score_distribution(spark):
         span("link", "out", "http://ext.example.com/x", 1),      # external
     ]
     c = content(spark, [("http://src.example.com/", 3.0, NOW, None, spans, True)])
-    out = parse(c, CFG, normalize_outlinks=False)
+    out = parse(c, CFG)
     rows = {r["to_url"]: r for r in out["outlinks"].collect()}
     # score/validCount = 3.0/2 = 1.5, internal and external factors 1.0
     assert rows["http://src.example.com/other"]["link_score"] == pytest.approx(1.5)
@@ -96,7 +96,7 @@ def test_signature_deterministic_and_content_sensitive(spark):
     assert sigs["http://a.example.com/"] == sigs["http://b.example.com/"]
     assert sigs["http://a.example.com/"] != sigs["http://c.example.com/"]
     # signature rows present in crawl_parse
-    out = parse(c, CFG, normalize_outlinks=False)
+    out = parse(c, CFG)
     sig_rows = out["crawl_parse"].filter(F.col("status") == S.STATUS_SIGNATURE).collect()
     assert {r["url"]: r["signature"] for r in sig_rows} == sigs
 
@@ -109,7 +109,7 @@ def test_noncanonical_emits_synthetic_fetch_success(spark):
             ("http://nc.example.com/", 1.0, NOW, None, [span("text", "y", None, 0)], False),
         ],
     )
-    out = parse(c, CFG, normalize_outlinks=False)
+    out = parse(c, CFG)
     synth = out["crawl_parse"].filter(F.col("status") == S.STATUS_FETCH_SUCCESS).collect()
     assert [r["url"] for r in synth] == ["http://nc.example.com/"]
     assert synth[0]["fetch_time"] == NOW  # carries the fetch time
@@ -133,7 +133,7 @@ def test_ignore_external_links_policy(spark):
     ]
     c = content(spark, [("http://src.example.com/", 1.0, NOW, None, spans, True)])
     cfg = CFG.with_(db_ignore_external_links=True)
-    out = parse(c, cfg, normalize_outlinks=False)
+    out = parse(c, cfg)
     assert [r["to_url"] for r in out["outlinks"].collect()] == ["http://src.example.com/other"]
 
 
@@ -148,8 +148,7 @@ def test_ignore_external_links_exemption_keeps_accepted_targets(spark):
     ]
     c = content(spark, [("http://src.example.com/", 1.0, NOW, None, spans, True)])
     cfg = CFG.with_(db_ignore_external_links=True)
-    out = parse(c, cfg, normalize_outlinks=False,
-                exemption_rules=[r"+^http://cdn\.example\.org/", "-."])
+    out = parse(c, cfg, exemption_rules=[r"+^http://cdn\.example\.org/", "-."])
     assert sorted(r["to_url"] for r in out["outlinks"].collect()) == [
         "http://cdn.example.org/a.png",
         "http://src.example.com/other",

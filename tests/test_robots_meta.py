@@ -181,7 +181,7 @@ def test_parse_nofollow_suppresses_outlinks_noindex_empties_text(spark):
         _doc("http://b.example.com/", [_m("robots:noindex"), _tx("gone text"), link]),
         _doc("http://c.example.com/", [_tx("plain"), link]),
     ]
-    out = parse(spark.createDataFrame(rows, CONTENT_SCHEMA), CFG, normalize_outlinks=False)
+    out = parse(spark.createDataFrame(rows, CONTENT_SCHEMA), CFG)
     links = {r["url"]: r["to_url"] for r in out["outlinks"].collect()}
     assert "http://a.example.com/" not in links  # nofollow
     assert links["http://b.example.com/"] == "http://t.example.com/1"  # noindex still follows
@@ -202,7 +202,7 @@ def test_parse_refresh_emits_linked_datum_with_repr(spark):
         _doc("http://b.example.com/x", [_m("refresh:9;url=http://other.example.com/y")]),
         _doc("http://c.example.com/", [_tx("no refresh")]),
     ]
-    out = parse(spark.createDataFrame(rows, CONTENT_SCHEMA), CFG, normalize_outlinks=False)
+    out = parse(spark.createDataFrame(rows, CONTENT_SCHEMA), CFG)
     linked = {
         r["url"]: r
         for r in out["crawl_parse"].filter(F.col("from_url").isNotNull()).collect()
@@ -230,7 +230,7 @@ def test_parse_drops_links_to_self(spark):
         _doc("http://a.example.com/", [_tx("t"), self_link, other]),
         _doc("http://b.example.com/", [_m("refresh:3"), _tx("t")]),
     ]
-    out = parse(spark.createDataFrame(rows, CONTENT_SCHEMA), CFG, normalize_outlinks=False)
+    out = parse(spark.createDataFrame(rows, CONTENT_SCHEMA), CFG)
     links = out["outlinks"].collect()
     assert {r["to_url"] for r in links} == {"http://t.example.com/1"}
     # validCount = 1 (self link excluded): full score flows to the survivor
@@ -248,7 +248,7 @@ def test_parse_refresh_links_split_from_gateable(spark):
         _doc("http://a.example.com/", [_m("refresh:9;url=http://other.example.com/y"),
                                        ("link", "a1", "http://t.example.com/1", 1)]),
     ]
-    out = parse(spark.createDataFrame(rows, CONTENT_SCHEMA), CFG, normalize_outlinks=False)
+    out = parse(spark.createDataFrame(rows, CONTENT_SCHEMA), CFG)
     refresh = out["refresh_links"].collect()
     assert [r["url"] for r in refresh] == ["http://other.example.com/y"]
     gateable = {(r["url"], r["status"]) for r in out["crawl_parse_gateable"].collect()}
@@ -263,7 +263,7 @@ def test_parse_meta_caching_forbidden_and_indexer_noindex_delete(spark):
         _doc("http://b.example.com/", [_m("pragma:no-cache"), _tx("t")]),
         _doc("http://c.example.com/", [_tx("t")]),
     ]
-    out = parse(spark.createDataFrame(rows, CONTENT_SCHEMA), CFG, normalize_outlinks=False)
+    out = parse(spark.createDataFrame(rows, CONTENT_SCHEMA), CFG)
     pm = {r["url"]: r for r in out["parse_meta"].collect()}
     assert pm["http://a.example.com/"]["robots"] == "noindex,follow"
     assert pm["http://b.example.com/"]["caching_forbidden"] == "content"

@@ -75,18 +75,16 @@ HASH_STRINGS = [
 
 
 def test_hash_exprs_match_python_twins(spark):
-    """nutch_url_hash32_expr / java_hashcode_expr / partition_expr are
-    the pure-JVM fetchlist interleave + URLPartitioner hashes; they must
-    reproduce the reference byte/code-unit semantics on every UTF-8
-    width class, or generate's issue order and partition layout silently
+    """nutch_url_hash32_expr / java_hashcode_expr are the pure-JVM
+    fetchlist interleave + URLPartitioner hashes; they must reproduce
+    the reference byte/code-unit semantics on every UTF-8 width class,
+    or the outlink-follow waves' issue order and queue layout silently
     diverge from the reference."""
     from nutch_spark.urls.urlutil import (
         java_hashcode_expr,
         java_string_hashcode,
         nutch_url_hash32,
         nutch_url_hash32_expr,
-        partition_expr,
-        partition_index,
     )
 
     df = spark.createDataFrame([(v,) for v in HASH_STRINGS + [None]], "s string")
@@ -94,18 +92,14 @@ def test_hash_exprs_match_python_twins(spark):
         "s",
         nutch_url_hash32_expr(F.col("s")).alias("nh"),
         java_hashcode_expr(F.col("s")).alias("jh"),
-        partition_expr(F.col("s"), 1234567, 97).alias("p"),
     ).collect()
     for r in rows:
         if r["s"] is None:
-            # null propagates through the hash exprs; partition_expr
-            # defaults to the ''-key partition like the pandas UDF
+            # null propagates through the hash exprs
             assert r["nh"] is None and r["jh"] is None
-            assert r["p"] == partition_index("", 1234567, 97)
             continue
         assert r["nh"] == nutch_url_hash32(r["s"]), repr(r["s"])
         assert r["jh"] == java_string_hashcode(r["s"]), repr(r["s"])
-        assert r["p"] == partition_index(r["s"], 1234567, 97), repr(r["s"])
     assert java_string_hashcode("abc") == 96354  # pin vs real Java
 
 

@@ -1884,7 +1884,7 @@ def q_index_filters(spark: SparkSession, sf_dir: str) -> DataFrame:
         static_fields,
     )
     from nutch_spark.operators.linkdb import invert_links
-    from nutch_spark.urls.urlutil import host_col, tld_udf
+    from nutch_spark.urls.urlutil import host_expr, tld_expr
 
     docs = _docs(spark, sf_dir)
     n = _n_docs(docs, sf_dir)
@@ -1936,7 +1936,7 @@ def q_index_filters(spark: SparkSession, sf_dir: str) -> DataFrame:
         "metadata": db_meta,
         "parse_metadata": parse_meta,
         "title": F.substring(F.coalesce(F.col("text"), F.lit("")), 1, 40),
-        "host": host_col(F.col("url")),
+        "host": host_expr(F.col("url")),
     })
     out = more_fields(
         base,
@@ -1974,7 +1974,7 @@ def q_index_filters(spark: SparkSession, sf_dir: str) -> DataFrame:
         "title_norm",
         F.array_join("source", " ").alias("source"),
         mimetype_keep(F.col("type"), ["application"], accept_mode=True).alias("mime_keep"),
-        tld_udf()(F.col("url")).alias("tld"),
+        tld_expr(F.col("url")).alias("tld"),
         lang_id(F.col("text")).alias("lang"),
     )
 

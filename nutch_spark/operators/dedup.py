@@ -26,7 +26,7 @@ from pyspark.sql import functions as F
 
 from nutch_spark.config import NutchConfig
 from nutch_spark.schema import STATUS_DB_DUPLICATE, STATUS_DB_FETCHED, STATUS_DB_NOTMODIFIED
-from nutch_spark.urls.urlutil import domain_expr, host_col
+from nutch_spark.urls.urlutil import domain_expr, host_expr
 
 
 def decoded_url_len(url: Column) -> Column:
@@ -57,7 +57,7 @@ def find_duplicates(crawldb: DataFrame, cfg: NutchConfig) -> DataFrame:
         & F.col("signature").isNotNull()
     )
     if cfg.dedup_group_mode == "host":
-        key = F.concat_ws("|", F.col("signature"), host_col(F.col("url")))
+        key = F.concat_ws("|", F.col("signature"), host_expr(F.col("url")))
     elif cfg.dedup_group_mode == "domain":
         key = F.concat_ws("|", F.col("signature"), domain_expr(F.col("url")))
     else:

@@ -43,7 +43,7 @@ from nutch_spark.schema import (
     STATUS_FETCH_SUCCESS,
     STATUS_LINKED,
 )
-from nutch_spark.urls.urlutil import choose_repr, host_col
+from nutch_spark.urls.urlutil import choose_repr, host_expr
 
 from nutch_spark.schema import EMPTY_META_EXPR as _EMPTY_MAP
 
@@ -86,7 +86,7 @@ def attach_queue(df: DataFrame, cfg: NutchConfig, dns: DataFrame | None) -> Data
     ``fetcher.queue.mode`` (FetchItem.create, fetcher/FetchItem.java:87-121).
     Robots rules stay host-keyed in every mode, so ``host`` is the real
     host and ``_queue`` the politeness unit."""
-    df = df.withColumn("host", host_col(F.col("url")))
+    df = df.withColumn("host", host_expr(F.col("url")))
     if cfg.fetcher_queue_mode == "byIP":
         if dns is None:
             raise ValueError("fetcher.queue.mode=byIP requires a dns fixture (host, ip)")
@@ -629,7 +629,7 @@ def fetch_follow_outlinks(
     for the session — fine for one-shot/test use, not for a long loop.
     """
     from nutch_spark.operators.parse import parse
-    from nutch_spark.urls.urlutil import java_hashcode_expr, nutch_url_hash32_expr
+    from nutch_spark.urls.urlutil import java_hashcode_expr
 
     depth = cfg.fetcher_follow_outlinks_depth
     if depth <= 0:
@@ -715,7 +715,7 @@ def fetch_follow_outlinks(
         if cfg.fetcher_follow_outlinks_ignore_external:
             # host check against the source url (:859-865), independent
             # of the queue mode
-            cands = cands.filter(host_col(F.col("url")) == host_col(F.col("to_url")))
+            cands = cands.filter(host_expr(F.col("url")) == host_expr(F.col("to_url")))
 
         events = cands.select(
             "_queue",
@@ -782,7 +782,7 @@ def fetch_follow_outlinks(
             F.col("seq").alias("_fifo_seq"),
             F.col("emit_t").alias("_fifo_t"),
             "part_id",
-        ).withColumn("url_hash", F.coalesce(nutch_url_hash32_expr(F.col("url")), F.lit(0)))
+        )
 
     out_fetch = _union_all(fetched_waves)
     out_redirs = _union_all(redir_waves)

@@ -37,7 +37,7 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from nutch_spark.urls.urlutil import host_col
+from nutch_spark.urls.urlutil import host_expr
 
 MAX_FILENAME = 32  # DumpFileUtil.MAX_LENGTH_OF_FILENAME
 MAX_EXTENSION = 5  # DumpFileUtil.MAX_LENGTH_OF_EXTENSION
@@ -160,7 +160,7 @@ def resolve_urls(
     a (host, ip) DataFrame (broadcast-joined) or a host->ip callable
     (pandas UDF); None marks every host unresolved (no network here —
     the reference's InetAddress path needs one)."""
-    with_host = urls.withColumn("host", host_col(F.col("url")))
+    with_host = urls.withColumn("host", host_expr(F.col("url")))
     if resolver is None:
         out = with_host.withColumn("ip", F.lit(None).cast("string"))
     elif isinstance(resolver, DataFrame):

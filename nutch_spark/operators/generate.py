@@ -251,13 +251,12 @@ def politeness_partition(
     else:
         part_key = host_expr(F.col("url"))
     # HOT-PATH NOTE (measured at 20M urls, BENCH/MEASUREMENT_LOG.md
-    # 2026-08-18): the JVM aggregate-fold hash twins (urlutil's
-    # nutch_url_hash32_expr / java_hashcode_expr) evaluate the per-char
-    # lambda INTERPRETED — 4.2x slower than the Arrow+numpy Horner for
-    # url_hash (63s vs 15s at local[4]) and a wash for the host-keyed
-    # partition hash (which caches per unique host on the pandas side).
-    # The exprs serve small columns (outlink-follow waves); the 20M-row
-    # generate path stays numpy.
+    # 2026-08-18): JVM aggregate-fold hashes evaluate the per-char lambda
+    # INTERPRETED — 4.2x slower than the Arrow+numpy Horner for url_hash
+    # (63s vs 15s at local[4]) and a wash for the host-keyed partition
+    # hash (which caches per unique host on the pandas side). The one
+    # such fold left, urlutil.java_hashcode_expr, serves small columns
+    # (outlink-follow waves); the 20M-row generate path stays numpy.
     df = df.withColumn(
         "part_id", partition_hash_udf(cfg.partition_url_seed, num_lists)(part_key)
     )

@@ -31,9 +31,9 @@ transform over the indexer's joined NutchDocument rows
 
 Scale: everything here is a map-side column expression except the two
 link joins (anchor/links), which shuffle on url once and are
-broadcast-able when the linkdb slice is small. No Python anywhere but
-the documented pandas fallback for the public-suffix lookup
-(``urlutil.domain_udf`` family — Arrow-batched).
+broadcast-able when the linkdb slice is small. No Python anywhere:
+link hosts are ``urlutil.host_expr`` and the tld field is
+``urlutil.tld_expr``.
 """
 
 from __future__ import annotations
@@ -220,15 +220,15 @@ def links_fields(
     whose host equals the page's own host. Arrays are sorted-distinct
     (Nutch multi-valued fields are unordered bags; sorting makes the
     output deterministic and oracle-replayable)."""
-    from nutch_spark.urls.urlutil import host_col
+    from nutch_spark.urls.urlutil import host_expr
 
-    page_host = host_col(F.col("url"))
+    page_host = host_expr(F.col("url"))
 
     o = outlinks.select(
         "url",
         F.col("to_url").alias("link"),
-        host_col(F.col("to_url")).alias("link_host"),
-        host_col(F.col("url")).alias("page_host"),
+        host_expr(F.col("to_url")).alias("link_host"),
+        page_host.alias("page_host"),
     )
     if ignore_same_host_out:
         o = o.filter(
@@ -246,7 +246,7 @@ def links_fields(
         .withColumnRenamed("_il", "inlinks_raw")
     )
     in_links = F.transform(F.col("inlinks_raw"), lambda l: l["from_url"])
-    in_hosts = F.transform(in_links, lambda u: F.lower(F.try_parse_url(u, F.lit("HOST"))))
+    in_hosts = F.transform(in_links, host_expr)
     in_val = in_hosts if only_hosts else in_links
     if ignore_same_host_in:
         pairs = F.arrays_zip(in_val.alias("v"), in_hosts.alias("h"))

@@ -31,7 +31,7 @@ from pyspark.sql import functions as F
 
 from nutch_spark.config import NutchConfig
 from nutch_spark.schema import STATUS_DB_FETCHED, STATUS_DB_NOTMODIFIED
-from nutch_spark.urls.urlutil import domain_expr
+from nutch_spark.urls.urlutil import domain_expr, host_expr
 
 
 def _clean_field(c: Column) -> Column:
@@ -59,7 +59,7 @@ def index_documents(
     pt_cols = ["url", "text"] + (["title"] if has_title else [])
     joined = db.join(parse_text.select(*pt_cols), "url", "inner")
     url_out = F.coalesce(F.col("repr_url"), F.col("url"))
-    host = F.lower(F.try_parse_url(url_out, F.lit("HOST")))
+    host = host_expr(url_out)
     content = _clean_field(F.substring(F.coalesce(F.col("text"), F.lit("")), 1, max_content))
     # BasicIndexingFilter:110-118: parser title truncated to
     # indexer.max.title.length; NUTCH-1004: zero-length title not added.

@@ -16,7 +16,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from nutch_spark.config import NutchConfig
-from nutch_spark.urls.urlutil import host_col
+from nutch_spark.urls.urlutil import host_expr
 
 
 def invert_links(outlinks: DataFrame, cfg: NutchConfig) -> DataFrame:
@@ -27,8 +27,8 @@ def invert_links(outlinks: DataFrame, cfg: NutchConfig) -> DataFrame:
         F.col("url").alias("from_url"),
         F.substring(F.coalesce(F.col("anchor"), F.lit("")), 1, cfg.linkdb_max_anchor_length).alias("anchor"),
     )
-    src_host = host_col(F.col("from_url"))
-    dst_host = host_col(F.col("url"))
+    src_host = host_expr(F.col("from_url"))
+    dst_host = host_expr(F.col("url"))
     if cfg.linkdb_ignore_internal_links:
         df = df.filter(src_host != dst_host)
     if cfg.linkdb_ignore_external_links:

@@ -44,7 +44,7 @@ from nutch_spark.schema import (
 )
 from nutch_spark.urls.filters import url_filter_cond
 from nutch_spark.urls.normalizer import normalize_col
-from nutch_spark.urls.urlutil import host_col
+from nutch_spark.urls.urlutil import host_expr
 
 from nutch_spark.schema import EMPTY_META_EXPR as _EMPTY_MAP
 
@@ -114,7 +114,7 @@ def _filter_normalize(
     )
     if url_filter_rules is not None:
         df = df.filter(url_filter_cond(F.col("to_url"), url_filter_rules))
-    src, dst = host_col(F.col(from_col)), host_col(F.col("to_url"))
+    src, dst = host_expr(F.col(from_col)), host_expr(F.col("to_url"))
     if cfg.db_ignore_internal_links:
         df = df.filter(src != dst)
     if cfg.db_ignore_external_links:
@@ -258,8 +258,8 @@ def parse(
     # the largest table in the stage. No skew risk: url is the
     # high-cardinality key (<= db.max.outlinks.per.page rows each).
     exploded = exploded.repartition("url")
-    src_host = host_col(F.col("url"))
-    dst_host = host_col(F.col("to_url"))
+    src_host = host_expr(F.col("url"))
+    dst_host = host_expr(F.col("to_url"))
 
     # within-page dedup, first occurrence wins (ParseOutputFormat dedup set)
     w_dup = Window.partitionBy("url", "to_url").orderBy("pos")

@@ -34,6 +34,8 @@ from itertools import chain
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
+from nutch_spark.urls.urlutil import host_expr
+
 # attribute extraction within a single already-isolated tag string;
 # our writers emit double-quoted attributes (the reference reads the
 # DOM, so quoting style is normalized before it looks)
@@ -121,7 +123,7 @@ def rel_tags(html: Column) -> Column:
     segs = F.transform(
         tagged,
         lambda a: F.url_decode(
-            F.substring_index(F.parse_url(_attr(a, "href"), F.lit("PATH")), "/", -1)
+            F.substring_index(F.try_parse_url(_attr(a, "href"), F.lit("PATH")), "/", -1)
         ),
     )
     return F.array_sort(
@@ -142,12 +144,11 @@ _WORK_TYPE_NAMES = {
 
 
 def _is_cc_license_url(href: Column) -> Column:
-    proto = F.lower(F.parse_url(href, F.lit("PROTOCOL")))
-    host = F.lower(F.parse_url(href, F.lit("HOST")))
-    path = F.parse_url(href, F.lit("PATH"))
+    proto = F.lower(F.try_parse_url(href, F.lit("PROTOCOL")))
+    path = F.try_parse_url(href, F.lit("PATH"))
     return (
         proto.isin("http", "https")
-        & (host == "creativecommons.org")
+        & (host_expr(href) == "creativecommons.org")
         & path.startswith("/licenses/")
         & (F.length(path) > len("/licenses/"))
     )
@@ -203,7 +204,7 @@ def cc_index_fields(license_url: Column) -> Column:
     path ``/licenses/<license>/<version>/...``: ``struct<license,
     features:array<string>, version>``; too-short paths yield nulls."""
     first = F.substring_index(license_url, " ", 1)
-    path = F.parse_url(first, F.lit("PATH"))
+    path = F.try_parse_url(first, F.lit("PATH"))
     parts = F.split(path, "/")
     ok = F.size(parts) >= 4
     lic = F.when(ok, F.element_at(parts, 3))

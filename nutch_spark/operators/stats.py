@@ -24,7 +24,7 @@ from nutch_spark.schema import (
     STATUS_DB_UNFETCHED,
     STATUS_NAMES,
 )
-from nutch_spark.urls.urlutil import domain_expr, host_col, tld_expr
+from nutch_spark.urls.urlutil import domain_expr, host_expr, tld_expr
 
 
 def status_name_col(status: Column) -> Column:
@@ -108,7 +108,7 @@ def hostdb_update(crawldb: DataFrame, cfg: NutchConfig) -> DataFrame:
     counts per db status, totals, score percentiles
     (UpdateHostDbReducer percentiles :364-370 -> percentile_approx).
     DNS resolution is out of scope (fixture-driven, SURVEY A4)."""
-    df = crawldb.withColumn("host", host_col(F.col("url")))
+    df = crawldb.withColumn("host", host_expr(F.col("url")))
 
     def cnt(status):
         return F.count(F.when(F.col("status") == status, 1)).alias(
@@ -159,7 +159,7 @@ def domain_stats(crawldb: DataFrame, mode: str = "domain") -> DataFrame:
     dropping data silently is the bug we choose not to replicate."""
     url = F.col("url")
     if mode == "host":
-        key = host_col(url)
+        key = host_expr(url)
     elif mode == "domain":
         key = domain_expr(url)
     elif mode == "suffix":
@@ -255,7 +255,7 @@ def protocol_status_stats(crawldb: DataFrame) -> DataFrame:
 def crawl_summary(crawldb: DataFrame, mode: str = "host") -> DataFrame:
     """CrawlSummaryStats (util/CrawlSummaryStats.java:160-240): counts by
     host/domain x crawl status name x protocol code (-1 when absent)."""
-    key = host_col(F.col("url")) if mode == "host" else domain_expr(F.col("url"))
+    key = host_expr(F.col("url")) if mode == "host" else domain_expr(F.col("url"))
     code = F.coalesce(
         F.element_at(F.col("metadata"), PROTOCOL_CODE_KEY).cast("int"),
         F.lit(-1),

@@ -134,7 +134,7 @@ def _json_escape(c: Column) -> Column:
 
 # Reversed-domain key prefix (CommonCrawlDataDumper.reverseUrl) — same
 # transform as TableUtil's reversed storage keys; one definition.
-from nutch_spark.urls.urlutil import reverse_host_col as reverse_host
+from nutch_spark.urls.urlutil import reverse_host
 
 
 def commoncrawl_records(
@@ -155,9 +155,9 @@ def commoncrawl_records(
     response.body is the parse text. Deviation (documented): timestamps
     are the epoch-ms fetch_time under the injected-clock rule, not
     wall-clock import time."""
-    from nutch_spark.urls.urlutil import host_col
+    from nutch_spark.urls.urlutil import host_expr
 
-    host = host_col(F.col("url"))
+    host = host_expr(F.col("url"))
     path = F.regexp_replace(F.col("url"), r"^[a-z]+://[^/]*", "")
     key = F.concat(
         F.lit(key_prefix), reverse_host(host), F.lit(":http"), path

@@ -15,7 +15,6 @@ from nutch_spark.urls.urlutil import (  # noqa: F401
     java_hashcode_expr,
     java_string_hashcode,
     nutch_url_hash32,
-    nutch_url_hash32_expr,
     partition_hash_udf,
     url_hash32_udf,
 )

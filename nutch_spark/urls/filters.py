@@ -21,6 +21,8 @@ import pandas as pd
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
+from nutch_spark.urls.urlutil import get_host, host_expr
+
 # conf/regex-urlfilter.txt.template (comment/blank lines removed)
 DEFAULT_RULES: list[str] = [
     r"-^(?:file|ftp|mailto):",
@@ -182,20 +184,6 @@ def url_filter_cond(url_col: Column, rules: Sequence[str] | None = None) -> Colu
     return cond.otherwise(F.lit(False))  # no match => reject
 
 
-def _host_suffixes(url_col: Column) -> Column:
-    """Array of the url host and all its ancestor domains
-    (``a.b.c.com`` -> [a.b.c.com, b.c.com, c.com, com]); empty array
-    for unparseable/null hosts. Pure JVM."""
-    host = F.lower(F.try_parse_url(url_col, F.lit("HOST")))
-    parts = F.split(host, r"\.")
-    n = F.size(parts)
-    sufs = F.transform(
-        F.sequence(F.lit(1), F.greatest(n, F.lit(1))),
-        lambda i: F.concat_ws(".", F.slice(parts, i, n)),
-    )
-    return F.when(host.isNull() | (host == ""), F.array().cast("array<string>")).otherwise(sufs)
-
-
 class DomainURLFilter:
     """urlfilter-domain / urlfilter-domaindenylist as a broadcast-set
     suffix lookup (``DomainURLFilter.java:84-110``,
@@ -220,26 +208,26 @@ class DomainURLFilter:
     def cond(self, url_col: Column) -> Column:
         if not self._set:
             return F.lit(True)  # no entries => filter inactive
-        host = F.lower(F.try_parse_url(url_col, F.lit("HOST")))
-        bad = host.isNull() | (host == "")  # unparseable => reject (ref: exception => null)
+        host = host_expr(url_col)
+        # the host and all its ancestor domains
+        # (a.b.c.com -> [a.b.c.com, b.c.com, c.com, com])
+        parts = F.split(host, r"\.")
+        n = F.size(parts)
+        sufs = F.transform(
+            F.sequence(F.lit(1), n), lambda i: F.concat_ws(".", F.slice(parts, i, n))
+        )
         hit = F.coalesce(
-            F.arrays_overlap(
-                _host_suffixes(url_col), F.array(*[F.lit(d) for d in sorted(self._set)])
-            ),
+            F.arrays_overlap(sufs, F.array(*[F.lit(d) for d in sorted(self._set)])),
             F.lit(False),
         )
-        return F.when(bad, F.lit(False)).otherwise(~hit if self._deny else hit)
+        # hostless => reject, both modes (ref: exception => null)
+        return F.when(host.isNull(), F.lit(False)).otherwise(~hit if self._deny else hit)
 
     def accept(self, url: str | None) -> bool:
         """Python twin (tests / driver-side checks)."""
-        if url is None:
-            return False
-        m = re.match(r"^[a-z][a-z0-9+.-]*://([^/?#]*)", url, re.I)
-        auth = m.group(1) if m else ""
-        # strip userinfo and port like parse_url(.., 'HOST') does
-        host = auth.rsplit("@", 1)[-1].split(":", 1)[0].lower()
-        if not host:
-            return False  # unparseable => reject, both modes
+        host = get_host(url)
+        if host is None:
+            return False  # hostless => reject, both modes
         parts = host.split(".")
         sufs = {".".join(parts[i:]) for i in range(len(parts))}
         hit = bool(sufs & self._set)
@@ -291,7 +279,7 @@ class FastURLFilter:
         parseable = F.coalesce(
             url_col.rlike(r"^[a-zA-Z][a-zA-Z0-9+.-]*://"), F.lit(False)
         )
-        host = F.lower(F.try_parse_url(url_col, F.lit("HOST")))
+        host = host_expr(url_col)
         after = F.regexp_replace(url_col, r"^[a-zA-Z][a-zA-Z0-9+.-]*://[^/?#]*", "")
         path = F.regexp_extract(after, r"^([^?#]*)", 1)
         pathquery = F.regexp_extract(after, r"^([^#]*)", 1)
@@ -315,11 +303,11 @@ class FastURLFilter:
         """Python twin of :meth:`cond` for tests."""
         if url is None:
             return False
-        m = re.match(r"^[a-zA-Z][a-zA-Z0-9+.-]*://([^/?#]*)(.*)$", url)
+        m = re.match(r"^[a-zA-Z][a-zA-Z0-9+.-]*://[^/?#]*", url)
         if not m:
             return False  # unparseable => reject, matching cond()
-        host = m.group(1).rsplit("@", 1)[-1].split(":", 1)[0].lower()
-        rest = m.group(2)
+        host = get_host(url) or ""
+        rest = url[m.end():]
         path = re.match(r"^([^?#]*)", rest).group(1)
         pathquery = re.match(r"^([^#]*)", rest).group(1)
         for kind, name, target, rx in self._rules:

@@ -31,7 +31,14 @@ import pandas as pd
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
-_HOST_RE = re.compile(r"^[a-zA-Z][a-zA-Z0-9+.\-]*://(?:[^/?#@]*@)?([^/?#:]*)")
+# The one host semantics of the engine: scheme://[userinfo@]host, where
+# host is a bracketed IPv6 literal (kept with its brackets, like
+# java.net.URL.getHost) or runs up to the first '/', '?', '#' or ':'.
+# The character classes are dialect-neutral, so host_expr runs the same
+# pattern in Java (regexp_extract's find() is anchored by the '^').
+_HOST_RE = re.compile(
+    r"^[a-zA-Z][a-zA-Z0-9+.\-]*://(?:[^/?#@]*@)?(\[[^\]/?#]*\]|[^/?#:]*)"
+)
 _IP_RE = re.compile(r"^\d{1,3}\.\d{1,3}\.\d{1,3}\.\d{1,3}$")
 
 # Minimal public-suffix set: generic TLDs + the two-level suffixes used in
@@ -47,7 +54,9 @@ _SUFFIXES = {
 
 
 def get_host(url: str | None) -> str | None:
-    """Lowercased host of a URL, or None (URLUtil.getHost)."""
+    """Lowercased host of a URL, or None (URLUtil.getHost). The Python
+    oracle of ``host_series`` (generate) and ``host_expr`` (everything
+    else)."""
     if not url:
         return None
     m = _HOST_RE.match(url)
@@ -57,63 +66,45 @@ def get_host(url: str | None) -> str | None:
     return host or None
 
 
-def get_domain(url_or_host: str | None) -> str | None:
-    """Domain = longest known public suffix + one label (URLUtil.getDomainName)."""
+def _suffix_host(url_or_host: str | None) -> str | None:
+    """The host get_domain/get_tld walk: a URL's host or a bare host,
+    lowercased, one trailing dot stripped; None when there is none."""
     if not url_or_host:
         return None
     host = get_host(url_or_host) if "://" in url_or_host else url_or_host.lower()
     if not host:
         return None
-    if host.endswith("."):
-        host = host[:-1]
-    if _IP_RE.match(host):
-        return host
+    return host[:-1] if host.endswith(".") else host
+
+
+def _suffix_walk(host: str) -> tuple[str, str]:
+    """(domain, suffix): walk labels right-to-left to the longest known
+    public suffix; a host with none yields (its last label, twice)."""
     candidate = host
     while True:
         idx = candidate.find(".")
         sub = candidate[idx + 1 :]
-        if sub in _SUFFIXES:
-            return candidate
-        if idx < 0:
-            return candidate
+        if sub in _SUFFIXES or idx < 0:
+            return candidate, sub
         candidate = sub
+
+
+def get_domain(url_or_host: str | None) -> str | None:
+    """Domain = longest known public suffix + one label (URLUtil.getDomainName)."""
+    host = _suffix_host(url_or_host)
+    if host is None:
+        return None
+    return host if _IP_RE.match(host) else _suffix_walk(host)[0]
 
 
 def get_tld(url_or_host: str | None) -> str | None:
     """Public domain suffix of the host (URLUtil.getDomainSuffix →
     DomainSuffix.getDomain, ``tld/.../TLDIndexingFilter.java:48-60``):
     the longest known public suffix, else the host's last label."""
-    if not url_or_host:
+    host = _suffix_host(url_or_host)
+    if host is None or _IP_RE.match(host):
         return None
-    host = get_host(url_or_host) if "://" in url_or_host else url_or_host.lower()
-    if not host:
-        return None
-    if host.endswith("."):
-        host = host[:-1]
-    if _IP_RE.match(host):
-        return None
-    candidate = host
-    while True:
-        idx = candidate.find(".")
-        sub = candidate[idx + 1 :]
-        if sub in _SUFFIXES:
-            return sub
-        if idx < 0:
-            return candidate
-        candidate = sub
-
-
-def tld_udf():
-    """get_tld with the same unique-host batch cache as domain_udf."""
-
-    @F.pandas_udf("string")
-    def _tld(urls: pd.Series) -> pd.Series:
-        has_scheme = urls.str.contains("://", regex=False, na=False)
-        hosts = host_series(urls).where(has_scheme, urls)
-        table = {h: get_tld(h) for h in hosts.dropna().unique()}
-        return hosts.map(table)
-
-    return _tld
+    return _suffix_walk(host)[1]
 
 
 def choose_repr(src: str, dst: str, temp: bool) -> str:
@@ -277,84 +268,18 @@ def partition_hash_udf(seed: int, num_partitions: int):
     return _p
 
 
-def host_col(url_col: Column) -> Column:
-    """JVM-side host extraction for the common scheme://host/path shape.
-
-    Used on hot paths where the full URLUtil semantics aren't needed:
-    ``parse_url`` runs in the JVM (no Python round-trip).
-    """
-    return F.lower(F.try_parse_url(url_col, F.lit("HOST")))
-
-
 # ---------------------------------------------------------------------------
-# Pure-JVM twins of the two Java hashes. split(s, '') yields one element
-# per code point and ascii() returns the full code point (verified for
-# supplementary planes), so each hash is an aggregate() fold with the
-# UTF-8 byte / UTF-16 unit expansion done arithmetically per char — no
-# Python round-trip and no ASCII-only fallback path.
+# Pure-JVM twin of String.hashCode. split(s, '') yields one element per
+# code point and ascii() returns the full code point (verified for
+# supplementary planes), so the hash is an aggregate() fold with the
+# UTF-16 unit expansion done arithmetically per char — no Python
+# round-trip and no ASCII-only fallback path.
 # ---------------------------------------------------------------------------
 
 
 def _wrap_i32_col(v: Column) -> Column:
     """Java int32 wraparound for a long column: ((v+2^31) mod 2^32)-2^31."""
     return F.pmod(v + F.lit(1 << 31), F.lit(1 << 32)) - F.lit(1 << 31)
-
-
-def nutch_url_hash32_expr(url_col: Column) -> Column:
-    """Exact JVM twin of ``nutch_url_hash32`` (Generator.java:627-634).
-
-    The Java loop walks UTF-8 **bytes** last-to-first with h=31h+signed_b.
-    Here the fold walks code points last-to-first (reverse(split(s,''))),
-    and each code point contributes its 1-4 UTF-8 bytes, also in reverse,
-    as nested Horner steps; bit-ops become +/shift/pmod since the bit
-    fields never overlap. Null url -> null (the pandas twin returns 0;
-    callers coalesce where that matters)."""
-
-    def step(acc: Column, c: Column) -> Column:
-        cp = F.ascii(c).cast("long")
-        # signed continuation/lead bytes: raw >= 0x80 -> raw - 256
-        one = _wrap_i32_col(acc * 31 + cp)
-        two = _wrap_i32_col(
-            _wrap_i32_col(acc * 31 + (F.lit(0x80 - 256) + F.pmod(cp, F.lit(64))))
-            * 31
-            + (F.lit(0xC0 - 256) + F.shiftright(cp, 6))
-        )
-        three = _wrap_i32_col(
-            _wrap_i32_col(
-                _wrap_i32_col(acc * 31 + (F.lit(0x80 - 256) + F.pmod(cp, F.lit(64))))
-                * 31
-                + (F.lit(0x80 - 256) + F.pmod(F.shiftright(cp, 6), F.lit(64)))
-            )
-            * 31
-            + (F.lit(0xE0 - 256) + F.shiftright(cp, 12))
-        )
-        four = _wrap_i32_col(
-            _wrap_i32_col(
-                _wrap_i32_col(
-                    _wrap_i32_col(acc * 31 + (F.lit(0x80 - 256) + F.pmod(cp, F.lit(64))))
-                    * 31
-                    + (F.lit(0x80 - 256) + F.pmod(F.shiftright(cp, 6), F.lit(64)))
-                )
-                * 31
-                + (F.lit(0x80 - 256) + F.pmod(F.shiftright(cp, 12), F.lit(64)))
-            )
-            * 31
-            + (F.lit(0xF0 - 256) + F.shiftright(cp, 18))
-        )
-        return (
-            F.when(cp < 0x80, one)
-            .when(cp < 0x800, two)
-            .when(cp < 0x10000, three)
-            .otherwise(four)
-        )
-
-    # split('', '') yields [''] (ascii 0 -> a phantom Horner step);
-    # array_remove drops it — non-empty strings never produce '' elements
-    return F.aggregate(
-        F.reverse(F.array_remove(F.split(url_col, ""), "")),
-        F.lit(1).cast("long"),
-        step,
-    ).cast("int")
 
 
 def java_hashcode_expr(s_col: Column) -> Column:
@@ -377,18 +302,15 @@ def java_hashcode_expr(s_col: Column) -> Column:
     ).cast("int")
 
 
-# Java twin of _HOST_RE — the character classes are dialect-neutral, and
-# regexp_extract's find() is anchored by the leading '^'
-_HOST_RE_JAVA = r"^[a-zA-Z][a-zA-Z0-9+.\-]*://(?:[^/?#@]*@)?([^/?#:]*)"
-
-
 def host_expr(url_col: Column) -> Column:
-    """Exact JVM twin of ``get_host`` (whole-stage codegen, no Python).
+    """Exact JVM twin of ``get_host`` (whole-stage codegen, no Python):
+    every JVM-side host key — fetch queue and robots lookup, internal-
+    link checks, dedup/stats/index keys, the URL filters — is this.
 
     regexp_extract returns '' both for no-match and for an empty host
     capture; get_host maps both to None — nullif folds them together.
     """
-    return F.nullif(F.lower(F.regexp_extract(url_col, _HOST_RE_JAVA, 1)), F.lit(""))
+    return F.nullif(F.lower(F.regexp_extract(url_col, _HOST_RE.pattern, 1)), F.lit(""))
 
 
 # Python's `$` in _IP_RE also matches just before one trailing '\n'
@@ -397,8 +319,9 @@ def host_expr(url_col: Column) -> Column:
 _IP_RE_JAVA = r"^\d{1,3}\.\d{1,3}\.\d{1,3}\.\d{1,3}\n?\z"
 
 
-def domain_expr(url_or_host_col: Column) -> Column:
-    """Exact JVM twin of ``get_domain`` (URLUtil.getDomainName).
+def _suffix_tails(url_or_host_col: Column) -> tuple[Column, Column, list[Column]]:
+    """JVM twin of ``_suffix_host``, the prelude domain_expr and tld_expr
+    share: (host, label count, [1-, 2-, 3-label tails]).
 
     The Python suffix walk checks progressively shorter host tails
     against _SUFFIXES; since every table entry has at most two labels,
@@ -408,12 +331,9 @@ def domain_expr(url_or_host_col: Column) -> Column:
     table so an extended suffix list can't silently diverge.
     """
     assert all(s.count(".") <= 1 for s in _SUFFIXES), (
-        "domain_expr flattens the suffix walk to depth 2; regenerate the "
-        "when-chain if _SUFFIXES gains 3-label entries"
+        "domain_expr/tld_expr flatten the suffix walk to depth 2; regenerate "
+        "the when-chains if _SUFFIXES gains 3-label entries"
     )
-    s1 = [s for s in _SUFFIXES if "." not in s]
-    s2 = [s for s in _SUFFIXES if "." in s]
-
     host = F.when(
         url_or_host_col.contains("://"), host_expr(url_or_host_col)
     ).otherwise(F.lower(url_or_host_col))
@@ -423,13 +343,20 @@ def domain_expr(url_or_host_col: Column) -> Column:
     ).otherwise(host)
 
     labels = F.split(host, r"\.")
-    n = F.size(labels)
     # try_element_at: the when-guards make out-of-range tails unreachable,
     # but ANSI mode is on and Catalyst may evaluate branches eagerly —
     # a throwing element_at here would be a latent crash, not a value bug
-    t1 = F.try_element_at(labels, F.lit(-1))
-    t2 = F.concat_ws(".", F.try_element_at(labels, F.lit(-2)), t1)
-    t3 = F.concat_ws(".", F.try_element_at(labels, F.lit(-3)), t2)
+    tails = [F.try_element_at(labels, F.lit(-1))]
+    for k in (2, 3):
+        tails.append(F.concat_ws(".", F.try_element_at(labels, F.lit(-k)), tails[-1]))
+    return host, F.size(labels), tails
+
+
+def domain_expr(url_or_host_col: Column) -> Column:
+    """Exact JVM twin of ``get_domain`` (URLUtil.getDomainName)."""
+    s1 = [s for s in _SUFFIXES if "." not in s]
+    s2 = [s for s in _SUFFIXES if "." in s]
+    host, n, (t1, t2, t3) = _suffix_tails(url_or_host_col)
     return F.when(host.rlike(_IP_RE_JAVA), host).otherwise(
         F.when((n >= 3) & t2.isin(s2), t3)
         .when((n >= 2) & t1.isin(s1), t2)
@@ -440,28 +367,11 @@ def domain_expr(url_or_host_col: Column) -> Column:
 def tld_expr(url_or_host_col: Column) -> Column:
     """Exact JVM twin of ``get_tld`` (URLUtil.getDomainSuffix): the
     longest known public suffix of the host, else its last label; null
-    for IPs/hostless inputs. Flattens the same depth-2 suffix walk as
-    ``domain_expr`` — a 2-label tail can only match when the host has a
-    third label in front of it (the walk only tests tails strictly
+    for IPs/hostless inputs. A 2-label tail can only match when the host
+    has a third label in front of it (the walk only tests tails strictly
     after a dot), so ``co.uk`` as the whole host yields ``uk``."""
-    assert all(s.count(".") <= 1 for s in _SUFFIXES), (
-        "tld_expr flattens the suffix walk to depth 2; regenerate the "
-        "when-chain if _SUFFIXES gains 3-label entries"
-    )
     s2 = [s for s in _SUFFIXES if "." in s]
-
-    host = F.when(
-        url_or_host_col.contains("://"), host_expr(url_or_host_col)
-    ).otherwise(F.lower(url_or_host_col))
-    host = F.nullif(host, F.lit(""))
-    host = F.when(
-        host.endswith("."), F.substr(host, F.lit(1), F.length(host) - 1)
-    ).otherwise(host)
-
-    labels = F.split(host, r"\.")
-    n = F.size(labels)
-    t1 = F.try_element_at(labels, F.lit(-1))
-    t2 = F.concat_ws(".", F.try_element_at(labels, F.lit(-2)), t1)
+    host, n, (t1, t2, _) = _suffix_tails(url_or_host_col)
     return F.when(host.rlike(_IP_RE_JAVA), F.lit(None).cast("string")).otherwise(
         F.when((n >= 3) & t2.isin(s2), t2).otherwise(t1)
     )
@@ -471,7 +381,7 @@ def tld_expr(url_or_host_col: Column) -> Column:
 # TableUtil reversed-url keys (util/TableUtil.java:41-140)
 # ---------------------------------------------------------------------------
 
-def reverse_host_col(host):
+def reverse_host(host):
     """reverseAppendSplits: dot-segments reversed (com.foo.bar)."""
     return F.array_join(F.reverse(F.split(host, "\\.")), ".")
 
@@ -497,7 +407,7 @@ def reverse_url_col(url):
         (file != "") & ~file.startswith("/"), F.concat(F.lit("/"), file)
     ).otherwise(file)
     return F.concat(
-        reverse_host_col(host),
+        reverse_host(host),
         F.lit(":"),
         proto,
         F.when(port != "", F.concat(F.lit(":"), port)).otherwise(F.lit("")),
@@ -517,7 +427,7 @@ def unreverse_url_col(rev):
     return F.concat(
         proto,
         F.lit("://"),
-        reverse_host_col(rev_host),
+        reverse_host(rev_host),
         F.when(port.isNotNull(), F.concat(F.lit(":"), port)).otherwise(F.lit("")),
         rest,
     )

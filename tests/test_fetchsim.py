@@ -60,43 +60,51 @@ def test_politeness_spacing_single_host(spark):
     assert times[-1] - times[0] >= 4 * CFG.fetcher_server_delay * 1000
 
 
+# Host spellings both fetch tests run over: an underscore in a label is
+# no valid java.net.URI host, yet it is the host normalize keeps, so it
+# must key the same queue and robots rules as its plain twin.
+HOST_PREFIXES = ["", "my_"]
+
+
 def test_hosts_run_in_parallel(spark):
-    urls = [f"http://h{i}.example.com/doc/0" for i in range(4)]
-    fl = fetchlist(spark, urls)
-    out = outcomes_df(spark, [(u, "success", None, 100) for u in urls])
-    cf, _ = fetch(fl, robots_df(spark), out, CFG, NOW)
-    # independent hosts all start at cycle start: wall clock is per-host
-    assert {r["fetch_time"] for r in cf.collect()} == {NOW}
+    for pre in HOST_PREFIXES:
+        urls = [f"http://{pre}h{i}.example.com/doc/0" for i in range(4)]
+        fl = fetchlist(spark, urls)
+        out = outcomes_df(spark, [(u, "success", None, 100) for u in urls])
+        cf, _ = fetch(fl, robots_df(spark), out, CFG, NOW)
+        # independent hosts all start at cycle start: wall clock is per-host
+        assert {r["fetch_time"] for r in cf.collect()} == {NOW}, pre
 
 
 def test_robots_disallow_and_crawl_delay(spark):
-    urls = [
-        "http://r.example.com/private/doc/1",
-        "http://r.example.com/doc/2",
-        "http://slow.example.com/doc/3",
-        "http://polite8.example.com/doc/4",
-        "http://polite8.example.com/doc/5",
-    ]
-    fl = fetchlist(spark, urls)
-    rb = robots_df(spark, [
-        ("r.example.com", ["/private/"], None, False, False),
-        ("slow.example.com", [], 40.0, False, False),   # > 30s cap -> gone
-        ("polite8.example.com", [], 8.0, False, False),
-    ])
-    out = outcomes_df(spark, [(u, "success", None, 100) for u in urls])
-    cf, _ = fetch(fl, rb, out, CFG, NOW)
-    rows = {r["url"]: r for r in cf.collect()}
-    assert rows["http://r.example.com/private/doc/1"]["status"] == S.STATUS_FETCH_GONE
-    assert rows["http://r.example.com/doc/2"]["status"] == S.STATUS_FETCH_SUCCESS
-    assert rows["http://slow.example.com/doc/3"]["status"] == S.STATUS_FETCH_GONE
-    # robots Crawl-Delay 8s adopted instead of the 5s default
-    p8 = sorted(
-        [rows["http://polite8.example.com/doc/4"], rows["http://polite8.example.com/doc/5"]],
-        key=lambda r: r["fetch_time"],
-    )
-    assert p8[1]["fetch_time"] - p8[0]["fetch_time"] == 100 + 8000
-    # robots-denied items consume no politeness budget
-    assert rows["http://r.example.com/doc/2"]["fetch_time"] == NOW
+    for pre in HOST_PREFIXES:
+        r, slow, p8 = (f"{pre}{h}.example.com" for h in ("r", "slow", "polite8"))
+        urls = [
+            f"http://{r}/private/doc/1",
+            f"http://{r}/doc/2",
+            f"http://{slow}/doc/3",
+            f"http://{p8}/doc/4",
+            f"http://{p8}/doc/5",
+        ]
+        fl = fetchlist(spark, urls)
+        rb = robots_df(spark, [
+            (r, ["/private/"], None, False, False),
+            (slow, [], 40.0, False, False),   # > 30s cap -> gone
+            (p8, [], 8.0, False, False),
+        ])
+        out = outcomes_df(spark, [(u, "success", None, 100) for u in urls])
+        cf, _ = fetch(fl, rb, out, CFG, NOW)
+        rows = {row["url"]: row for row in cf.collect()}
+        assert rows[urls[0]]["status"] == S.STATUS_FETCH_GONE, pre
+        assert rows[urls[1]]["status"] == S.STATUS_FETCH_SUCCESS, pre
+        assert rows[urls[2]]["status"] == S.STATUS_FETCH_GONE, pre
+        # robots Crawl-Delay 8s adopted instead of the 5s default
+        t8 = sorted(rows[u]["fetch_time"] for u in urls[3:])
+        assert t8[1] - t8[0] == 100 + 8000, pre
+        # robots-denied items consume no politeness budget
+        assert rows[urls[1]]["fetch_time"] == NOW, pre
+        # the robots join key is the row's host
+        assert {row["host"] for row in rows.values()} == {r, slow, p8}, pre
 
 
 def test_outcome_status_mapping(spark):

@@ -28,6 +28,7 @@ _HTML = """
 <a rel="tag" href="http://example.com/tags/spark?x=1">s</a>
 <a href="http://example.com/tags/spark" rel="tag">dup</a>
 <a href="http://example.com/nottag">n</a>
+<a rel="tag" href="http://a.com/tags/x y">hostile: no valid URI, no tag</a>
 </body></html>
 """
 
@@ -70,6 +71,8 @@ def test_rel_tags(spark):
 _CC_REL = (
     '<a rel="license" href="http://creativecommons.org/licenses/by-nc/2.0/">cc</a>'
     '<a href="http://creativecommons.org/licenses/by/3.0/">plain</a>'
+    # a hostile href (no valid URI) is just not a CC license, not a crash
+    '<a rel="tag" href="http://a.com/tags/x y">t</a>'
 )
 _CC_RDF = (
     "<!-- RDF here <rdf:RDF xmlns:cc=\"http://web.resource.org/cc/\">"

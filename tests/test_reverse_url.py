@@ -4,7 +4,7 @@ the javadoc's own example and round-trip inversion."""
 from pyspark.sql import functions as F
 
 from nutch_spark.urls.urlutil import (
-    reverse_host_col,
+    reverse_host,
     reverse_url_col,
     unreverse_url_col,
 )
@@ -51,7 +51,7 @@ def test_reverse_host(spark):
     df = spark.createDataFrame([("bar.foo.com",), ("localhost",)], "h string")
     got = [
         r["r"]
-        for r in df.select(reverse_host_col(F.col("h")).alias("r")).collect()
+        for r in df.select(reverse_host(F.col("h")).alias("r")).collect()
     ]
     assert got == ["com.foo.bar", "localhost"]
 

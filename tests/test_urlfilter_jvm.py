@@ -81,6 +81,7 @@ def test_domain_filter(spark, deny):
         "http://www.example.com/y",       # exact host entry
         "http://other.example.com/y",     # sibling host: only 'com' matches
         "http://example.net/z",           # no entry
+        "http://my_host.example.com/x",   # underscore host: 'com' matches
         None,
     ]
     df = spark.createDataFrame([(u,) for u in urls], "url string")
@@ -97,6 +98,9 @@ FAST_RULES = """
 Host www.example.com
 DenyPath /private/
 DenyPath \\.cgi$
+
+Host my_host.example.com
+DenyPath /private/
 
 Domain example.org
 DenyPathQuery \\?session=
@@ -118,6 +122,8 @@ def test_fast_filter(spark):
         "http://example.org/",                   # domain catch-all, apex
         "http://any.net/p?utm_source=x",         # global DenyPathQuery
         "http://any.net/p?x=1",                  # accepted
+        "http://my_host.example.com/private/x",  # underscore host DenyPath
+        "http://my_host.example.com/x",          # accepted
         None,
     ]
     df = spark.createDataFrame([(u,) for u in urls], "url string")
@@ -132,6 +138,8 @@ def test_fast_filter(spark):
         "http://example.org/": False,
         "http://any.net/p?utm_source=x": False,
         "http://any.net/p?x=1": True,
+        "http://my_host.example.com/private/x": False,
+        "http://my_host.example.com/x": True,
     }
     for u, want in expect.items():
         assert got[u] == want, u

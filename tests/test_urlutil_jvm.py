@@ -1,8 +1,8 @@
 """JVM host/domain expressions (`host_expr` / `domain_expr`) must agree
 exactly with their per-string Python twins (`get_host` / `get_domain`) —
-these now feed the generate partition key, the fetch queue key, dedup
-keys and webgraph/indexer domains, so any divergence re-keys politeness
-or dedup groups silently."""
+these now feed the generate partition key, the fetch queue key and
+robots lookup, dedup keys and webgraph/indexer domains, so any
+divergence re-keys politeness or dedup groups silently."""
 
 import pytest
 from pyspark.sql import functions as F
@@ -13,6 +13,7 @@ from nutch_spark.urls.urlutil import (
     get_host,
     get_tld,
     host_expr,
+    host_udf,
     tld_expr,
 )
 
@@ -48,6 +49,8 @@ URLS = [
     None,
     "http://a.com/x\n",                        # newline in path
     "http://ünïcode.example.com/x",            # non-ASCII host
+    "http://[::1]/x",                          # IPv6 literal keeps brackets
+    "http://[::1]:8080/x",                     # IPv6 literal + port
 ]
 
 # domain_expr also accepts bare hosts (no ://) like get_domain does
@@ -75,39 +78,38 @@ HASH_STRINGS = [
 
 
 def test_hash_exprs_match_python_twins(spark):
-    """nutch_url_hash32_expr / java_hashcode_expr are the pure-JVM
-    fetchlist interleave + URLPartitioner hashes; they must reproduce
-    the reference byte/code-unit semantics on every UTF-8 width class,
-    or the outlink-follow waves' issue order and queue layout silently
-    diverge from the reference."""
-    from nutch_spark.urls.urlutil import (
-        java_hashcode_expr,
-        java_string_hashcode,
-        nutch_url_hash32,
-        nutch_url_hash32_expr,
-    )
+    """java_hashcode_expr is the pure-JVM URLPartitioner hash; it must
+    reproduce the reference code-unit semantics on every UTF-8 width
+    class, or the outlink-follow waves' queue layout silently diverges
+    from the reference."""
+    from nutch_spark.urls.urlutil import java_hashcode_expr, java_string_hashcode
 
     df = spark.createDataFrame([(v,) for v in HASH_STRINGS + [None]], "s string")
-    rows = df.select(
-        "s",
-        nutch_url_hash32_expr(F.col("s")).alias("nh"),
-        java_hashcode_expr(F.col("s")).alias("jh"),
-    ).collect()
+    rows = df.select("s", java_hashcode_expr(F.col("s")).alias("jh")).collect()
     for r in rows:
         if r["s"] is None:
-            # null propagates through the hash exprs
-            assert r["nh"] is None and r["jh"] is None
+            # null propagates through the hash expr
+            assert r["jh"] is None
             continue
-        assert r["nh"] == nutch_url_hash32(r["s"]), repr(r["s"])
         assert r["jh"] == java_string_hashcode(r["s"]), repr(r["s"])
     assert java_string_hashcode("abc") == 96354  # pin vs real Java
 
 
 def test_host_expr_matches_get_host(spark):
+    """host_expr (every JVM host key) and host_udf (generate's Arrow
+    path) are both exact twins of get_host."""
     df = spark.createDataFrame([(u,) for u in URLS], "url string")
-    rows = df.select("url", host_expr(F.col("url")).alias("h")).collect()
+    rows = df.select(
+        "url",
+        host_expr(F.col("url")).alias("h"),
+        host_udf()(F.col("url")).alias("hu"),
+    ).collect()
     for r in rows:
         assert r["h"] == get_host(r["url"]), repr(r["url"])
+        assert r["hu"] == get_host(r["url"]), repr(r["url"])
+    # an IPv6 literal is one host, brackets included (URL.getHost)
+    for u in ("http://[::1]/x", "http://[::1]:8080/x"):
+        assert get_host(u) == "[::1]"
 
 
 @pytest.mark.parametrize("values", [URLS, HOSTS])

@@ -322,7 +322,7 @@ def cmd_indexchecker(args) -> int:
     from nutch_spark.operators.feed import strip_tags
     from nutch_spark.operators.index_filters import detect_mime_by_url
     from nutch_spark.ml.text import quality_score
-    from nutch_spark.urls.urlutil import host_col
+    from nutch_spark.urls.urlutil import host_expr
 
     spark = _spark()
     raw = open(args.file, "rb").read().decode("utf-8", "replace")
@@ -332,7 +332,7 @@ def cmd_indexchecker(args) -> int:
     ).otherwise(F.col("content"))
     row = df.select(
         F.col("url").alias("id"),
-        host_col(F.col("url")).alias("host"),
+        host_expr(F.col("url")).alias("host"),
         detect_mime_by_url(F.col("url")).alias("type"),
         F.substring(text, 1, 100).alias("title"),
         F.substring(text, 1, 10000).alias("content"),

@@ -30,6 +30,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from nutch_spark.config import NutchConfig
+from nutch_spark.schema import DATUM_COLS, EMPTY_META_EXPR, STATUS_INJECTED, new_datum
 
 # injected clocks (epoch ms) — SURVEY §2.8: time is an explicit parameter
 FT_BASE = 1_700_000_000_000  # crawldb fetch_time base
@@ -103,19 +104,16 @@ def _crawldb(docs: DataFrame, extra: tuple[str, ...] = ()) -> DataFrame:
         .when(s < 8, 2)        # db_fetched
         .when(s == 8, 6)       # db_notmodified
         .otherwise(3)          # db_gone
-    ).cast("int")
+    )
     return docs.select(
-        _url_col().alias("url"),
-        status.alias("status"),
-        (F.lit(FT_BASE) + (F.col("doc_id") % 1000) * 3600000).cast("long").alias("fetch_time"),
-        (F.col("doc_id") % 3).cast("int").alias("retries"),
-        F.lit(2592000).cast("int").alias("fetch_interval"),
-        ((F.col("doc_id") % 64) / 4.0).cast("float").alias("score"),
-        F.when((s >= 5) & (s <= 8), F.md5("text")).alias("signature"),
-        F.lit(0).cast("long").alias("modified_time"),
-        F.expr("map()").cast("map<string,string>").alias("metadata"),
-        F.lit(None).cast("long").alias("gen_time"),
-        F.lit(None).cast("string").alias("repr_url"),
+        *new_datum(
+            _url_col(), status,
+            F.lit(FT_BASE) + (F.col("doc_id") % 1000) * 3600000,
+            retries=F.col("doc_id") % 3,
+            fetch_interval=2592000,
+            score=(F.col("doc_id") % 64) / 4.0,
+            signature=F.when((s >= 5) & (s <= 8), F.md5("text")),
+        ),
         *[F.col(c) for c in extra],
     )
 
@@ -142,31 +140,6 @@ crawldb AS (
 )
 """
 
-_DATUM_SELECT = [
-    "url", "status", "fetch_time", "retries", "fetch_interval", "score",
-    "signature", "modified_time", "metadata", "gen_time", "repr_url",
-]
-
-
-def _empty_meta():
-    return F.expr("map()").cast("map<string,string>")
-
-
-def _seg_row(df, status, *, sig, ft, retries, iv, score):
-    return df.select(
-        _url_col().alias("url"),
-        F.lit(status).cast("int").alias("status"),
-        F.lit(ft).cast("long").alias("fetch_time"),
-        retries.cast("int").alias("retries"),
-        F.lit(iv).cast("int").alias("fetch_interval"),
-        score.cast("float").alias("score"),
-        sig.alias("signature"),
-        F.lit(0).cast("long").alias("modified_time"),
-        _empty_meta().alias("metadata"),
-        F.lit(None).cast("long").alias("gen_time"),
-        F.lit(None).cast("string").alias("repr_url"),
-    )
-
 
 def _updatedb_inputs(docs: DataFrame):
     """THE shared (old crawldb, segment rows) fixture for the updatedb
@@ -177,27 +150,21 @@ def _updatedb_inputs(docs: DataFrame):
     seg = docs.filter(F.col("doc_id") % 5 != 4)
     k = F.col("doc_id") % 4
     score = (F.col("doc_id") % 64) / 4.0
-    succ = _seg_row(
-        seg.filter(k == 0), 0x21,
-        sig=F.when(F.col("doc_id") % 8 == 0, F.md5("text")).otherwise(
+    succ = seg.filter(k == 0).select(*new_datum(
+        _url_col(), 0x21, FETCH_TS, fetch_interval=2592000, score=score,
+        signature=F.when(F.col("doc_id") % 8 == 0, F.md5("text")).otherwise(
             F.md5(F.concat(F.col("text"), F.lit("x")))),
-        ft=FETCH_TS, retries=F.lit(0), iv=2592000, score=score,
-    )
-    gone = _seg_row(
-        seg.filter(k == 1), 0x25,
-        sig=F.lit(None).cast("string"), ft=FETCH_TS, retries=F.lit(0),
-        iv=2592000, score=score,
-    )
-    retry = _seg_row(
-        seg.filter(k == 2), 0x22,
-        sig=F.lit(None).cast("string"), ft=FETCH_TS,
-        retries=(F.col("doc_id") % 3), iv=2592000, score=score,
-    )
-    linked = _seg_row(
-        seg.filter(k == 3), 0x43,
-        sig=F.lit(None).cast("string"), ft=FETCH_TS, retries=F.lit(0),
-        iv=2592000, score=F.lit(0.25),
-    )
+    ))
+    gone = seg.filter(k == 1).select(*new_datum(
+        _url_col(), 0x25, FETCH_TS, fetch_interval=2592000, score=score,
+    ))
+    retry = seg.filter(k == 2).select(*new_datum(
+        _url_col(), 0x22, FETCH_TS, retries=F.col("doc_id") % 3,
+        fetch_interval=2592000, score=score,
+    ))
+    linked = seg.filter(k == 3).select(*new_datum(
+        _url_col(), 0x43, FETCH_TS, fetch_interval=2592000, score=0.25,
+    ))
     seg_rows = (
         succ.unionByName(gone).unionByName(retry)
         .unionByName(linked).unionByName(linked)
@@ -215,18 +182,10 @@ def q_inject(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     docs = _docs(spark, sf_dir)
     old = _crawldb(docs.filter(F.col("doc_id") % 2 == 0))
-    seeds = docs.filter(F.col("doc_id") % 3 == 0).select(
-        _url_col().alias("url"),
-        F.lit(UPD_NOW).cast("long").alias("fetch_time"),
-        F.lit(0).cast("int").alias("retries"),
-        F.lit(2592000).cast("int").alias("fetch_interval"),
-        F.lit(2.0).cast("float").alias("score"),
-        F.lit(None).cast("string").alias("signature"),
-        F.lit(0).cast("long").alias("modified_time"),
-        _empty_meta().alias("metadata"),
-        F.lit(None).cast("long").alias("gen_time"),
-        F.lit(None).cast("string").alias("repr_url"),
-    )
+    # parse_seeds' shape: no status column (the merge stamps it)
+    seeds = docs.filter(F.col("doc_id") % 3 == 0).select(*new_datum(
+        _url_col(), STATUS_INJECTED, UPD_NOW, fetch_interval=2592000, score=2.0,
+    )).drop("status")
     out = inject(old, seeds, CFG)
     return out.select(
         "url", "status", "fetch_time", "retries", "fetch_interval",
@@ -274,13 +233,12 @@ def q_updatedb_adaptive(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     docs = _docs(spark, sf_dir)
     old = _crawldb(docs.filter(F.col("doc_id") % 3 != 0))
-    seg = _seg_row(
-        docs, 0x21,
-        sig=F.when(F.col("doc_id") % 2 == 0, F.md5("text")).otherwise(
-            F.md5(F.concat(F.col("text"), F.lit("x")))),
-        ft=FETCH_TS, retries=F.lit(0), iv=2592000,
+    seg = docs.select(*new_datum(
+        _url_col(), 0x21, FETCH_TS, fetch_interval=2592000,
         score=(F.col("doc_id") % 64) / 4.0,
-    )
+        signature=F.when(F.col("doc_id") % 2 == 0, F.md5("text")).otherwise(
+            F.md5(F.concat(F.col("text"), F.lit("x")))),
+    ))
     out = updatedb(old, seg, cfg, UPD_NOW)
     return out.select("url", "status", "fetch_time", "fetch_interval", "signature")
 
@@ -1296,22 +1254,14 @@ def q_depth_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
     cfg = replace(CFG, scoring_depth_enabled=True, scoring_depth_max=3)
     docs = _docs(spark, sf_dir).select("doc_id")
     depth = (F.lit(1) + ((F.col("doc_id") % 15) / 5).cast("int")).cast("int")
-    parents = docs.filter(F.col("doc_id") % 5 == 0).select(
-        _url_col().alias("url"),
-        F.lit(2).cast("int").alias("status"),
-        F.lit(FT_BASE).cast("long").alias("fetch_time"),
-        F.lit(0).cast("int").alias("retries"),
-        F.lit(2592000).cast("int").alias("fetch_interval"),
-        ((F.col("doc_id") % 64) / 4.0).cast("float").alias("score"),
-        F.lit(None).cast("string").alias("signature"),
-        F.lit(0).cast("long").alias("modified_time"),
-        F.map_from_arrays(
+    parents = docs.filter(F.col("doc_id") % 5 == 0).select(*new_datum(
+        _url_col(), 2, FT_BASE, fetch_interval=2592000,
+        score=(F.col("doc_id") % 64) / 4.0,
+        metadata=F.map_from_arrays(
             F.array(F.lit(DEPTH_KEY), F.lit(MAX_DEPTH_KEY)),
             F.array(depth.cast("string"), F.lit("3")),
-        ).alias("metadata"),
-        F.lit(None).cast("long").alias("gen_time"),
-        F.lit(None).cast("string").alias("repr_url"),
-    )
+        ),
+    ))
     t = docs.filter((F.col("doc_id") % 5).isin(1, 2))
     lo = t.select(F.col("doc_id").alias("t"),
                   (F.col("doc_id") - F.col("doc_id") % 5).alias("p"))
@@ -1321,22 +1271,15 @@ def q_depth_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).join(docs.select(F.col("doc_id").alias("p")), "p", "left_semi")
     pairs = lo.unionByName(hi)
     link_rows = pairs.select(
-        _url_col(F.col("t")).alias("url"),
-        F.lit(0x43).cast("int").alias("status"),
-        F.lit(FETCH_TS).cast("long").alias("fetch_time"),
-        F.lit(0).cast("int").alias("retries"),
-        F.lit(2592000).cast("int").alias("fetch_interval"),
-        ((F.col("p") % 16) / 4.0 + 0.25).cast("float").alias("score"),
-        F.lit(None).cast("string").alias("signature"),
-        F.lit(0).cast("long").alias("modified_time"),
-        _empty_meta().alias("metadata"),
-        F.lit(None).cast("long").alias("gen_time"),
-        F.lit(None).cast("string").alias("repr_url"),
+        *new_datum(
+            _url_col(F.col("t")), 0x43, FETCH_TS, fetch_interval=2592000,
+            score=(F.col("p") % 16) / 4.0 + 0.25,
+        ),
         F.lit(None).cast("string").alias("anchor"),
         _url_col(F.col("p")).alias("from_url"),
     )
     gated = depth_gate_outlinks(link_rows, parents, cfg)
-    merged = updatedb(parents, gated.select(*_DATUM_SELECT), cfg, UPD_NOW)
+    merged = updatedb(parents, gated.select(*DATUM_COLS), cfg, UPD_NOW)
     patched = patch_new_url_depth(merged, parents, gated, cfg)
     return patched.select(
         "url", "status", "fetch_time", "retries", "fetch_interval",
@@ -1468,37 +1411,32 @@ def _web(spark: SparkSession, sf_dir: str, n_hosts: int = 20):
 
 
 def q_crawl_cycle(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The flagship: two full crawl cycles (bin/crawl macro-loop,
-    SURVEY §3.1) over the parquet-derived web; returns the final
-    CrawlDb. The output omits fetch_time, so the DuckDB oracle replays
-    the whole status machine / OPIC link graph / schedule evolution
-    over integer doc ids without needing the politeness clock."""
-    from nutch_spark.operators.fetchsim import fetch, fetched_content
-    from nutch_spark.operators.generate import generate
-    from nutch_spark.operators.inject import inject_full
-    from nutch_spark.operators.parse import parse
-    from nutch_spark.operators.updatedb import updatedb
+    """The flagship: inject and two production crawl cycles
+    (``Crawler.run_cycle``, the bin/crawl macro-loop, SURVEY §3.1) over
+    the parquet-derived web, committed to a throwaway SnapshotCatalog;
+    returns the final CrawlDb. The output omits fetch_time, so the
+    DuckDB oracle replays the whole status machine / OPIC link graph /
+    schedule evolution over integer doc ids without needing the
+    politeness clock."""
+    import shutil
+    import tempfile
+
+    from nutch_spark.catalog import SnapshotCatalog
+    from nutch_spark.pipeline.crawl_loop import CRAWLDB, Crawler
 
     cfg = replace(CFG, fetch_partitions=8)
     docs, robots, outcomes, seeds = _web(spark, sf_dir)
-    db = inject_full(spark, None, seeds, cfg, GEN_NOW)
-    now = GEN_NOW
-    for _ in range(2):
-        fl = generate(db, cfg, now, top_n=200, num_lists=8)
-        crawl_fetch, redirect_links = fetch(fl, robots, outcomes, cfg, now)
-        content = fetched_content(crawl_fetch, docs)
-        parsed = parse(content, cfg)
-        seg = (
-            crawl_fetch.select(*_DATUM_SELECT)
-            .unionByName(parsed["crawl_parse"].select(*_DATUM_SELECT))
-            .unionByName(redirect_links.select(*_DATUM_SELECT))
-        )
-        db = updatedb(db, seg, cfg, now + 3_600_000)
-        # flatten lineage between cycles (state hand-off, as the real
-        # loop does through catalog snapshots) — without this, cycle 2
-        # re-executes cycle 1's whole plan
-        db = db.localCheckpoint(eager=True)
-        now += 7_200_000
+    tmp = tempfile.mkdtemp(prefix="crawl_cycle_")
+    try:
+        catalog = SnapshotCatalog(tmp)
+        crawler = Crawler(spark, catalog, cfg, docs, robots, outcomes)
+        crawler.inject(seeds, GEN_NOW)
+        for cycle_id, now in enumerate((GEN_NOW, GEN_NOW + 7_200_000), 1):
+            crawler.run_cycle(cycle_id, now, top_n=200)
+        # an in-memory copy, so the warehouse can go before the caller runs
+        db = catalog.read(spark, CRAWLDB).localCheckpoint(eager=True)
+    finally:
+        shutil.rmtree(tmp, ignore_errors=True)
     return db.select(
         "url", "status", "retries", "fetch_interval",
         F.col("score").cast("double").alias("score"),
@@ -2090,7 +2028,7 @@ def q_metadata_scoring(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.create_map(
                 F.lit("campaign"), F.concat(F.lit("c"), (d % 5).cast("string"))
             ),
-        ).otherwise(_empty_meta()).alias("metadata"),
+        ).otherwise(F.expr(EMPTY_META_EXPR)).alias("metadata"),
         F.create_map(
             F.lit("ptag"), F.concat(F.lit("p"), (d % 3).cast("string"))
         ).alias("parse_metadata"),
@@ -2103,7 +2041,7 @@ def q_metadata_scoring(spark: SparkSession, sf_dir: str) -> DataFrame:
         _url_col(tgt).alias("url"),
         F.lit(STATUS_LINKED).cast("int").alias("status"),
         _url_col().alias("from_url"),
-        _empty_meta().alias("metadata"),
+        F.expr(EMPTY_META_EXPR).alias("metadata"),
     )
     stamped = metadata_to_outlinks(
         link_rows,

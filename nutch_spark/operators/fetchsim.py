@@ -42,6 +42,7 @@ from nutch_spark.schema import (
     STATUS_FETCH_RETRY,
     STATUS_FETCH_SUCCESS,
     STATUS_LINKED,
+    new_datum,
 )
 from nutch_spark.urls.urlutil import choose_repr, host_expr
 
@@ -350,17 +351,11 @@ def fetch(
     )
     is_temp = F.col("fstatus") == STATUS_FETCH_REDIR_TEMP
     redirect_links = redirs.select(
-        F.col("redirect_to").alias("url"),
-        F.lit(STATUS_LINKED).cast("int").alias("status"),
-        F.col("fetch_start").cast("long").alias("fetch_time"),
-        F.lit(0).alias("retries"),
-        F.col("fetch_interval").cast("int").alias("fetch_interval"),
-        F.lit(0.0).cast("float").alias("score"),
-        F.lit(None).cast("string").alias("signature"),
-        F.lit(0).cast("long").alias("modified_time"),
-        F.expr(_EMPTY_MAP).alias("metadata"),
-        F.lit(None).cast("long").alias("gen_time"),
-        _choose_repr_udf()(F.col("url"), F.col("redirect_to"), is_temp).alias("repr_url"),
+        *new_datum(
+            F.col("redirect_to"), STATUS_LINKED, F.col("fetch_start"),
+            fetch_interval=F.col("fetch_interval"),
+            repr_url=_choose_repr_udf()(F.col("url"), F.col("redirect_to"), is_temp),
+        ),
         # redirect rows are never gated; part_id lets the cross-wave
         # killer drop redirects of killed sources (fetch_time IS the
         # source's fetch_start)

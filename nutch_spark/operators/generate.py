@@ -10,7 +10,7 @@ G1 select (SelectorMapper :218-300): chained column filters —
   - ``shouldFetch`` (fetchTime <= curTime with far-future clamp,
     AbstractFetchSchedule.java:195-210);
   - ``_ngt_`` generate-delay re-block (:247-255, crawl.gen.delay=7d);
-  - Spark-SQL expr filter (behavioral substitution for JEXL, T14);
+  - ``generate.expr`` JEXL filter, compiled to a JVM Column;
   - restrict-status / min score / max interval (:274-291);
   - sort value = score * 1.0f (OPIC generatorSortValue).
 
@@ -57,7 +57,6 @@ from nutch_spark.urls.urlutil import (
     domain_expr,
     domain_udf,
     host_expr,
-    host_udf,
     partition_hash_udf,
     url_hash32_udf,
 )
@@ -69,17 +68,14 @@ def select_eligible(
     cur_time: int,
     *,
     url_filter_rules: list[str] | None = None,
-    expr: str | None = None,
     jexl: str | None = None,
 ) -> DataFrame:
     """G1: eligibility filters + sort value; returns datums + ``sort`` col.
 
-    ``expr`` takes a Spark-SQL boolean (the repo's long-standing T14
-    substitution); ``jexl`` takes the reference's own ``generate.expr``
-    JEXL syntax (Generator.java evaluates it via
-    ``datum.execute(expr, url)``, CrawlDatum.java:569-612) compiled to
-    a JVM Column over the same variable names — see
-    :mod:`nutch_spark.jexl`."""
+    ``jexl`` takes the reference's own ``generate.expr`` JEXL syntax
+    (Generator.java evaluates it via ``datum.execute(expr, url)``,
+    CrawlDatum.java:569-612) compiled to a JVM Column over the same
+    variable names — see :mod:`nutch_spark.jexl`."""
     df = crawldb
     if url_filter_rules is not None:
         df = df.filter(url_filter_cond(F.col("url"), url_filter_rules))
@@ -107,8 +103,6 @@ def select_eligible(
         df = df.withColumn(
             "sort", depth_sort_value(F.col("sort"), F.col("metadata"), cfg)
         )
-    if expr:
-        df = df.filter(F.expr(expr))
     if jexl:
         from nutch_spark.jexl import crawldatum_resolver, jexl_filter_column
 
@@ -132,19 +126,17 @@ def select_eligible(
 
 
 def _host_key(cfg: NutchConfig) -> F.Column:
-    # HOT-PATH NOTE (A/B at 20M urls, local[4], BENCH/MEASUREMENT_LOG.md
-    # 2026-08-18): the pandas twin beats host_expr here — 37s vs 52s for
-    # the whole generate stage. host_key feeds .filter(isNotNull) plus
-    # two window keys; Catalyst clones the inlined regexp_extract through
-    # the pushed-down filter (and nullif() doubles it again per CASE
-    # expansion), so the "codegen" regex runs up to 4x per row, while an
-    # ArrowEvalPython node is a cloning barrier: one C-level pandas regex
-    # pass per batch, materialized once. host_expr/domain_expr remain the
-    # right choice where the value is consumed once (fetch queue key,
-    # dedup/webgraph/stats domains) or feeds a pandas UDF input.
+    # HOT-PATH NOTE (BENCH/MEASUREMENT_LOG.md 2026-10-18): the host key
+    # is host_expr, as everywhere else. A deterministic Arrow UDF here is
+    # no cloning barrier: the pushed-down isNotNull filter gets its own
+    # ArrowEvalPython node, so the pandas host regex ran twice per row,
+    # and generate over 4M rows took 14.2 s against host_expr's 11.0 s
+    # (medians). The domain key stays the Arrow domain_udf (domain_expr's
+    # when-chain over split labels is 3.4x slower at 4M rows), flagged
+    # nondeterministic so it is evaluated once (see its docstring).
     if cfg.generate_count_mode == "domain" and cfg.generate_max_count != -1:
         return F.lower(domain_udf()(F.col("url")))
-    return F.lower(host_udf()(F.col("url")))
+    return host_expr(F.col("url"))
 
 
 def apply_quota_windowed(
@@ -313,7 +305,6 @@ def generate(
     max_num_segments: int = 1,
     num_lists: int | None = None,
     url_filter_rules: list[str] | None = None,
-    expr: str | None = None,
     jexl: str | None = None,
     hostdb: DataFrame | None = None,
     max_count_expr: str | None = None,
@@ -337,7 +328,7 @@ def generate(
 
     df = select_eligible(
         crawldb, cfg, cur_time,
-        url_filter_rules=url_filter_rules, expr=expr, jexl=jexl,
+        url_filter_rules=url_filter_rules, jexl=jexl,
     )
     df = df.withColumn("host_key", _host_key(cfg)).filter(F.col("host_key").isNotNull())
 

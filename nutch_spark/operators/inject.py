@@ -28,7 +28,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from nutch_spark.config import NutchConfig
-from nutch_spark.schema import META_FIXED_INTERVAL, STATUS_DB_UNFETCHED, crawldb_schema
+from nutch_spark.schema import DATUM_COLS, META_FIXED_INTERVAL, STATUS_DB_UNFETCHED
 from nutch_spark.urls.filters import url_filter_cond
 from nutch_spark.urls.normalizer import normalize_col
 
@@ -136,15 +136,7 @@ def inject(
         return s.select(
             "url",
             F.lit(STATUS_DB_UNFETCHED).alias("status"),
-            "inj.fetch_time",
-            "inj.retries",
-            "inj.fetch_interval",
-            "inj.score",
-            "inj.signature",
-            "inj.modified_time",
-            "inj.metadata",
-            "inj.gen_time",
-            "inj.repr_url",
+            *[f"inj.{c}" for c in DATUM_COLS[2:]],
         )
 
     o = crawldb.select(

@@ -41,12 +41,11 @@ from nutch_spark.schema import (
     STATUS_FETCH_SUCCESS,
     STATUS_LINKED,
     STATUS_SIGNATURE,
+    new_datum,
 )
 from nutch_spark.urls.filters import url_filter_cond
 from nutch_spark.urls.normalizer import normalize_col
 from nutch_spark.urls.urlutil import host_expr
-
-from nutch_spark.schema import EMPTY_META_EXPR as _EMPTY_MAP
 
 
 def span_payload(spans: Column) -> Column:
@@ -292,17 +291,10 @@ def parse(
 
     # ---- crawl_parse rows ----
     linked = outlinks.select(
-        F.col("to_url").alias("url"),
-        F.lit(STATUS_LINKED).cast("int").alias("status"),
-        F.col("fetch_time").cast("long").alias("fetch_time"),
-        F.lit(0).alias("retries"),
-        F.lit(cfg.db_fetch_interval_default).alias("fetch_interval"),
-        F.col("link_score").alias("score"),
-        F.lit(None).cast("string").alias("signature"),
-        F.lit(0).cast("long").alias("modified_time"),
-        F.expr(_EMPTY_MAP).alias("metadata"),
-        F.lit(None).cast("long").alias("gen_time"),
-        F.lit(None).cast("string").alias("repr_url"),
+        *new_datum(
+            F.col("to_url"), STATUS_LINKED, F.col("fetch_time"),
+            fetch_interval=cfg.db_fetch_interval_default, score=F.col("link_score"),
+        ),
         F.col("anchor"),
         F.col("url").alias("from_url"),
     )
@@ -314,17 +306,10 @@ def parse(
     # because Generate+HOF-filter breaks whole-stage codegen on the
     # all-docs path. Scans are the cheap resource here; codegen isn't.
     sig_rows = c.select(
-        "url",
-        F.lit(STATUS_SIGNATURE).cast("int").alias("status"),
-        F.col("fetch_time").cast("long").alias("fetch_time"),
-        F.lit(0).alias("retries"),
-        F.lit(0).alias("fetch_interval"),
-        F.lit(0.0).cast("float").alias("score"),
-        F.col("signature"),
-        F.lit(0).cast("long").alias("modified_time"),
-        F.expr(_EMPTY_MAP).alias("metadata"),
-        F.lit(None).cast("long").alias("gen_time"),
-        F.lit(None).cast("string").alias("repr_url"),
+        *new_datum(
+            F.col("url"), STATUS_SIGNATURE, F.col("fetch_time"),
+            signature=F.col("signature"),
+        ),
         F.lit(None).cast("string").alias("anchor"),
         F.lit(None).cast("string").alias("from_url"),
     )
@@ -332,17 +317,9 @@ def parse(
     # fork deviation: non-canonical parse emits a synthetic fetch-success
     # datum carrying the fetch time (ParseOutputFormat.java:365-377)
     noncanon = c.filter(~F.col("is_canonical")).select(
-        "url",
-        F.lit(STATUS_FETCH_SUCCESS).cast("int").alias("status"),
-        F.col("fetch_time").cast("long").alias("fetch_time"),
-        F.lit(0).alias("retries"),
-        F.lit(0).alias("fetch_interval"),
-        F.col("score").cast("float").alias("score"),
-        F.lit(None).cast("string").alias("signature"),
-        F.lit(0).cast("long").alias("modified_time"),
-        F.expr(_EMPTY_MAP).alias("metadata"),
-        F.lit(None).cast("long").alias("gen_time"),
-        F.lit(None).cast("string").alias("repr_url"),
+        *new_datum(
+            F.col("url"), STATUS_FETCH_SUCCESS, F.col("fetch_time"), score=F.col("score"),
+        ),
         F.lit(None).cast("string").alias("anchor"),
         F.lit(None).cast("string").alias("from_url"),
     )
@@ -379,17 +356,10 @@ def parse(
         F.col("refresh_time") < PERM_REFRESH_TIME,
     )
     refresh_links = refresh.select(
-        F.col("to_url").alias("url"),
-        F.lit(STATUS_LINKED).cast("int").alias("status"),
-        F.col("fetch_time").cast("long").alias("fetch_time"),
-        F.lit(0).alias("retries"),
-        F.lit(0).alias("fetch_interval"),
-        F.lit(0.0).cast("float").alias("score"),
-        F.lit(None).cast("string").alias("signature"),
-        F.lit(0).cast("long").alias("modified_time"),
-        F.expr(_EMPTY_MAP).alias("metadata"),
-        F.lit(None).cast("long").alias("gen_time"),
-        F.when(repr_u != F.col("to_url"), repr_u).alias("repr_url"),
+        *new_datum(
+            F.col("to_url"), STATUS_LINKED, F.col("fetch_time"),
+            repr_url=F.when(repr_u != F.col("to_url"), repr_u),
+        ),
         F.lit(None).cast("string").alias("anchor"),
         F.col("from_url"),
     )

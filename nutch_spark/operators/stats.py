@@ -67,13 +67,11 @@ def top_n(crawldb: DataFrame, n: int, min_score: float | None = None) -> DataFra
 
 def dump(crawldb: DataFrame, *, status: int | None = None, regex: str | None = None,
          min_score: float | None = None, max_score: float | None = None,
-         min_retry: int | None = None, expr: str | None = None,
-         jexl: str | None = None) -> DataFrame:
+         min_retry: int | None = None, jexl: str | None = None) -> DataFrame:
     """readdb -dump with the reference's filters
     (CrawlDbReader.processDumpJob, :834-899: status/regex/retry/
-    score-min/score-max/expr). ``expr`` is a Spark-SQL boolean (T14
-    substitution); ``jexl`` is the reference's own ``-expr`` JEXL
-    syntax compiled to a JVM Column (:mod:`nutch_spark.jexl`,
+    score-min/score-max/expr). ``jexl`` is the reference's ``-expr``
+    JEXL syntax compiled to a JVM Column (:mod:`nutch_spark.jexl`,
     CrawlDatum.execute context)."""
     df = crawldb
     if status is not None:
@@ -86,8 +84,6 @@ def dump(crawldb: DataFrame, *, status: int | None = None, regex: str | None = N
         df = df.filter(F.col("score") <= F.lit(max_score).cast("float"))
     if min_retry is not None:
         df = df.filter(F.col("retries") >= min_retry)
-    if expr is not None:
-        df = df.filter(F.expr(expr))
     if jexl is not None:
         from nutch_spark.jexl import crawldatum_resolver, jexl_filter_column
 

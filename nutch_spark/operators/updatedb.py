@@ -39,6 +39,7 @@ from pyspark.sql import functions as F
 from nutch_spark.config import NutchConfig
 from nutch_spark.operators import schedules as S
 from nutch_spark.schema import (
+    DATUM_COLS,
     META_GENERATE_TIME,
     STATUS_DB_FETCHED,
     STATUS_DB_GONE,
@@ -55,27 +56,16 @@ from nutch_spark.schema import (
     STATUS_LINKED,
     STATUS_PARSE_META,
     STATUS_SIGNATURE,
+    new_datum,
 )
 
 from nutch_spark.schema import EMPTY_META_EXPR as _EMPTY_MAP
 from nutch_spark.urls.urlseen import fingerprint_split
 
-_DATUM_COLS = [
-    "status",
-    "fetch_time",
-    "retries",
-    "fetch_interval",
-    "score",
-    "signature",
-    "modified_time",
-    "metadata",
-    "gen_time",
-    "repr_url",
-]
-
 
 def _datum_struct() -> Column:
-    return F.struct(*[F.col(c) for c in _DATUM_COLS])
+    # the datum minus its url (the grouping key)
+    return F.struct(*DATUM_COLS[1:])
 
 
 def updatedb(
@@ -94,9 +84,9 @@ def updatedb(
     discovered URLs (replaces System.currentTimeMillis,
     AbstractFetchSchedule.java:75-76).
     """
-    seg = segment_rows.select("url", *_DATUM_COLS)
+    seg = segment_rows.select(*DATUM_COLS)
     if crawldb is not None:
-        both = crawldb.select("url", *_DATUM_COLS).unionByName(seg)
+        both = crawldb.select(*DATUM_COLS).unionByName(seg)
     else:
         both = seg
 
@@ -149,18 +139,14 @@ def updatedb(
         F.when(has_real_fetch, F.col("fetch")).otherwise(
             F.when(
                 F.size("links") > 0,
-                F.struct(
-                    F.lit(STATUS_LINKED).alias("status"),
-                    top_link["fetch_time"].alias("fetch_time"),
-                    top_link["retries"].alias("retries"),
-                    top_link["fetch_interval"].alias("fetch_interval"),
-                    top_link["score"].alias("score"),
-                    F.lit(None).cast("string").alias("signature"),
-                    top_link["modified_time"].alias("modified_time"),
-                    F.expr(_EMPTY_MAP).alias("metadata"),
-                    F.lit(None).cast("long").alias("gen_time"),
-                    F.lit(None).cast("string").alias("repr_url"),
-                ),
+                # minus its url, as _datum_struct
+                F.struct(*new_datum(
+                    F.col("url"), STATUS_LINKED, top_link["fetch_time"],
+                    retries=top_link["retries"],
+                    fetch_interval=top_link["fetch_interval"],
+                    score=top_link["score"],
+                    modified_time=top_link["modified_time"],
+                )[1:]),
             )
         ),
     )

@@ -46,7 +46,7 @@ from nutch_spark.operators.generate import generate, mark_generated
 from nutch_spark.operators.inject import inject_full
 from nutch_spark.operators.parse import parse
 from nutch_spark.operators.updatedb import updatedb_incremental
-from nutch_spark.schema import STATUS_NAMES
+from nutch_spark.schema import DATUM_COLS, STATUS_NAMES
 
 CRAWLDB = "crawldb"
 
@@ -55,10 +55,6 @@ CRAWLDB = "crawldb"
 _DB_STATUS_CODES = tuple(range(0x01, 0x09))
 # fetch statuses (STATUS_FETCH_*) for the fetcher counter table
 _FETCH_STATUS_CODES = tuple(range(0x21, 0x27))
-_DATUM_COLS = (
-    "url", "status", "fetch_time", "retries", "fetch_interval", "score",
-    "signature", "modified_time", "metadata", "gen_time", "repr_url",
-)
 # the segment tables updatedb merges into the CrawlDb
 _MERGE_TABLES = ("crawl_fetch", "crawl_parse", "crawl_redirect")
 
@@ -221,7 +217,7 @@ class Crawler:
             # redirect-target datums: the reference writes them into
             # crawl_fetch, but here every crawl_fetch row is a fetched
             # fetchlist entry, so they get a table of their own
-            "crawl_redirect": redirect_links.select(*_DATUM_COLS),
+            "crawl_redirect": redirect_links.select(*DATUM_COLS),
             "parse_text": parsed["parse_text"],
             "parse_data": parsed["parse_data"],
             # per-doc meta directives (robots/noindex/base/refresh): the
@@ -250,7 +246,7 @@ class Crawler:
         segment_rows = reduce(DataFrame.unionByName, [
             self.catalog.read(
                 self.spark, f"{seg}_{name}", segment_snapshots[f"{seg}_{name}"]
-            ).select(*_DATUM_COLS)
+            ).select(*DATUM_COLS)
             for name in _MERGE_TABLES
         ])
 

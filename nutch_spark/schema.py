@@ -1,4 +1,6 @@
-"""CrawlDatum status space + table schemas.
+"""CrawlDatum status space + table schemas, and the one owner of the
+datum format: ``crawldb_schema()`` (columns and types), ``DATUM_COLS``
+and ``new_datum`` (the values a new datum starts with).
 
 Status byte ranges re-expressed from the reference
 (``crawl/CrawlDatum.java:63-105``); range predicates mirror
@@ -17,6 +19,8 @@ to compare across engines and to group on; MD5 is the default signature
 
 from __future__ import annotations
 
+from pyspark.sql import Column
+from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 # --- DB statuses (persisted in CrawlDb), CrawlDatum.java:63-78 ---
@@ -107,20 +111,45 @@ def crawldb_schema() -> T.StructType:
     )
 
 
-def segment_datum_schema() -> T.StructType:
-    """crawl_fetch / crawl_parse rows: a crawldb row + segment_id + anchor.
+# the canonical empty metadata literal (SQL-expr form for F.expr) — one
+# definition; if the metadata value type ever changes, change it here
+EMPTY_META_EXPR = "cast(map() as map<string,string>)"
 
-    ``anchor`` only populated on STATUS_LINKED rows (the outlink anchor
-    text carried into LinkDb, parse/ParseOutputFormat.java:319-358).
-    """
-    base = crawldb_schema()
-    return T.StructType(
-        list(base.fields)
-        + [
-            T.StructField("segment_id", T.StringType(), True),
-            T.StructField("anchor", T.StringType(), True),
-        ]
+# the datum columns in crawldb_schema() order — every projection that
+# selects a CrawlDatum out of a wider table uses this
+DATUM_COLS = tuple(crawldb_schema().fieldNames())
+
+
+def new_datum(
+    url,
+    status,
+    fetch_time,
+    *,
+    retries=0,
+    fetch_interval=0,
+    score=0.0,
+    signature=None,
+    modified_time=0,
+    metadata=None,
+    gen_time=None,
+    repr_url=None,
+) -> list[Column]:
+    """``new CrawlDatum(status, fetchInterval, score)`` plus its setters
+    as the 11 datum columns, named and ordered as ``DATUM_COLS`` (the
+    one record ``CrawlDatum.write`` serializes). Each argument is a Column or a Python literal and
+    is cast to its ``crawldb_schema()`` type — a no-op Catalyst removes
+    when the column already has it. ``metadata=None`` is the empty map.
+    Callers append their extras (``anchor``, ``from_url``) after it."""
+    if metadata is None:
+        metadata = F.expr(EMPTY_META_EXPR)
+    values = (
+        url, status, fetch_time, retries, fetch_interval, score,
+        signature, modified_time, metadata, gen_time, repr_url,
     )
+    return [
+        (v if isinstance(v, Column) else F.lit(v)).cast(f.dataType).alias(f.name)
+        for f, v in zip(crawldb_schema().fields, values)
+    ]
 
 
 def spans_schema() -> T.ArrayType:
@@ -146,7 +175,3 @@ def docs_schema() -> T.StructType:
         ]
     )
 
-
-# the canonical empty metadata literal (SQL-expr form for F.expr) — one
-# definition; if the metadata value type ever changes, change it here
-EMPTY_META_EXPR = "cast(map() as map<string,string>)"

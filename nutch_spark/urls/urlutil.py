@@ -55,8 +55,8 @@ _SUFFIXES = {
 
 def get_host(url: str | None) -> str | None:
     """Lowercased host of a URL, or None (URLUtil.getHost). The Python
-    oracle of ``host_series`` (generate) and ``host_expr`` (everything
-    else)."""
+    oracle of ``host_expr`` (every JVM host key) and ``host_series``
+    (the host step of ``domain_udf``)."""
     if not url:
         return None
     m = _HOST_RE.match(url)
@@ -194,19 +194,17 @@ def host_series(urls: pd.Series) -> pd.Series:
     return h.where(h.notna() & (h != ""), None)
 
 
-def host_udf():
-    @F.pandas_udf("string")
-    def _host(urls: pd.Series) -> pd.Series:
-        return host_series(urls)
-
-    return _host
-
-
 def domain_udf():
     """get_domain via vectorized host extraction + per-batch unique-HOST
     cache: one C-level regex pass pulls the hosts, and the Python suffix
     walk runs once per distinct host (not once per URL — fetch lists are
-    all-distinct URLs but only a few thousand hosts)."""
+    all-distinct URLs but only a few thousand hosts).
+
+    Flagged nondeterministic, like ``normalize_udf``, to pin single
+    evaluation: generate's ``filter(host_key.isNotNull())`` would
+    otherwise be pushed below the projection with its own copy of the
+    call, a second ArrowEvalPython node. The function is pure; every
+    caller materializes the result as a column before reusing it."""
 
     @F.pandas_udf("string")
     def _domain(urls: pd.Series) -> pd.Series:
@@ -215,7 +213,7 @@ def domain_udf():
         table = {h: get_domain(h) for h in hosts.dropna().unique()}
         return hosts.map(table)
 
-    return _domain
+    return _domain.asNondeterministic()
 
 
 def nutch_url_hash32_series(urls: pd.Series) -> pd.Series:

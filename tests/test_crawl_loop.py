@@ -131,11 +131,17 @@ def test_committed_segment_replays_to_the_committed_crawldb(spark, web, tmp_path
     crawler.run_cycle(1, now_ms, top_n=100)
     lineage = cat.snapshots("crawldb")[-1].lineage
     seg = lineage["segment_snapshots"]
-    datum_cols = S.crawldb_schema().fieldNames()
-    parts = [
-        cat.read(spark, f"segment_0001_{t}", seg[f"segment_0001_{t}"]).select(*datum_cols)
+    datum_fields = [(f.name, f.dataType) for f in S.crawldb_schema().fields]
+    tables = [
+        cat.read(spark, f"segment_0001_{t}", seg[f"segment_0001_{t}"])
         for t in ("crawl_fetch", "crawl_parse", "crawl_redirect")
     ]
+    # the CrawlDb and every datum table lead with the datum's exact
+    # (name, type) fields: new_datum and DATUM_COLS keep one format
+    for df in (*tables, cat.read(spark, "crawldb")):
+        lead = [(f.name, f.dataType) for f in df.schema.fields[: len(datum_fields)]]
+        assert lead == datum_fields
+    parts = [t.select(*S.DATUM_COLS) for t in tables]
     assert parts[2].count() > 0  # the crawl followed redirects
     segment_rows = parts[0].unionByName(parts[1]).unionByName(parts[2])
     parent = cat.read(spark, "crawldb", lineage["crawldb_parent_snapshot"])

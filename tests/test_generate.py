@@ -6,6 +6,9 @@ Quota cases are also checked against :func:`reducer_replay`, a plain
 Python replay of the reference's SelectorReducer loop over the same
 ``select_eligible`` rows."""
 
+import io
+from contextlib import redirect_stdout
+
 import pytest
 from hypothesis import given, settings
 from hypothesis import strategies as st
@@ -221,6 +224,31 @@ def test_politeness_partitioning_and_interleave(spark):
     for _, grp in pdf.groupby("pid"):
         hashes = list(grp["url_hash"])
         assert hashes == sorted(hashes)
+
+
+def _arrow_eval_nodes(df) -> int:
+    """ArrowEvalPython nodes in the physical plan, counted from the
+    numbered operator list (the tree rendering repeats each node)."""
+    buf = io.StringIO()
+    with redirect_stdout(buf):
+        df.explain("formatted")
+    return sum(
+        1 for ln in buf.getvalue().splitlines()
+        if ln.startswith("(") and "ArrowEvalPython" in ln
+    )
+
+
+@pytest.mark.parametrize("mode, nodes", [("host", 1), ("domain", 2)])
+def test_generate_evaluates_each_python_udf_once(spark, mode, nodes):
+    """Host mode keys hosts with host_expr, so its one Arrow node holds
+    the partition and url hashes; domain mode adds domain_udf in a node
+    of its own, evaluated once (the pushed-down isNotNull filter must
+    not get a second copy of the call)."""
+    rows = [datum(f"http://h.site{i % 3}.com/{i}") for i in range(12)]
+    cfg = NutchConfig(generate_max_count=2, generate_count_mode=mode)
+    out = generate(db(spark, rows), cfg, NOW, num_lists=2)
+    assert _arrow_eval_nodes(out) == nodes
+    assert out.count() == 6
 
 
 def test_mark_generated_roundtrip(spark):

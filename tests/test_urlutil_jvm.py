@@ -9,11 +9,11 @@ from pyspark.sql import functions as F
 
 from nutch_spark.urls.urlutil import (
     domain_expr,
+    domain_udf,
     get_domain,
     get_host,
     get_tld,
     host_expr,
-    host_udf,
     tld_expr,
 )
 
@@ -96,17 +96,12 @@ def test_hash_exprs_match_python_twins(spark):
 
 
 def test_host_expr_matches_get_host(spark):
-    """host_expr (every JVM host key) and host_udf (generate's Arrow
-    path) are both exact twins of get_host."""
+    """host_expr (every JVM host key, generate's included) is an exact
+    twin of get_host."""
     df = spark.createDataFrame([(u,) for u in URLS], "url string")
-    rows = df.select(
-        "url",
-        host_expr(F.col("url")).alias("h"),
-        host_udf()(F.col("url")).alias("hu"),
-    ).collect()
+    rows = df.select("url", host_expr(F.col("url")).alias("h")).collect()
     for r in rows:
         assert r["h"] == get_host(r["url"]), repr(r["url"])
-        assert r["hu"] == get_host(r["url"]), repr(r["url"])
     # an IPv6 literal is one host, brackets included (URL.getHost)
     for u in ("http://[::1]/x", "http://[::1]:8080/x"):
         assert get_host(u) == "[::1]"
@@ -114,10 +109,17 @@ def test_host_expr_matches_get_host(spark):
 
 @pytest.mark.parametrize("values", [URLS, HOSTS])
 def test_domain_expr_matches_get_domain(spark, values):
+    """domain_expr and domain_udf (generate's domain-mode quota key) are
+    both exact twins of get_domain."""
     df = spark.createDataFrame([(v,) for v in values], "v string")
-    rows = df.select("v", domain_expr(F.col("v")).alias("d")).collect()
+    rows = df.select(
+        "v",
+        domain_expr(F.col("v")).alias("d"),
+        domain_udf()(F.col("v")).alias("du"),
+    ).collect()
     for r in rows:
         assert r["d"] == get_domain(r["v"]), repr(r["v"])
+        assert r["du"] == get_domain(r["v"]), repr(r["v"])
 
 
 @pytest.mark.parametrize("values", [URLS, HOSTS])

@@ -165,7 +165,7 @@ def arc_segment(
     routes output() through ParseUtil — feed ``arc_text_spans`` of the
     content table to ``operators.parse.parse``."""
     kept = (
-        records.withColumn("url", normalize_col(F.col("url"), scope="fetcher"))
+        records.withColumn("url", normalize_col(F.col("url")))
         .filter(F.col("url").isNotNull() & url_filter_cond(F.col("url"), url_filter_rules))
     )
     if resolve_mime:

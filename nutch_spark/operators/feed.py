@@ -144,7 +144,7 @@ def parse_feed(
     )
     if normalize_links:
         entries = entries.withColumn(
-            "url", normalize_col(F.col("url"), "outlink")
+            "url", normalize_col(F.col("url"))
         ).filter(F.col("url").isNotNull())
     if url_filter_rules is not None:
         entries = entries.filter(url_filter_cond(F.col("url"), url_filter_rules))

@@ -180,15 +180,11 @@ def fetch(
             F.lit(-1),
         )
 
-    if "allow" in robots.columns:
-        # longest-match-wins with Allow winning ties (urls/robots.py
-        # semantics, crawler-commons / SimpleRobotRulesParser)
-        rule_denied = _best_match(F.col("disallow")) > _best_match(F.col("allow"))
-    else:
-        rule_denied = F.when(
-            F.col("disallow").isNotNull(),
-            F.exists("disallow", lambda p: path.startswith(p)),
-        ).otherwise(F.lit(False))
+    # longest-match-wins with Allow winning ties (urls/robots.py
+    # semantics, crawler-commons / SimpleRobotRulesParser); a table
+    # without an allow column has no Allow rules
+    allow = F.col("allow") if "allow" in robots.columns else F.lit(None)
+    rule_denied = _best_match(F.col("disallow")) > _best_match(allow)
     robots_denied = rule_denied | F.coalesce(F.col("forbid_all"), F.lit(False))
     delay_skip = F.coalesce(F.col("crawl_delay"), F.lit(0.0)) > cfg.fetcher_max_crawl_delay
     deferred = F.coalesce(F.col("defer_visits"), F.lit(False))

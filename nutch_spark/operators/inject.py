@@ -7,8 +7,8 @@ Re-expresses ``crawl/Injector.java``:
   ``nutch.score`` / ``nutch.fetchInterval`` / ``nutch.fetchInterval.fixed``
   override score / interval (:91-103, :172-207); everything else lands
   in the metadata map. Implemented with JVM-side ``split`` +
-  ``map_from_entries`` — no Python in the parse path; only the URL
-  normalize/filter step is a pandas UDF.
+  ``map_from_entries`` — no Python in the parse path; only URL
+  normalization's slow path (``normalize_col``) is a pandas UDF.
 - merge rules (:292-348): the reference's co-group becomes a
   ``full_outer`` join (2 sides, no groupBy needed) + ``when`` logic:
   injected-only -> injected as db_unfetched; old-only -> old; both ->
@@ -112,7 +112,7 @@ def parse_seeds(
     )
 
     if do_normalize:
-        seeds = seeds.withColumn("url", normalize_col(F.col("url"), "inject"))
+        seeds = seeds.withColumn("url", normalize_col(F.col("url")))
     seeds = seeds.filter(F.col("url").isNotNull())
     if url_filter_rules is not None:
         seeds = seeds.filter(url_filter_cond(F.col("url"), url_filter_rules))

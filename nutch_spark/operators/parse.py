@@ -11,8 +11,8 @@ text spans; the signature is MD5 over the canonical span serialization
 
 Per-outlink pipeline (T17, ``ParseOutputFormat.java:295-344``):
 extraction cap ``db.max.outlinks.per.page``=100 (applied before
-filtering, as parse-html does) -> length cap 4096 -> normalize (scope
-outlink) -> filter -> within-page dedup (first occurrence wins) ->
+filtering, as parse-html does) -> length cap 4096 -> normalize ->
+filter -> within-page dedup (first occurrence wins) ->
 OPIC score distribution score/validCount with internal/external factors
 (``OPICScoringFilter.distributeScoreToOutlinks``, :128-172).
 
@@ -20,7 +20,8 @@ Fork deviation #2 (SURVEY header): non-canonical parses additionally
 emit a synthetic STATUS_FETCH_SUCCESS datum into crawl_parse carrying
 the fetch time (``ParseOutputFormat.java:365-377``).
 
-Everything except URL normalize/filter (pandas UDFs) is JVM columns;
+Everything except URL normalization (one pandas UDF over the rows
+the JVM fast path cannot settle) is JVM columns;
 span order is preserved end-to-end via posexplode (the per-row parity
 invariant is span-sequence equality).
 """
@@ -85,14 +86,14 @@ def _filter_normalize(
     df: DataFrame,
     from_col: str,
     raw_col: str,
-    scope: str,
     cfg: NutchConfig,
     url_filter_rules: list[str] | None,
     exemption_rules: list[str] | None,
 ) -> DataFrame:
     """``ParseOutputFormat.filterNormalize`` (:401-467) as ONE shared
-    column pipeline for both call sites — outlinks (SCOPE_OUTLINK) and
-    meta-refresh targets (SCOPE_FETCHER): drop links-to-self comparing
+    column pipeline for both call sites — outlinks and meta-refresh
+    targets (the reference's SCOPE_OUTLINK / SCOPE_FETCHER, which run
+    the same default normalizer chain): drop links-to-self comparing
     the RAW target against the source (:406-408, "ignore links to self
     (or anchors within the page)"), normalize -> filter, then the
     ``db.ignore.{internal,external}.links`` host policy with
@@ -108,7 +109,7 @@ def _filter_normalize(
     evaluate it on the normalized URL — the normalizer lowercases hosts
     without remapping them, so the comparison is host-equivalent."""
     df = df.filter(F.col(raw_col) != F.col(from_col))
-    df = df.withColumn("to_url", normalize_col(F.col(raw_col), scope)).filter(
+    df = df.withColumn("to_url", normalize_col(F.col(raw_col))).filter(
         F.col("to_url").isNotNull()
     )
     if url_filter_rules is not None:
@@ -121,10 +122,9 @@ def _filter_normalize(
         if exemption_rules:
             # urlfilter-ignoreexempt (ExemptionUrlFilter.java:38-44):
             # an external target the exemption chain accepts is still
-            # followed
-            from nutch_spark.urls.filters import exemption_cond
-
-            keep = keep | exemption_cond(F.col("to_url"), exemption_rules)
+            # followed; its rule file is plain urlfilter-regex syntax
+            # applied to the target URL
+            keep = keep | url_filter_cond(F.col("to_url"), exemption_rules)
         df = df.filter(keep)
     return df
 
@@ -245,7 +245,7 @@ def parse(
         .filter(F.length("to_url_raw") <= cfg.db_max_outlink_length)
     )
     exploded = _filter_normalize(
-        exploded, "url", "to_url_raw", "outlink", cfg,
+        exploded, "url", "to_url_raw", cfg,
         url_filter_rules, exemption_rules,
     )
     # ONE exchange for both windows below: hash-partitioning on `url`
@@ -345,7 +345,7 @@ def parse(
         F.col("_md.refresh_time").alias("refresh_time"),
     )
     refresh = _filter_normalize(
-        refresh, "from_url", "to_raw", "fetcher", cfg,
+        refresh, "from_url", "to_raw", cfg,
         url_filter_rules, exemption_rules,
     )
     from nutch_spark.operators.fetchsim import _choose_repr_udf

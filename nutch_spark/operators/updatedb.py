@@ -363,7 +363,7 @@ def crawldb_filter(
     if cfg.db_update_purge_orphans:
         df = df.filter(F.col("status") != STATUS_DB_ORPHAN)
     if url_normalize:
-        df = df.withColumn("url", normalize_col(F.col("url"), "crawldb")).filter(
+        df = df.withColumn("url", normalize_col(F.col("url"))).filter(
             F.col("url").isNotNull()
         )
     if url_filter_rules is not None:

@@ -368,11 +368,14 @@ def main(argv: list[str] | None = None) -> int:
     catalog = SnapshotCatalog(args.warehouse)
     crawler = Crawler(spark, catalog, cfg, web["docs"], web["robots"], web["outcomes"])
     if args.resume and catalog.exists(CRAWLDB):
-        done = sum(
-            1 for s in catalog.snapshots(CRAWLDB)
-            if s.lineage.get("stage") == "updatedb"
+        # the current CrawlDb snapshot names the last committed cycle
+        # (none after inject); a count of snapshots would run backwards
+        # once expire_snapshots drops old entries
+        current = catalog.current_snapshot_id(CRAWLDB)
+        lineage = next(
+            s.lineage for s in catalog.snapshots(CRAWLDB) if s.snapshot_id == current
         )
-        start_cycle = done + 1
+        start_cycle = lineage.get("cycle_id", 0) + 1
     else:
         crawler.inject(web["seeds"], args.start_ms)
         start_cycle = 1

@@ -5,7 +5,7 @@ from nutch_spark.urls.normalizer import (  # noqa: F401
     normalize_udf,
     regex_normalize,
 )
-from nutch_spark.urls.filters import RegexURLFilter, default_filter, url_filter_udf  # noqa: F401
+from nutch_spark.urls.filters import url_filter_cond  # noqa: F401
 from nutch_spark.urls.urlutil import (  # noqa: F401
     domain_expr,
     get_domain,

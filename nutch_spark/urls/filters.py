@@ -1,15 +1,20 @@
-"""URL filter chain — first-veto conjunction of filters.
+"""URL filter chain — first-veto conjunction of filters, as JVM columns.
 
 Re-expresses ``net/URLFilters.java:51-57`` (chain: first null wins) and
 ``lib-regex-filter/.../RegexURLFilterBase.java`` + ``urlfilter-regex``
-(rule file of ``[+-]<regex>`` lines, **first matching rule wins**, no
-match => reject). The default rule set mirrors
+(rule file of ``[+-]<java-regex>`` lines, **first matching rule wins**,
+no match => reject). The default rule set mirrors
 ``conf/regex-urlfilter.txt.template`` — but note that template denies
 media suffixes, which would veto our media-span outlinks; crawl
 configs therefore pass an explicit rule list (SURVEY.md T5 caveat).
 
-Prefix / suffix / domain filters (``urlfilter-prefix`` etc.) are
-broadcast-set membership tests, vectorizable without regex.
+Every filter is a boolean JVM column for ``df.filter``: the regex chain
+(``url_filter_cond``, also the automaton and ignore-exempt chains) is a
+``when(rlike)`` chain on java.util.regex, the domain / fast / validator
+filters are regex and array expressions, and urlfilter-prefix /
+-suffix are ``trie.prefix_match_cond`` / ``suffix_match_cond``. No
+filter has a second implementation here; the Python oracles the tests
+compare these columns against live in ``tests/url_oracles.py``.
 """
 
 from __future__ import annotations
@@ -17,11 +22,12 @@ from __future__ import annotations
 import re
 from typing import Iterable, Sequence
 
-import pandas as pd
+from pyspark import SparkContext
+from pyspark.errors import IllegalArgumentException
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
-from nutch_spark.urls.urlutil import get_host, host_expr
+from nutch_spark.urls.urlutil import host_expr
 
 # conf/regex-urlfilter.txt.template (comment/blank lines removed)
 DEFAULT_RULES: list[str] = [
@@ -42,115 +48,18 @@ CRAWL_RULES: list[str] = [
 ]
 
 
-class RegexURLFilter:
-    """First-match-wins accept/deny regex chain."""
-
-    def __init__(self, rules: Sequence[str] | None = None):
-        self._rules: list[tuple[bool, re.Pattern]] = []
-        for line in rules if rules is not None else DEFAULT_RULES:
-            line = line.strip()
-            if not line or line.startswith("#"):
-                continue
-            sign = line[0]
-            if sign not in "+-":
-                raise ValueError(f"rule must start with + or -: {line!r}")
-            self._rules.append((sign == "+", re.compile(line[1:])))
-
-    def accept(self, url: str | None) -> bool:
-        if url is None:
-            return False
-        for is_accept, pat in self._rules:
-            if pat.search(url):
-                return is_accept
-        return False  # no match => reject (RegexURLFilterBase)
-
-
-def default_filter() -> RegexURLFilter:
-    return RegexURLFilter(DEFAULT_RULES)
-
-
-def crawl_filter() -> RegexURLFilter:
-    return RegexURLFilter(CRAWL_RULES)
-
-
-class PrefixURLFilter:
-    """urlfilter-prefix: accept iff url starts with any listed prefix.
-
-    Backed by the ported ``PrefixStringMatcher`` trie (urls/trie.py) —
-    the reference plugin's own structure (PrefixURLFilter.java:62) —
-    so accept() is O(len(url)) regardless of list size."""
-
-    def __init__(self, prefixes: Iterable[str]):
-        from nutch_spark.urls.trie import PrefixStringMatcher
-
-        self._matcher = PrefixStringMatcher(list(prefixes))
-
-    def accept(self, url: str | None) -> bool:
-        return url is not None and self._matcher.matches(url)
-
-
-class SuffixURLFilter:
-    """urlfilter-suffix: *reject* iff url ends with any listed suffix
-    (case-insensitive — suffixes are lowercased to match the lowercased
-    URL, else an entry like '.GIF' could never fire). Backed by the
-    ported ``SuffixStringMatcher`` trie (SuffixURLFilter.java:100)."""
-
-    def __init__(self, suffixes: Iterable[str]):
-        from nutch_spark.urls.trie import SuffixStringMatcher
-
-        self._matcher = SuffixStringMatcher([s.lower() for s in suffixes])
-
-    def accept(self, url: str | None) -> bool:
-        return url is not None and not self._matcher.matches(url.lower())
-
-
-def url_filter_udf(rules: Sequence[str] | None = None):
-    """Arrow-batched pandas UDF: url -> boolean accept mask. Fallback
-    path for rules ``url_filter_cond`` can't compile to JVM regex."""
-    rule_list = list(rules) if rules is not None else list(DEFAULT_RULES)
-
-    @F.pandas_udf("boolean")
-    def _filt(urls: pd.Series) -> pd.Series:
-        filt = RegexURLFilter(rule_list)  # compiled once per batch-worker
-        return urls.map(filt.accept)
-
-    return _filt
-
-
-# Python regex constructs java.util.regex can't run (or runs with
-# different semantics): named groups/backrefs (?P...), comments (?#...),
-# local/unicode/ascii inline flags, conditional groups (?(...)...),
-# \Z (Java's \Z tolerates a final newline where Python's does not —
-# Java \z is the strict one)
-_PY_ONLY_RE = re.compile(r"\(\?P[<=]|\(\?#|\(\?[aLu]\)?|\(\?\(|\\Z")
-
-
-def java_translatable(pattern: str) -> bool:
-    """True when the Python rule pattern is also a valid-and-equivalent
-    Java regex (the common case: Nutch rule files ARE Java regexes).
-
-    The screen above catches known semantic divergences; syntax is then
-    checked authoritatively by compiling with java.util.regex through
-    the active session's JVM (a Python-valid pattern Java rejects must
-    take the pandas fallback, not crash the executor). Without a
-    reachable JVM (no active session / Spark Connect) the screen alone
-    decides."""
-    if _PY_ONLY_RE.search(pattern) is not None:
-        return False
-    jvm = None
-    try:
-        from pyspark.sql import SparkSession
-
-        spark = SparkSession.getActiveSession()
-        jvm = spark._jvm if spark is not None else None
-    except Exception:  # noqa: BLE001 — Connect sessions have no _jvm
-        jvm = None
-    if jvm is not None:
-        try:
-            jvm.java.util.regex.Pattern.compile(pattern)
-        except Exception:  # noqa: BLE001 — PatternSyntaxException via Py4J
-            return False
-    return True
+def _parse_rules(rules: Sequence[str]) -> list[tuple[bool, str]]:
+    """``[+-]regex`` rule lines -> ``(is_accept, pattern)`` pairs; blank
+    and ``#`` lines are skipped (``RegexURLFilterBase.readRules``)."""
+    parsed = []
+    for line in rules:
+        line = line.strip()
+        if not line or line.startswith("#"):
+            continue
+        if line[0] not in "+-":
+            raise ValueError(f"rule must start with + or -: {line!r}")
+        parsed.append((line[0] == "+", line[1:]))
+    return parsed
 
 
 def url_filter_cond(url_col: Column, rules: Sequence[str] | None = None) -> Column:
@@ -158,25 +67,22 @@ def url_filter_cond(url_col: Column, rules: Sequence[str] | None = None) -> Colu
     compiled to ``when(url.rlike(r1), a1).when(...).otherwise(False)``
     — whole-stage-codegen, no Python in the hot path. Catalyst ``rlike``
     *is* java.util.regex with find() semantics, i.e. exactly the
-    reference's ``RegexURLFilterBase`` matcher, so this is closer to the
-    reference than the Python ``re`` fallback.
+    reference's ``RegexURLFilterBase`` matcher (``\\Z`` included).
 
-    Falls back to the Arrow-batched pandas UDF only when a rule uses a
-    Python-only construct (named groups, ``\\Z``, ...). NULL url =>
-    reject (null rlike => null => when() skips => otherwise(False))."""
-    rule_list = list(rules) if rules is not None else list(DEFAULT_RULES)
-    parsed: list[tuple[bool, str]] = []
-    for line in rule_list:
-        line = line.strip()
-        if not line or line.startswith("#"):
-            continue
-        if line[0] not in "+-":
-            raise ValueError(f"rule must start with + or -: {line!r}")
-        parsed.append((line[0] == "+", line[1:]))
-    if not all(java_translatable(rx) for _, rx in parsed):
-        return url_filter_udf(rule_list)(url_col)
+    Every pattern is compiled by ``java.util.regex.Pattern`` in the
+    session's JVM first: a rule Java rejects raises ``ValueError``
+    naming it before any job runs, as the reference fails to load such
+    a rule file. NULL url => reject (null rlike => null => when() skips
+    => otherwise(False))."""
+    parsed = _parse_rules(DEFAULT_RULES if rules is None else rules)
+    java_pattern = SparkContext._active_spark_context._jvm.java.util.regex.Pattern
     cond = None
     for is_accept, rx in parsed:
+        try:
+            java_pattern.compile(rx)
+        except IllegalArgumentException as e:  # PatternSyntaxException
+            rule = ("+" if is_accept else "-") + rx
+            raise ValueError(f"rule {rule!r} is not a java.util.regex pattern: {e}") from None
         c = url_col.rlike(rx)
         cond = F.when(c, F.lit(is_accept)) if cond is None else cond.when(c, F.lit(is_accept))
     if cond is None:
@@ -222,16 +128,6 @@ class DomainURLFilter:
         )
         # hostless => reject, both modes (ref: exception => null)
         return F.when(host.isNull(), F.lit(False)).otherwise(~hit if self._deny else hit)
-
-    def accept(self, url: str | None) -> bool:
-        """Python twin (tests / driver-side checks)."""
-        host = get_host(url)
-        if host is None:
-            return False  # hostless => reject, both modes
-        parts = host.split(".")
-        sufs = {".".join(parts[i:]) for i in range(len(parts))}
-        hit = bool(sufs & self._set)
-        return (not hit) if self._deny else hit
 
 
 _FAST_CATCH_ALL = re.compile(r"^\s*DenyPath(?:Query)?\s+\.[*?]\s*$")
@@ -299,33 +195,6 @@ class FastURLFilter:
             deny = deny | F.coalesce(term, F.lit(False))
         return F.when(parseable, ~deny).otherwise(F.lit(False))
 
-    def accept(self, url: str | None) -> bool:
-        """Python twin of :meth:`cond` for tests."""
-        if url is None:
-            return False
-        m = re.match(r"^[a-zA-Z][a-zA-Z0-9+.-]*://[^/?#]*", url)
-        if not m:
-            return False  # unparseable => reject, matching cond()
-        host = get_host(url) or ""
-        rest = url[m.end():]
-        path = re.match(r"^([^?#]*)", rest).group(1)
-        pathquery = re.match(r"^([^#]*)", rest).group(1)
-        for kind, name, target, rx in self._rules:
-            if kind == "host":
-                in_scope = host == name.lower()
-            elif name == ".":
-                in_scope = True
-            else:
-                nl = name.lower()
-                in_scope = host == nl or host.endswith("." + nl)
-            if not in_scope:
-                continue
-            if rx is None:
-                return False
-            tgt = path if target == "path" else pathquery
-            if re.search(rx, tgt):
-                return False
-        return True
 
 
 # ---------------------------------------------------------------------------
@@ -391,40 +260,6 @@ class ValidatorURLFilter:
         )
         return F.coalesce(ok, F.lit(False))
 
-    def accept(self, url: str | None) -> bool:
-        """Python twin (same regexes, fullmatch == Java matches())."""
-        if url is None or not re.fullmatch(_V_LEGAL, url):
-            return False
-        m = re.fullmatch(_V_URL_PAT, url)
-        if not m:
-            return False
-        scheme, authority = m.group(2), m.group(4)
-        path = m.group(5) or ""
-        if scheme is None or not re.fullmatch(_V_SCHEME, scheme):
-            return False
-        if authority is None:
-            return False
-        am = re.fullmatch(_V_AUTH_PAT, authority)
-        if not am:
-            return False
-        host, port, extra = am.group(1), am.group(2), am.group(3)
-        im = re.fullmatch(_V_IP, host)
-        if im:
-            if any(int(im.group(i)) > 255 for i in range(1, 5)):
-                return False
-        else:
-            if not re.fullmatch(_V_DOMAIN, host):
-                return False
-            segs = host.split(".")
-            top = segs[-1]
-            if len(segs) < 2 or len(top) < 2 or not re.match(r"^[a-zA-Z]", top):
-                return False
-        if port and not re.fullmatch(_V_PORT, port):
-            return False
-        if extra and extra.strip():
-            return False
-        return re.fullmatch(_V_PATH, path) is not None
-
 
 # constructs dk.brics.automaton cannot compile: lookarounds, backrefs,
 # \b/\B, inline flags, named groups, possessive/reluctant exotica — an
@@ -432,7 +267,7 @@ class ValidatorURLFilter:
 _NON_AUTOMATON_RE = re.compile(r"\(\?|\\[1-9bBAZzG]")
 
 
-class AutomatonURLFilter(RegexURLFilter):
+class AutomatonURLFilter:
     """urlfilter-automaton (``urlfilter-automaton/.../AutomatonURLFilter.java``):
     the same ``[+-]regex`` first-match-wins chain as urlfilter-regex,
     restricted to dk.brics.automaton's regex subset (linear-time DFA in
@@ -443,24 +278,11 @@ class AutomatonURLFilter(RegexURLFilter):
     are rejected here instead of silently behaving differently."""
 
     def __init__(self, rules: Sequence[str]):
-        for line in rules:
-            line = line.strip()
-            if not line or line.startswith("#"):
-                continue
-            if _NON_AUTOMATON_RE.search(line[1:]):
-                raise ValueError(
-                    f"not an automaton-expressible pattern: {line!r}"
-                )
-        super().__init__(rules)
+        for is_accept, rx in _parse_rules(rules):
+            if _NON_AUTOMATON_RE.search(rx):
+                rule = ("+" if is_accept else "-") + rx
+                raise ValueError(f"not an automaton-expressible pattern: {rule!r}")
         self.rules = list(rules)
 
     def cond(self, url_col: Column) -> Column:
         return url_filter_cond(url_col, self.rules)
-
-
-def exemption_cond(url_col: Column, rules: Sequence[str]) -> Column:
-    """urlfilter-ignoreexempt (``ExemptionUrlFilter.java:38-44``): when
-    ``db.ignore.external.links`` is on, an external outlink is still
-    followed if the exemption rule chain accepts it. The rule file is
-    plain RegexURLFilter syntax applied to the *target* URL."""
-    return url_filter_cond(url_col, rules)

@@ -2,10 +2,13 @@
 
 The reference runs an ordered, per-scope plugin chain (framework
 ``net/URLNormalizers.java:97-119``, default order Basic -> Regex per
-``conf/nutch-default.xml:1485-1486``). We re-express both active
-normalizers as pure-Python functions applied inside one Arrow-batched
-pandas UDF (``normalize_udf``) — URL parsing is inherently per-string,
-but the batch transfer is vectorized (input_hint mandate).
+``conf/nutch-default.xml:1485-1486``); its default config runs the same
+chain in every scope. We re-express both active normalizers as one
+pure-Python function, ``normalize``. Over a column, ``normalize_col``
+settles already-canonical URLs in the JVM (``fast_canonical_cond``) and
+sends only the rest through one Arrow-batched pandas UDF
+(``normalize_udf``) — URL parsing is inherently per-string, but the
+batch transfer is vectorized (input_hint mandate).
 
 ``basic_normalize``
     Semantics of ``urlnormalizer-basic/.../BasicURLNormalizer.java``:
@@ -301,27 +304,15 @@ def regex_normalize(url: str | None, rules: Iterable[tuple[re.Pattern, str]] | N
 
 
 # ---------------------------------------------------------------------------
-# Chain + scopes (URLNormalizers.java:97-119)
+# Chain (URLNormalizers.java:97-119)
 # ---------------------------------------------------------------------------
 
-SCOPES = (
-    "default",
-    "partition",
-    "generate_host_count",
-    "fetcher",
-    "crawldb",
-    "linkdb",
-    "inject",
-    "outlink",
-    "indexer",
-)
 
-
-def normalize(url: str | None, scope: str = "default") -> str | None:
+def normalize(url: str | None) -> str | None:
     """Basic then Regex, per the default ``urlnormalizer.order``.
 
-    Scopes all share the default chain in the reference's default
-    config; the parameter is kept for per-scope rule overrides.
+    The reference's default config runs this same chain in every scope
+    (inject, fetcher, crawldb, outlink, ...), so it takes no scope.
     """
     u = basic_normalize(url)
     if u is None:
@@ -329,46 +320,27 @@ def normalize(url: str | None, scope: str = "default") -> str | None:
     return regex_normalize(u)
 
 
-# Already-canonical fast path: URLs matching this shape are fixed points
-# of the whole Basic+Regex chain — lowercase scheme/host, no port,
-# userinfo, query, fragment, %-escape, or char needing escaping; path
-# present and composed of unreserved chars. The extra vectorized checks
-# below exclude dot-segments ("/."), duplicate slashes, and a trailing
-# '.' (regex rule "strip trailing [?&.]"). Everything else takes the
-# exact per-string slow path. On crawl corpora the hit rate is the
-# overwhelming majority — this is what makes normalization Arrow-speed
-# instead of Python-speed at 10^10 URLs.
-_FAST_CANONICAL = re.compile(r"^https?://[a-z0-9.\-]+/[A-Za-z0-9._~\-/]*\Z")
-# \Z, not $: '$' also matches just BEFORE a trailing newline, so
-# 'http://a.com/x\n' would take the fast path unmodified while the slow
-# path strips the newline — the same URL would normalize to two
-# different frontier keys depending on batch composition.
-
-
-def normalize_series(urls: pd.Series, scope: str = "default") -> pd.Series:
+def normalize_series(urls: pd.Series) -> pd.Series:
+    """``normalize`` over one Arrow batch, nulls passed through."""
     if not urls.notna().any():
         # normalize_col nulls out fast rows JVM-side; a batch from an
-        # all-canonical source arrives here as pure nulls — skip the
-        # mask computation entirely (normalize(None) is None)
+        # all-canonical source arrives here as pure nulls
         return urls
-    fast = (
-        urls.str.match(_FAST_CANONICAL, na=False)
-        & ~urls.str.contains("/.", regex=False, na=True)
-        & ~urls.str.endswith(".", na=True)
-        & ~urls.str.slice(8).str.contains("//", regex=False, na=True)
-    )
     out = urls.copy()
     # nulls stay null without a per-row normalize(None) call — under
     # normalize_col the input series is null-dominated (fast rows are
     # nulled out JVM-side), so this skip is what keeps the UDF O(slow)
-    slow = ~fast & urls.notna()
-    if slow.any():
-        out[slow] = urls[slow].map(lambda u: normalize(u, scope))
+    live = urls.notna()
+    out[live] = urls[live].map(normalize)
     return out
 
 
-def normalize_udf(scope: str = "default"):
+def normalize_udf():
     """Arrow-batched pandas UDF: url -> normalized url (null if malformed).
+
+    Its one production caller is ``normalize_col``, which hands it only
+    the rows ``fast_canonical_cond`` cannot settle (fast rows arrive as
+    NULL), so the UDF runs the full chain on every non-null row.
 
     The chain is a pure function, but the UDF is flagged nondeterministic
     to pin single evaluation: a deterministic UDF behind the usual
@@ -383,25 +355,33 @@ def normalize_udf(scope: str = "default"):
 
     @F.pandas_udf("string")
     def _norm(urls: pd.Series) -> pd.Series:
-        return normalize_series(urls, scope)
+        return normalize_series(urls)
 
     return _norm.asNondeterministic()
 
 
-# Java-regex twin of _FAST_CANONICAL for evaluation inside whole-stage
-# codegen. \z (absolute end), NOT Java's \Z: Java \Z matches before a
+# Already-canonical fast path: URLs matching this shape are fixed points
+# of the whole Basic+Regex chain — lowercase scheme/host, no port,
+# userinfo, query, fragment, %-escape, or char needing escaping; path
+# present and composed of unreserved chars. The extra checks in
+# fast_canonical_cond exclude dot-segments ("/."), duplicate slashes,
+# and a trailing '.' (regex rule "strip trailing [?&.]"). Everything
+# else takes the exact per-string slow path. On crawl corpora the hit
+# rate is the overwhelming majority — this is what keeps normalization
+# in the JVM instead of Python at 10^10 URLs.
+#
+# \z (absolute end), NOT Java's \Z or '$': both also match before a
 # final line terminator, which would wave 'http://a.com/x\n' through the
-# fast path while the slow path strips the newline — exactly the \Z/'$'
-# trap documented above, one dialect over.
+# fast path while the slow path strips the newline — the same URL would
+# normalize to two different frontier keys.
 _FAST_CANONICAL_JAVA = r"^https?://[a-z0-9.\-]+/[A-Za-z0-9._~\-/]*\z"
 
 
 def fast_canonical_cond(col):
     """JVM boolean column: URL is a fixed point of the Basic+Regex chain.
 
-    Same four checks as the pandas mask in ``normalize_series``, null
-    semantics included (null url -> null cond -> caller's ``when`` falls
-    through to the slow path, where ``normalize(None)`` is None).
+    Null url -> null cond -> the caller's ``when`` falls through to the
+    slow path, where ``normalize(None)`` is None.
     """
     return (
         col.rlike(_FAST_CANONICAL_JAVA)
@@ -413,7 +393,7 @@ def fast_canonical_cond(col):
     )
 
 
-def normalize_col(col, scope: str = "default"):
+def normalize_col(col):
     """Hybrid JVM/Arrow normalization: url column -> normalized url column.
 
     Catalyst evaluates Python UDFs unconditionally (ArrowEvalPython runs
@@ -431,7 +411,7 @@ def normalize_col(col, scope: str = "default"):
     """
     fast = fast_canonical_cond(col)
     slow_in = F.when(fast, F.lit(None).cast("string")).otherwise(col)
-    return F.coalesce(normalize_udf(scope)(slow_in), F.when(fast, col))
+    return F.coalesce(normalize_udf()(slow_in), F.when(fast, col))
 
 
 # ---------------------------------------------------------------------------

@@ -168,6 +168,44 @@ def test_resume_from_snapshot_is_deterministic(spark, web, tmp_path):
     assert digest1 == digest2
 
 
+def test_resume_after_expire_advances_cycle_and_clock(spark, tmp_path, monkeypatch, capsys):
+    """``main --resume`` starts after the cycle the current CrawlDb
+    snapshot names. Once ``expire_snapshots`` has dropped older entries
+    a count of snapshots would restart at an earlier cycle id (reusing
+    its segment tables) with a clock that went backwards."""
+    import functools
+    import json
+
+    import nutch_spark.session
+    from nutch_spark.pipeline import crawl_loop
+
+    monkeypatch.setattr(nutch_spark.session, "get_spark", lambda **kw: spark)
+    monkeypatch.setattr(
+        crawl_loop, "NutchConfig", functools.partial(NutchConfig, fetch_partitions=4)
+    )
+    wh = str(tmp_path / "wh")
+    # cycles 31 days apart: every fetched URL is due again (30-day
+    # default interval), so the resumed cycle has work and commits
+    base = ["--warehouse", wh, "--n-docs", "300", "--n-hosts", "10", "--top-n", "20",
+            "--cycle-ms", str(31 * 24 * 3_600_000)]
+
+    def run(*extra):
+        assert crawl_loop.main(base + list(extra)) == 0
+        out = capsys.readouterr().out.splitlines()
+        return [json.loads(ln)["cycle"] for ln in out if ln.startswith("{")]
+
+    assert run("--cycles", "2") == [1, 2]
+    cat = SnapshotCatalog(wh)
+    before = cat.snapshots(crawl_loop.CRAWLDB)[-1]
+    cat.expire_snapshots(crawl_loop.CRAWLDB, keep=1)
+    assert [s.snapshot_id for s in cat.snapshots(crawl_loop.CRAWLDB)] == [before.snapshot_id]
+
+    assert run("--resume", "--cycles", "1") == [3]
+    after = cat.snapshots(crawl_loop.CRAWLDB)[-1]
+    assert after.lineage["cycle_id"] == 3
+    assert after.committed_at_ms > before.committed_at_ms
+
+
 def test_second_cycle_fetches_new_urls_only(spark, web, tmp_path):
     """Fork rule at the cycle level: once fetched, never re-generated."""
     crawler, cat = make_crawler(spark, web, tmp_path)

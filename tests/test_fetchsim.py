@@ -107,6 +107,37 @@ def test_robots_disallow_and_crawl_delay(spark):
         assert {row["host"] for row in rows.values()} == {r, slow, p8}, pre
 
 
+def test_robots_table_without_allow_column_reads_as_empty_allow(spark):
+    """A robots table with no ``allow`` column gates exactly like the
+    same table with empty Allow lists: longest match with no Allow
+    rules denies iff some Disallow prefix matches (``""`` matches
+    every path; a NULL list matches none)."""
+    rules = {
+        "p.example.com": ["/private/"],
+        "all.example.com": [""],
+        "none.example.com": None,
+        "empty.example.com": [],
+    }
+    urls = [f"http://{h}{path}" for h in [*rules, "absent.example.com"]
+            for path in ("/private/x", "/x")]
+    fl = fetchlist(spark, urls)
+    out = outcomes_df(spark, [(u, "success", None, 100) for u in urls])
+    rb = robots_df(spark, [(h, d, None, False, False) for h, d in rules.items()])
+
+    def statuses(robots):
+        cf, _ = fetch(fl, robots, out, CFG, NOW)
+        return {r["url"]: r["status"] for r in cf.collect()}
+
+    without = statuses(rb)
+    assert without == statuses(rb.withColumn("allow", F.array().cast("array<string>")))
+    gone = {u for u, st in without.items() if st == S.STATUS_FETCH_GONE}
+    assert gone == {
+        "http://p.example.com/private/x",
+        "http://all.example.com/private/x",
+        "http://all.example.com/x",
+    }
+
+
 def test_outcome_status_mapping(spark):
     cases = {
         "success": S.STATUS_FETCH_SUCCESS,

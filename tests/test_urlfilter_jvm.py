@@ -1,18 +1,21 @@
 """JVM-compiled URL filter chain: the `when(rlike)` column must agree
-with the Python RegexURLFilter on every rule set (T4/T5), and the
-domain / fast filters (T6, urlfilter-domain / urlfilter-fast) must
-match their Python twins — all with zero Python UDFs in the plan."""
+with the Python rule-chain oracle on every rule set (T4/T5), follow
+java.util.regex where the two engines differ, and reject a rule Java
+cannot compile; the domain / fast filters (T6, urlfilter-domain /
+urlfilter-fast) must match their oracles — all with zero Python UDFs
+in the plan."""
+
+import uuid
 
 import pytest
 from pyspark.sql import functions as F
+from url_oracles import domain_accept, fast_accept, regex_accept
 
 from nutch_spark.urls.filters import (
     CRAWL_RULES,
     DEFAULT_RULES,
     DomainURLFilter,
     FastURLFilter,
-    RegexURLFilter,
-    java_translatable,
     url_filter_cond,
 )
 
@@ -44,15 +47,12 @@ def _spark_accepts(spark, rules, urls=URLS):
                                    ["+^http://good", "-^http://", "+."],
                                    ["+^https://only"]])
 def test_cond_matches_python_chain(spark, rules):
-    py = RegexURLFilter(rules)
     got = _spark_accepts(spark, rules)
     for u in URLS:
-        assert got[u] == py.accept(u), (u, rules)
+        assert got[u] == regex_accept(rules, u), (u, rules)
 
 
 def test_cond_is_jvm_compiled(spark):
-    """DEFAULT_RULES are Java-translatable => no Python UDF in the plan."""
-    assert all(java_translatable(r[1:]) for r in DEFAULT_RULES)
     df = spark.createDataFrame([("http://x.com/",)], "url string")
     plan = df.filter(
         url_filter_cond(F.col("url"), DEFAULT_RULES)
@@ -61,12 +61,42 @@ def test_cond_is_jvm_compiled(spark):
     assert "BatchEvalPython" not in plan
 
 
-def test_python_only_rules_fall_back(spark):
-    rules = [r"+^http://(?P<h>good)", "-."]  # named group: Python-only
-    assert not java_translatable(rules[0][1:])
-    py = RegexURLFilter(rules)
-    got = _spark_accepts(spark, rules, ["http://good/x", "http://bad/x", None])
-    assert got["http://good/x"] is True and got["http://bad/x"] is False
+def _raises_before_any_job(spark, rules, bad_rule):
+    """url_filter_cond(rules) raises ValueError naming ``bad_rule``, and
+    no Spark job runs on the way."""
+    sc = spark.sparkContext
+    group = f"url_filter_cond_compile_check_{uuid.uuid4().hex}"
+    sc.setJobGroup(group, "rule compile check")
+    try:
+        with pytest.raises(ValueError, match="java.util.regex") as e:
+            url_filter_cond(F.col("url"), rules)
+        assert repr(bad_rule) in str(e.value)
+        assert list(sc.statusTracker().getJobIdsForGroup(group)) == []
+        # the probe sees jobs of this group when there are any
+        spark.range(1).count()
+        assert list(sc.statusTracker().getJobIdsForGroup(group)) != []
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+
+
+def test_python_only_rule_raises(spark):
+    """A named group in Python syntax is not a Java regex: the rule file
+    fails to load, as it does in the reference."""
+    rules = ["+^http://good", r"+^http://(?P<h>good)", "-."]
+    _raises_before_any_job(spark, rules, r"+^http://(?P<h>good)")
+
+
+def test_backslash_capital_z_follows_java(spark):
+    """Java's \\Z also matches before a final line terminator (Python's
+    does not), so this rule rejects a URL with a trailing newline."""
+    rules = ["-\\.png\\Z", "+."]
+    got = _spark_accepts(spark, rules, ["http://a.com/x.png\n", "http://a.com/x.png", "http://a.com/x"])
+    assert got == {
+        "http://a.com/x.png\n": False,
+        "http://a.com/x.png": False,
+        "http://a.com/x": True,
+    }
 
 
 DOMAINS = ["apache.org", "www.example.com", "com"]
@@ -88,9 +118,9 @@ def test_domain_filter(spark, deny):
     got = {r["url"]: r["ok"] for r in
            df.select("url", f.cond(F.col("url")).alias("ok")).collect()}
     for u in urls:
-        assert got[u] == f.accept(u), u
-    assert f.accept("http://example.net/z") is deny
-    assert f.accept("http://lucene.apache.org/x") is not deny
+        assert got[u] == domain_accept(DOMAINS, u, deny), u
+    assert got["http://example.net/z"] is deny
+    assert got["http://lucene.apache.org/x"] is not deny
 
 
 FAST_RULES = """
@@ -143,22 +173,19 @@ def test_fast_filter(spark):
     }
     for u, want in expect.items():
         assert got[u] == want, u
-        assert f.accept(u) == want, u
+        assert fast_accept(f, u) == want, u
 
 
-def test_java_invalid_python_valid_falls_back(spark):
-    """A Python-valid regex Java can't compile (conditional group) must
-    take the pandas fallback, not crash the executor at rlike time."""
+def test_java_invalid_rule_raises(spark):
+    """A Python-valid regex Java can't compile (conditional group) is a
+    configuration error raised while the column is built, not an
+    executor crash at rlike time."""
     rules = [r"+(a)?(?(1)b|c)", "-."]
-    assert not java_translatable(rules[0][1:])
-    got = _spark_accepts(spark, rules, ["ab", "c", "zzz", None])
-    py = RegexURLFilter(rules)
-    for u in ["ab", "c", "zzz", None]:
-        assert got[u] == py.accept(u), u
+    _raises_before_any_job(spark, rules, r"+(a)?(?(1)b|c)")
 
 
 def test_twins_agree_on_edge_urls(spark):
-    """cond() and accept() must agree on NULL, scheme-less, and
+    """cond() and the oracles must agree on NULL, scheme-less, and
     port/userinfo URLs (reference: URL parse failure => reject; host
     comparison is port-less)."""
     edge = [
@@ -176,11 +203,11 @@ def test_twins_agree_on_edge_urls(spark):
     got_dom = {r["url"]: r["ok"] for r in
                df.select("url", dom.cond(F.col("url")).alias("ok")).collect()}
     for u in edge:
-        assert got_fast[u] == fast.accept(u), ("fast", u)
-        assert got_dom[u] == dom.accept(u), ("dom", u)
-    assert fast.accept("/doc/1") is False                       # unparseable
-    assert fast.accept("http://www.example.com:8080/private/x") is False  # host rule
-    assert dom.accept("http://user@lucene.apache.org/x") is True
+        assert got_fast[u] == fast_accept(fast, u), ("fast", u)
+        assert got_dom[u] == domain_accept(DOMAINS, u), ("dom", u)
+    assert got_fast["/doc/1"] is False                       # unparseable
+    assert got_fast["http://www.example.com:8080/private/x"] is False  # host rule
+    assert got_dom["http://user@lucene.apache.org/x"] is True
 
 
 def test_fast_filter_tolerates_malformed_lines():
@@ -194,6 +221,6 @@ def test_fast_filter_tolerates_malformed_lines():
         "DenyPath # todo",        # operand-less after comment strip
         "DenyPath /private",
     ])
-    assert not f.accept("http://www.example.com/private/x")
-    assert f.accept("http://www.example.com/public")
-    assert f.accept("http://other.example.org/private/x")
+    assert not fast_accept(f, "http://www.example.com/private/x")
+    assert fast_accept(f, "http://www.example.com/public")
+    assert fast_accept(f, "http://other.example.org/private/x")

@@ -155,30 +155,46 @@ def test_chain():
 
 
 # ---------------------------------------------------------------------------
-# property: the vectorized fast path may only accept true fixed points
+# property: the JVM fast path may only accept true fixed points
 # ---------------------------------------------------------------------------
 
 from hypothesis import given, settings
 from hypothesis import strategies as st
+from pyspark.sql import functions as F
 
-from nutch_spark.urls.normalizer import normalize_series
+from nutch_spark.urls.normalizer import fast_canonical_cond, normalize_col
 
 
-@settings(max_examples=300, deadline=None)
-@given(
-    st.from_regex(
-        r"http://[a-z0-9.\-]{1,20}(/[A-Za-z0-9._~\-/]{0,30})?", fullmatch=True
-    )
+def _assert_fast_path_sound(spark, urls):
+    """Every URL ``fast_canonical_cond`` waves through is a fixed point
+    of ``normalize``, and ``normalize_col`` (fast path + UDF) equals the
+    per-string chain on every URL."""
+    df = spark.createDataFrame([(u,) for u in urls], "url string")
+    rows = df.select(
+        "url",
+        F.coalesce(fast_canonical_cond(F.col("url")), F.lit(False)).alias("fast"),
+        normalize_col(F.col("url")).alias("norm"),
+    ).collect()
+    for r in rows:
+        want = normalize(r["url"])
+        if r["fast"]:
+            assert want == r["url"], r["url"]
+        assert r["norm"] == want, r["url"]
+    return {r["url"]: r for r in rows}
+
+
+_CANONICAL_SHAPED = st.from_regex(
+    r"http://[a-z0-9.\-]{1,20}(/[A-Za-z0-9._~\-/]{0,30})?", fullmatch=True
 )
-def test_fast_path_agrees_with_slow_path(url):
-    """normalize_series claims a regex-guarded Arrow fast path for
+
+
+@settings(max_examples=25, deadline=None)
+@given(st.lists(_CANONICAL_SHAPED, min_size=1, max_size=24))
+def test_fast_path_agrees_with_slow_path(spark, urls):
+    """normalize_col claims a regex-guarded JVM fast path for
     already-canonical URLs; it must never skip a URL the per-string
     chain would still change."""
-    import pandas as pd
-
-    got = normalize_series(pd.Series([url]))[0]
-    want = normalize(url)
-    assert got == want
+    _assert_fast_path_sound(spark, urls)
 
 
 @settings(max_examples=200, deadline=None)
@@ -196,33 +212,32 @@ def test_querystring_normalize_idempotent(url):
     assert querystring_normalize(once) == once
 
 
-def test_fast_path_excludes_trailing_newline():
-    """'$' matches before a final newline; the fast-path regex must use
-    \\Z so 'url\\n' takes the slow path and normalizes identically to
-    its clean twin (one frontier key, not two)."""
-    import pandas as pd
-
-    out = normalize_series(pd.Series([
-        "http://a.example.com/x\n", "http://a.example.com/x",
-    ]))
-    assert out[0] == out[1]
+def test_fast_path_excludes_trailing_newline(spark):
+    """'$' and Java's \\Z match before a final newline; the fast-path
+    regex must use \\z so 'url\\n' takes the slow path and normalizes
+    identically to its clean twin (one frontier key, not two)."""
+    rows = _assert_fast_path_sound(spark, ["http://a.example.com/x\n", "http://a.example.com/x"])
+    assert not rows["http://a.example.com/x\n"]["fast"]
+    assert rows["http://a.example.com/x"]["fast"]
+    assert rows["http://a.example.com/x\n"]["norm"] == rows["http://a.example.com/x"]["norm"]
 
 
-@settings(max_examples=300, deadline=None)
+@settings(max_examples=25, deadline=None)
 @given(
-    base=st.from_regex(
-        r"https?://[a-z0-9.\-]{1,20}(/[A-Za-z0-9._~\-/]{0,30})?", fullmatch=True
-    ),
-    junk=st.sampled_from(["", "\n", "\r", "\t", " ", "\r\n", "\n\n", " \n"]),
-    lead=st.sampled_from(["", " ", "\t"]),
+    st.lists(
+        st.tuples(
+            st.sampled_from(["", " ", "\t"]),
+            st.from_regex(
+                r"https?://[a-z0-9.\-]{1,20}(/[A-Za-z0-9._~\-/]{0,30})?", fullmatch=True
+            ),
+            st.sampled_from(["", "\n", "\r", "\t", " ", "\r\n", "\n\n", " \n"]),
+        ),
+        min_size=1,
+        max_size=24,
+    )
 )
-def test_fast_path_agrees_with_slow_path_under_whitespace(base, junk, lead):
-    """The fast-path mask must treat whitespace-padded URLs exactly like
-    the per-string chain does — '$'-style regex anchors that match
-    before a trailing newline silently fork the frontier key space."""
-    import pandas as pd
-
-    url = lead + base + junk
-    got = normalize_series(pd.Series([url]))[0]
-    want = normalize(url)
-    assert got == want
+def test_fast_path_agrees_with_slow_path_under_whitespace(spark, padded):
+    """The fast path must treat whitespace-padded URLs exactly like the
+    per-string chain does — '$'-style regex anchors that match before a
+    trailing newline silently fork the frontier key space."""
+    _assert_fast_path_sound(spark, [lead + base + junk for lead, base, junk in padded])

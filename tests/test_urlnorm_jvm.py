@@ -1,21 +1,23 @@
 """Hybrid JVM/Arrow normalization (`normalize_col`): the JVM fast-path
-predicate must agree exactly with the pandas mask in normalize_series,
-and the full hybrid expression must produce bit-identical output to the
-pure pandas UDF for every URL shape — fast, slow, malformed, null.
-The whole point of the hybrid is that Arrow ships a validity bitmap
-instead of the URL strings for fast rows, so any disagreement silently
-forks the frontier key space."""
+predicate must route every URL shape as annotated below and accept only
+fixed points of the chain, and the full hybrid expression must produce
+bit-identical output to the per-string chain for every URL shape —
+fast, slow, malformed, null. The whole point of the hybrid is that
+Arrow ships a validity bitmap instead of the URL strings for fast rows,
+so any disagreement silently forks the frontier key space."""
 
 import pandas as pd
 import pytest
 from pyspark.sql import functions as F
 
 from nutch_spark.urls.normalizer import (
-    _FAST_CANONICAL,
+    apply_extra_normalizers,
+    basic_normalize,
     fast_canonical_cond,
     normalize,
     normalize_col,
     normalize_series,
+    regex_normalize,
 )
 
 # every trap class the fast path carves around, plus plain members of
@@ -58,33 +60,47 @@ def _df(spark):
     return spark.createDataFrame([(u,) for u in URLS], "url string")
 
 
-def test_jvm_fast_mask_equals_pandas_mask(spark):
-    """fast_canonical_cond is the codegen twin of the pandas mask; they
-    must classify every URL identically (JVM null counts as slow)."""
+# the battery entries annotated "# fast" above
+FAST = {
+    "http://host3.example.com/doc/42",
+    "http://a.com/",
+    "https://a.b-c.example/x_y~z/42",
+    URLS[-1],
+}
+
+
+def test_jvm_fast_mask_routes_as_annotated(spark):
+    """fast_canonical_cond takes exactly the battery's fast rows (JVM
+    null counts as slow): every trap class goes to the slow path."""
     got = {
         r["url"]: bool(r["fast"])
         for r in _df(spark)
         .select("url", F.coalesce(fast_canonical_cond(F.col("url")), F.lit(False)).alias("fast"))
         .collect()
     }
-    s = pd.Series(URLS, dtype=object)
-    want_mask = (
-        s.str.match(_FAST_CANONICAL, na=False)
-        & ~s.str.contains("/.", regex=False, na=True)
-        & ~s.str.endswith(".", na=True)
-        & ~s.str.slice(8).str.contains("//", regex=False, na=True)
-    )
-    for u, want in zip(URLS, want_mask):
-        assert got[u] == bool(want), u
+    assert {u for u, fast in got.items() if fast} == FAST
+
+
+# the reference's default urlnormalizer.order (Basic, Regex) as
+# scope-taking steps: neither default plugin reads its scope
+_DEFAULT_ORDER = [
+    lambda u, scope: basic_normalize(u),
+    lambda u, scope: regex_normalize(u),
+]
 
 
 @pytest.mark.parametrize("scope", ["default", "inject", "outlink", "crawldb"])
 def test_normalize_col_matches_per_string_chain(spark, scope):
+    """normalize_col takes no scope: in each scope the operators call it
+    from (inject, outlink, crawldb, default) it must equal the default
+    chain run per string in that scope."""
     rows = _df(spark).select(
-        "url", normalize_col(F.col("url"), scope).alias("norm")
+        "url", normalize_col(F.col("url")).alias("norm")
     ).collect()
     for r in rows:
-        assert r["norm"] == normalize(r["url"], scope), r["url"]
+        want = apply_extra_normalizers(r["url"], _DEFAULT_ORDER, scope)
+        assert want == normalize(r["url"]), r["url"]
+        assert r["norm"] == want, r["url"]
 
 
 def test_fast_rows_are_fixed_points(spark):
@@ -107,7 +123,7 @@ def test_normalize_series_skips_nulls_without_python_calls():
 
     orig = mod.normalize
     try:
-        mod.normalize = lambda u, scope="default": calls.append(u) or orig(u, scope)
+        mod.normalize = lambda u: calls.append(u) or orig(u)
         out = normalize_series(pd.Series([None, None, "http://a.com/x?q=1", None], dtype=object))
     finally:
         mod.normalize = orig

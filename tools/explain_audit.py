@@ -3,7 +3,11 @@
 Writes BENCH/plans/<query>.txt with `.explain("formatted")` output plus
 a scan summary (PushedFilters / ReadSchema lines) so plan regressions
 (lost pushdown, Python UDF creeping into a hot path, unexpected
-global sort) are reviewable as text diffs.
+global sort) are reviewable as text diffs. A file is rewritten only
+when its plan differs from the committed one beyond the tokens that
+change on every run (expression ids, ``_common_expr_N`` and lambda
+variable names, exchange ``plan_id``s, JVM object addresses);
+otherwise the query prints ``unchanged``.
 
     python tools/explain_audit.py [sf_dir] [query ...]
 """
@@ -12,6 +16,7 @@ from __future__ import annotations
 
 import io
 import os
+import re
 import sys
 from contextlib import redirect_stdout
 
@@ -30,6 +35,33 @@ DEFAULT_QUERIES = [
     "dedup_mark",
     "depth_gate",
 ]
+
+# tokens that differ between two plannings of the same query
+_VOLATILE = [
+    (re.compile(r"#\d+"), "#N"),  # expression ids: url#123
+    (re.compile(r"_common_expr_\d+"), "_common_expr_N"),
+    (re.compile(r"(?<=lambda )([A-Za-z]+)_\d+"), r"\1_N"),  # lambda x_50
+    (re.compile(r"\[plan_id=\d+\]"), "[plan_id=N]"),
+    (re.compile(r"(?<=[\w\[$;])@[0-9a-f]+\b"), "@ADDR"),  # [B@6958aa64
+]
+
+
+def normalize_plan(text: str) -> str:
+    for pat, sub in _VOLATILE:
+        text = pat.sub(sub, text)
+    return text
+
+
+def write_if_changed(path: str, text: str) -> bool:
+    """Write ``text`` to ``path`` unless the file already holds the same
+    plan up to volatile tokens; returns whether it wrote."""
+    if os.path.exists(path):
+        with open(path) as f:
+            if normalize_plan(f.read()) == normalize_plan(text):
+                return False
+    with open(path, "w") as f:
+        f.write(text)
+    return True
 
 
 def main() -> int:
@@ -72,9 +104,11 @@ def main() -> int:
             + ("\n".join(flags) + "\n" if flags else "")
             + "=" * 72 + "\n"
         )
-        with open(f"BENCH/plans/{name}.txt", "w") as f:
-            f.write(summary + text)
-        print(f"{name}: exchanges={n_exchange} python_nodes={n_python} {' '.join(flags)}")
+        wrote = write_if_changed(f"BENCH/plans/{name}.txt", summary + text)
+        print(
+            f"{name}: exchanges={n_exchange} python_nodes={n_python} "
+            f"{'written' if wrote else 'unchanged'} {' '.join(flags)}"
+        )
     spark.stop()
     return rc
 

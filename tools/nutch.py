@@ -946,15 +946,20 @@ def cmd_showproperties(args) -> int:
 def cmd_normalizerchecker(args) -> int:
     from nutch_spark.urls.normalizer import normalize
 
-    out = normalize(args.url, scope=args.scope)
+    out = normalize(args.url)
     print(out if out is not None else "<rejected>")
     return 0
 
 
 def cmd_filterchecker(args) -> int:
-    from nutch_spark.urls.filters import default_filter
+    """URLFilterChecker: the default rule chain, evaluated by the same
+    JVM column the crawl filters with."""
+    from pyspark.sql import functions as F
 
-    ok = default_filter().accept(args.url)
+    from nutch_spark.urls.filters import DEFAULT_RULES, url_filter_cond
+
+    spark = _spark()
+    ok = spark.range(1).select(url_filter_cond(F.lit(args.url), DEFAULT_RULES)).first()[0]
     print(f"{'+' if ok else '-'}{args.url}")
     return 0
 
@@ -1170,7 +1175,7 @@ def main(argv: list[str] | None = None) -> int:
     s.set_defaults(fn=cmd_showproperties)
 
     s = sub.add_parser("normalizerchecker")
-    s.add_argument("url"); s.add_argument("--scope", default="default")
+    s.add_argument("url")
     s.set_defaults(fn=cmd_normalizerchecker)
 
     s = sub.add_parser("filterchecker")

@@ -15,6 +15,11 @@ commits, the way an Iceberg catalog would:
   per-file manifest (rows/bytes/url zone map read from the parquet
   footers at commit) — the north rule's per-partition lineage +
   fetch/parse metrics;
+- each snapshot records its Spark schema (JSON) and, through the
+  manifest, its row count (:attr:`Snapshot.rows`), as Iceberg table
+  metadata does: :meth:`read` hands the stored schema to the parquet
+  reader, so it starts no schema-inference job, and callers size a
+  snapshot without a ``count()``;
 - optimistic concurrency: commit fails if the parent snapshot moved
   (the ``.locked`` analogue, ``CrawlDb.java:69,191-195``).
 
@@ -37,6 +42,7 @@ from dataclasses import dataclass, field
 from typing import Any
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import StructType
 
 
 class ConcurrentCommitError(RuntimeError):
@@ -54,6 +60,14 @@ class Snapshot:
     # Iceberg-manifest-style per-file entries: {file, bytes, rows,
     # url_min, url_max} for each parquet part (one per write partition)
     manifest: list[dict[str, Any]] = field(default_factory=list)
+    # ``DataFrame.schema.json()`` of the committed frame; None on
+    # snapshots committed before schemas were recorded (read infers it)
+    schema: str | None = None
+
+    @property
+    def rows(self) -> int:
+        """Row count from the manifest (the parquet footers)."""
+        return sum(e["rows"] for e in self.manifest)
 
 
 def _file_manifest(snap_dir: str) -> list[dict[str, Any]]:
@@ -156,6 +170,17 @@ class SnapshotCatalog:
     def snapshots(self, table: str) -> list[Snapshot]:
         return [Snapshot(**s) for s in self._load_meta(table)["snapshots"]]
 
+    def snapshot(self, table: str, snapshot_id: int | None = None) -> Snapshot:
+        """The snapshot ``snapshot_id`` of ``table`` (default: current)."""
+        meta = self._load_meta(table)
+        sid = snapshot_id if snapshot_id is not None else meta["current_snapshot_id"]
+        if sid is None:
+            raise FileNotFoundError(f"no current snapshot for table {table}")
+        for s in meta["snapshots"]:
+            if s["snapshot_id"] == sid:
+                return Snapshot(**s)
+        raise FileNotFoundError(f"snapshot {sid} of {table} not found")
+
     def commit(
         self,
         df: DataFrame,
@@ -217,6 +242,7 @@ class SnapshotCatalog:
                 lineage=lineage or {},
                 metrics=metrics or {},
                 manifest=manifest,
+                schema=df.schema.json(),
             )
             meta["snapshots"].append(snap.__dict__)
             meta["current_snapshot_id"] = snap_id
@@ -226,14 +252,11 @@ class SnapshotCatalog:
     def read(
         self, spark: SparkSession, table: str, snapshot_id: int | None = None
     ) -> DataFrame:
-        meta = self._load_meta(table)
-        sid = snapshot_id if snapshot_id is not None else meta["current_snapshot_id"]
-        if sid is None:
-            raise FileNotFoundError(f"no current snapshot for table {table}")
-        for s in meta["snapshots"]:
-            if s["snapshot_id"] == sid:
-                return spark.read.parquet(os.path.join(self.root, table, s["path"]))
-        raise FileNotFoundError(f"snapshot {sid} of {table} not found")
+        snap = self.snapshot(table, snapshot_id)
+        reader = spark.read
+        if snap.schema is not None:
+            reader = reader.schema(StructType.fromJson(json.loads(snap.schema)))
+        return reader.parquet(os.path.join(self.root, table, snap.path))
 
     def update_snapshot_metrics(
         self, table: str, snapshot_id: int, metrics: dict[str, Any]

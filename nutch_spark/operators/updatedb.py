@@ -405,6 +405,8 @@ def updatedb_incremental(
     segment_rows: DataFrame,
     cfg: NutchConfig,
     now_ms: int,
+    *,
+    rows: tuple[int, int] | None = None,
     **kw,
 ) -> DataFrame:
     """updatedb that takes :func:`updatedb_split` when a cycle touches
@@ -425,17 +427,19 @@ def updatedb_incremental(
     precisely because local mode materializes the broadcast ONCE
     (BENCH/MEASUREMENT_LOG.md round-3i: fair per-variant probe at 31%
     touched, local[4] split 62.8s vs full 90.8s — both dispatches are
-    measured, the constant chooses the cluster-honest one). The two
-    counts spent here run over committed parquet in the crawl loop (the
-    CrawlDb snapshot and the segment tables committed before the merge),
-    so they are column-free parquet scans and re-execute no cycle
-    lineage.
+    measured, the constant chooses the cluster-honest one).
+
+    ``rows=(crawldb_rows, segment_rows)`` passes the two sizes when the
+    caller knows them: the crawl loop reads them from the manifests of
+    the CrawlDb snapshot and the segment tables it committed, so its
+    dispatch runs no Spark job. Without ``rows`` both frames are
+    counted, two more jobs over the inputs' lineage.
 
     Result is row-identical to ``updatedb(crawldb, segment_rows, ...)``
     on both paths.
     """
     if crawldb is not None:
-        db_n = crawldb.count()
-        if db_n and segment_rows.count() < cfg.db_update_incremental_max_touched * db_n:
+        db_n, seg_n = rows or (crawldb.count(), segment_rows.count())
+        if db_n and seg_n < cfg.db_update_incremental_max_touched * db_n:
             return updatedb_split(crawldb, segment_rows, cfg, now_ms, **kw)
     return updatedb(crawldb, segment_rows, cfg, now_ms, **kw)

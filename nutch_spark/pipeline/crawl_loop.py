@@ -6,16 +6,23 @@
         [invertlinks, dedup, hostdb updates via operators.*]
 
 Where the reference hands state across process boundaries through HDFS
-directories, this loop hands it through catalog snapshots. A cycle
-first commits its segment tables (``segment_NNNN_`` + ``crawl_fetch``,
-``crawl_parse``, ``crawl_redirect``, ``parse_text``, ``parse_data``,
-``parse_meta``), then merges the CrawlDb from the three datum tables
-read back at the snapshot ids those commits returned — as the
-reference's ``CrawlDb`` job merges the committed ``crawl_fetch`` /
+directories, this loop hands it through catalog snapshots. Inject
+commits the merged CrawlDb first and takes its size from the snapshot
+manifest, so the merge executes once. A cycle first commits its segment
+tables (``segment_NNNN_`` + ``crawl_fetch``, ``crawl_parse``,
+``crawl_redirect``, ``parse_text``, ``parse_data``, ``parse_meta``).
+The six commits are independent once the parse caches are filled, so
+they run concurrently from a pool of driver threads, each carrying the
+caller's job group. The cycle then merges the CrawlDb from the three
+datum tables read back at the snapshot ids those commits returned — as
+the reference's ``CrawlDb`` job merges the committed ``crawl_fetch`` /
 ``crawl_parse`` parts — and commits it last. So each cycle product
 executes once, in its own commit, and the merge plan's segment side is
-parquet scans. The CrawlDb commit's lineage {cycle_id, stage, parent
-snapshot, ``segment_snapshots``} names those segment snapshots, so
+parquet scans; the merge dispatch sizes both sides from the snapshot
+manifests, not from ``count()`` jobs. A failed cycle unpersists every
+frame it cached and leaves the CrawlDb uncommitted. The CrawlDb
+commit's lineage {cycle_id, stage, parent snapshot,
+``segment_snapshots``} names those segment snapshots, so
 ``updatedb`` over the parent snapshot and the named tables reproduces
 the committed CrawlDb; its metrics map carries the fetcher counters
 (observed on the ``crawl_fetch`` write) and the status counts (observed
@@ -31,6 +38,7 @@ itself is plain PySpark.
 from __future__ import annotations
 
 import time
+from concurrent.futures import ThreadPoolExecutor
 from dataclasses import dataclass, field
 from functools import reduce
 from typing import Any
@@ -38,13 +46,14 @@ from typing import Any
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.observation import Observation
+from pyspark.util import inheritable_thread_target
 
 from nutch_spark.catalog import SnapshotCatalog
 from nutch_spark.config import NutchConfig
 from nutch_spark.operators.fetchsim import fetch, fetched_content
 from nutch_spark.operators.generate import generate, mark_generated
 from nutch_spark.operators.inject import inject_full
-from nutch_spark.operators.parse import parse
+from nutch_spark.operators.parse import materialize_parse_caches, parse
 from nutch_spark.operators.updatedb import updatedb_incremental
 from nutch_spark.schema import DATUM_COLS, STATUS_NAMES
 
@@ -116,16 +125,18 @@ class Crawler:
             from nutch_spark.operators.depth import inject_depth_meta
 
             newdb = inject_depth_meta(newdb, self.cfg)
-        n = newdb.count()
-        self.catalog.commit(
-            newdb, CRAWLDB, now_ms=now_ms,
-            lineage={"stage": "inject"}, metrics={"urls": n},
+        # the commit is the merge's only execution; its size comes from
+        # the snapshot's manifest, not from a count() that re-runs it
+        snap = self.catalog.commit(
+            newdb, CRAWLDB, now_ms=now_ms, lineage={"stage": "inject"}
         )
-        return n
+        self.catalog.update_snapshot_metrics(CRAWLDB, snap.snapshot_id, {"urls": snap.rows})
+        return snap.rows
 
     def run_cycle(self, cycle_id: int, now_ms: int, top_n: int = 50000) -> CycleResult:
         t0 = time.time()
-        parent = self.catalog.current_snapshot_id(CRAWLDB)
+        parent_snap = self.catalog.snapshot(CRAWLDB)
+        parent = parent_snap.snapshot_id
         crawldb = self.catalog.read(self.spark, CRAWLDB)
 
         fl = generate(
@@ -133,184 +144,204 @@ class Crawler:
             url_filter_rules=self.url_filter_rules,
         )
         fl = fl.persist()
-        generated = fl.count()
-        if generated == 0:
-            fl.unpersist()
-            return CycleResult(cycle_id, 0, 0, crawldb.count(), {}, 0, time.time() - t0,
-                               parent or 0)
-
+        # every frame this cycle persists is unpersisted on every exit,
+        # so a failed cycle leaves no cache in a long-lived session
+        crawl_fetch = None
         wave_handles: list = []
-        if self.cfg.fetcher_follow_outlinks_depth > 0:
-            # F9: the reference fetcher follows outlinks in-fetch when
-            # fetcher.follow.outlinks.depth > 0 (FetcherThread.java:840).
-            # The follow already parsed waves 0..depth-1 to extract
-            # candidates — reuse those (persisted) parse products instead
-            # of re-running extraction over the whole union
-            from nutch_spark.operators.fetchsim import fetch_follow_outlinks
+        try:
+            generated = fl.count()
+            if generated == 0:
+                return CycleResult(cycle_id, 0, 0, parent_snap.rows, {}, 0,
+                                   time.time() - t0, parent)
 
-            crawl_fetch, redirect_links, parsed = fetch_follow_outlinks(
-                fl, self.robots, self.outcomes, self.docs, self.cfg, now_ms,
-                url_filter_rules=self.url_filter_rules, cleanup=wave_handles,
-                return_parsed=True,
+            if self.cfg.fetcher_follow_outlinks_depth > 0:
+                # F9: the reference fetcher follows outlinks in-fetch when
+                # fetcher.follow.outlinks.depth > 0 (FetcherThread.java:840).
+                # The follow already parsed waves 0..depth-1 to extract
+                # candidates — reuse those (persisted) parse products instead
+                # of re-running extraction over the whole union
+                from nutch_spark.operators.fetchsim import fetch_follow_outlinks
+
+                crawl_fetch, redirect_links, parsed = fetch_follow_outlinks(
+                    fl, self.robots, self.outcomes, self.docs, self.cfg, now_ms,
+                    url_filter_rules=self.url_filter_rules, cleanup=wave_handles,
+                    return_parsed=True,
+                )
+                crawl_fetch = crawl_fetch.drop("outlink_depth")
+                crawl_fetch = crawl_fetch.persist()
+            else:
+                crawl_fetch, redirect_links = fetch(
+                    fl, self.robots, self.outcomes, self.cfg, now_ms
+                )
+                crawl_fetch = crawl_fetch.persist()
+                content = fetched_content(crawl_fetch, self.docs)
+                parsed = parse(
+                    content, self.cfg, url_filter_rules=self.url_filter_rules,
+                    persist_handles=wave_handles,
+                )
+                # fill the caches before the segment commits fan out over
+                # them (see materialize_parse_caches)
+                materialize_parse_caches(wave_handles)
+
+            gates = bool(self.cfg.urlmeta_tags) or self.cfg.scoring_depth_enabled
+            # meta-refresh datums bypass the scoring filters in the reference
+            # (appended to crawlOut before the outlink-targets loop,
+            # ParseOutputFormat.java:283-293) — gate only the gateable slice
+            # and re-union the refresh datums after
+            crawl_parse = parsed["crawl_parse_gateable"] if gates else parsed["crawl_parse"]
+            if self.cfg.urlmeta_tags:
+                # urlmeta: configured tags ride from parent datum to outlinks
+                from nutch_spark.operators.urlmeta import propagate_url_meta
+
+                crawl_parse = propagate_url_meta(
+                    crawl_parse, crawl_fetch.select("url", "metadata"),
+                    list(self.cfg.urlmeta_tags),
+                )
+            if self.cfg.scoring_depth_enabled:
+                # scoring-depth: a page at its depth limit contributes no
+                # outlinks; survivors are stamped depth+1 (operators/depth.py)
+                from nutch_spark.operators.depth import depth_gate_outlinks
+
+                crawl_parse = depth_gate_outlinks(
+                    crawl_parse, crawl_fetch.select("url", "metadata"), self.cfg
+                )
+            if gates:
+                # ungated: refresh targets restart depth/meta like redirect
+                # targets (no parent stamp -> initialScore defaults)
+                crawl_parse = crawl_parse.unionByName(
+                    parsed["refresh_links"].select(*crawl_parse.columns)
+                )
+
+            # commit the segment FIRST: each product executes once, in its
+            # own write, and the merge below reads only committed parquet.
+            # The six writes are independent, so they run concurrently.
+            # The fetcher counters ride the crawl_fetch write via
+            # DataFrame.observe (SURVEY §4's fetcher counter table)
+            obs_fetch = Observation(f"cycle_{cycle_id}_fetch")
+            seg = f"segment_{cycle_id:04d}"
+            products = {
+                "crawl_fetch": crawl_fetch.observe(
+                    obs_fetch,
+                    F.count(F.lit(1)).alias("n"),
+                    F.max("fetch_time").alias("mk"),
+                    *_status_sums(_FETCH_STATUS_CODES),
+                ),
+                # the urlmeta/depth-PATCHED crawl_parse — the rows updatedb
+                # consumes — not parsed['crawl_parse']
+                "crawl_parse": crawl_parse,
+                # redirect-target datums: the reference writes them into
+                # crawl_fetch, but here every crawl_fetch row is a fetched
+                # fetchlist entry, so they get a table of their own
+                "crawl_redirect": redirect_links.select(*DATUM_COLS),
+                "parse_text": parsed["parse_text"],
+                "parse_data": parsed["parse_data"],
+                # per-doc meta directives (robots/noindex/base/refresh): the
+                # reference persists these inside ParseData's parse metadata
+                # (ParseOutputFormat.java:364-366) — IndexerMapReduce reads
+                # them for indexer.delete.robots.noindex, so an index job
+                # replayed from committed segments needs this table
+                "parse_meta": parsed["parse_meta"],
+            }
+            # each commit's jobs carry the caller's local properties (its
+            # job group). Every wrap clones them, so no two threads share
+            # one mutable copy (SQL execution ids are set in it). Leaving
+            # the pool waits for every commit, so a failed one re-raises
+            # below only after its siblings finished
+            with ThreadPoolExecutor(max_workers=len(products)) as pool:
+                futures = {
+                    f"{seg}_{name}": pool.submit(
+                        inheritable_thread_target(self.spark)(self.catalog.commit),
+                        df, f"{seg}_{name}", now_ms=now_ms, lineage={"cycle_id": cycle_id},
+                    )
+                    for name, df in products.items()
+                }
+            committed = {table: f.result() for table, f in futures.items()}
+            segment_snapshots = {table: s.snapshot_id for table, s in committed.items()}
+            _fetch_row = obs_fetch.get
+            fetched = int(_fetch_row["n"])
+            makespan = _fetch_row["mk"] or now_ms
+            fetch_status_counts = _named_counts(_fetch_row, _FETCH_STATUS_CODES)
+            # the merge reads the committed segment, not these caches (nor
+            # the per-wave follow intermediates persisted inside
+            # fetch_follow_outlinks); fl stays for mark_generated
+            crawl_fetch.unpersist()
+            for h in wave_handles:
+                h.unpersist()
+            merge_tables = [f"{seg}_{name}" for name in _MERGE_TABLES]
+            segment_rows = reduce(DataFrame.unionByName, [
+                self.catalog.read(self.spark, t, segment_snapshots[t]).select(*DATUM_COLS)
+                for t in merge_tables
+            ])
+
+            base_db = mark_generated(crawldb, fl) if self.cfg.generate_update_crawldb else crawldb
+            # fingerprint URL-seen split: untouched CrawlDb rows bypass the
+            # merge shuffle (row-identical to plain updatedb). The dispatch
+            # sizes both sides from the snapshot manifests (mark_generated
+            # keeps the CrawlDb's rows), so it runs no count()
+            newdb = updatedb_incremental(
+                base_db, segment_rows, self.cfg, now_ms,
+                rows=(parent_snap.rows, sum(committed[t].rows for t in merge_tables)),
             )
-            crawl_fetch = crawl_fetch.drop("outlink_depth")
-            crawl_fetch = crawl_fetch.persist()
-        else:
-            crawl_fetch, redirect_links = fetch(fl, self.robots, self.outcomes, self.cfg, now_ms)
-            crawl_fetch = crawl_fetch.persist()
-            content = fetched_content(crawl_fetch, self.docs)
-            parsed = parse(
-                content, self.cfg, url_filter_rules=self.url_filter_rules,
-                persist_handles=wave_handles,
+            if self.cfg.scoring_depth_enabled:
+                # newly discovered URLs take min(parent depth)+1; redirect
+                # targets (no stamp) restart at depth 1 per initialScore
+                # (broadcast segment-scale join; no frontier shuffle)
+                from nutch_spark.operators.depth import patch_new_url_depth
+
+                newdb = patch_new_url_depth(newdb, base_db, segment_rows, self.cfg)
+            if self.cfg.urlmeta_tags:
+                from nutch_spark.operators.urlmeta import patch_new_url_meta
+
+                newdb = patch_new_url_meta(
+                    newdb, base_db, segment_rows, list(self.cfg.urlmeta_tags)
+                )
+
+            # the parquet write is the only execution of the merge lineage;
+            # the CrawlDb status counts ride it via DataFrame.observe — no
+            # post-commit re-scan of the committed snapshot (read-contract
+            # probe in test_crawl_loop)
+            obs_db = Observation(f"cycle_{cycle_id}_db_status")
+            observed_db = newdb.observe(
+                obs_db, F.count(F.lit(1)).alias("total"), *_status_sums(_DB_STATUS_CODES)
             )
-            # fill the caches before the multi-branch segment commit
-            # fans out over them (see materialize_parse_caches)
-            from nutch_spark.operators.parse import materialize_parse_caches
-
-            materialize_parse_caches(wave_handles)
-
-        gates = bool(self.cfg.urlmeta_tags) or self.cfg.scoring_depth_enabled
-        # meta-refresh datums bypass the scoring filters in the reference
-        # (appended to crawlOut before the outlink-targets loop,
-        # ParseOutputFormat.java:283-293) — gate only the gateable slice
-        # and re-union the refresh datums after
-        crawl_parse = parsed["crawl_parse_gateable"] if gates else parsed["crawl_parse"]
-        if self.cfg.urlmeta_tags:
-            # urlmeta: configured tags ride from parent datum to outlinks
-            from nutch_spark.operators.urlmeta import propagate_url_meta
-
-            crawl_parse = propagate_url_meta(
-                crawl_parse, crawl_fetch.select("url", "metadata"),
-                list(self.cfg.urlmeta_tags),
+            snap = self.catalog.commit(
+                observed_db, CRAWLDB, now_ms=now_ms,
+                lineage={
+                    "stage": "updatedb",
+                    "cycle_id": cycle_id,
+                    "crawldb_parent_snapshot": parent,
+                    "segment_snapshots": segment_snapshots,
+                },
+                metrics={
+                    "generated": generated,
+                    "fetched": fetched,
+                    "virtual_makespan_ms": int(makespan - now_ms),
+                    "fetch_status_counts": fetch_status_counts,
+                },
+                expected_parent=parent,
             )
-        if self.cfg.scoring_depth_enabled:
-            # scoring-depth: a page at its depth limit contributes no
-            # outlinks; survivors are stamped depth+1 (operators/depth.py)
-            from nutch_spark.operators.depth import depth_gate_outlinks
-
-            crawl_parse = depth_gate_outlinks(
-                crawl_parse, crawl_fetch.select("url", "metadata"), self.cfg
+            # the write completed, so the observed metrics are available
+            # immediately (get would otherwise block)
+            _db_row = obs_db.get
+            status_counts = _named_counts(_db_row, _DB_STATUS_CODES)
+            db_size = int(_db_row["total"])
+            self.catalog.update_snapshot_metrics(
+                CRAWLDB, snap.snapshot_id, {"db_status_counts": status_counts}
             )
-        if gates:
-            # ungated: refresh targets restart depth/meta like redirect
-            # targets (no parent stamp -> initialScore defaults)
-            crawl_parse = crawl_parse.unionByName(
-                parsed["refresh_links"].select(*crawl_parse.columns)
+            return CycleResult(
+                cycle_id=cycle_id,
+                generated=generated,
+                fetched=fetched,
+                db_size=db_size,
+                status_counts=status_counts,
+                virtual_makespan_ms=int(makespan - now_ms),
+                wall_seconds=time.time() - t0,
+                snapshot_id=snap.snapshot_id,
             )
-
-        # commit the segment FIRST: each product executes once, in its
-        # own write, and the merge below reads only committed parquet.
-        # The fetcher counters ride the crawl_fetch write via
-        # DataFrame.observe (SURVEY §4's fetcher counter table)
-        obs_fetch = Observation(f"cycle_{cycle_id}_fetch")
-        seg = f"segment_{cycle_id:04d}"
-        products = {
-            "crawl_fetch": crawl_fetch.observe(
-                obs_fetch,
-                F.count(F.lit(1)).alias("n"),
-                F.max("fetch_time").alias("mk"),
-                *_status_sums(_FETCH_STATUS_CODES),
-            ),
-            # the urlmeta/depth-PATCHED crawl_parse — the rows updatedb
-            # consumes — not parsed['crawl_parse']
-            "crawl_parse": crawl_parse,
-            # redirect-target datums: the reference writes them into
-            # crawl_fetch, but here every crawl_fetch row is a fetched
-            # fetchlist entry, so they get a table of their own
-            "crawl_redirect": redirect_links.select(*DATUM_COLS),
-            "parse_text": parsed["parse_text"],
-            "parse_data": parsed["parse_data"],
-            # per-doc meta directives (robots/noindex/base/refresh): the
-            # reference persists these inside ParseData's parse metadata
-            # (ParseOutputFormat.java:364-366) — IndexerMapReduce reads
-            # them for indexer.delete.robots.noindex, so an index job
-            # replayed from committed segments needs this table
-            "parse_meta": parsed["parse_meta"],
-        }
-        segment_snapshots = {}
-        for name, df in products.items():
-            table = f"{seg}_{name}"
-            segment_snapshots[table] = self.catalog.commit(
-                df, table, now_ms=now_ms, lineage={"cycle_id": cycle_id}
-            ).snapshot_id
-        _fetch_row = obs_fetch.get
-        fetched = int(_fetch_row["n"])
-        makespan = _fetch_row["mk"] or now_ms
-        fetch_status_counts = _named_counts(_fetch_row, _FETCH_STATUS_CODES)
-        # the merge reads the committed segment, not these caches (nor
-        # the per-wave follow intermediates persisted inside
-        # fetch_follow_outlinks); fl stays for mark_generated
-        crawl_fetch.unpersist()
-        for h in wave_handles:
-            h.unpersist()
-        segment_rows = reduce(DataFrame.unionByName, [
-            self.catalog.read(
-                self.spark, f"{seg}_{name}", segment_snapshots[f"{seg}_{name}"]
-            ).select(*DATUM_COLS)
-            for name in _MERGE_TABLES
-        ])
-
-        base_db = mark_generated(crawldb, fl) if self.cfg.generate_update_crawldb else crawldb
-        # fingerprint URL-seen split: untouched CrawlDb rows bypass the
-        # merge shuffle (row-identical to plain updatedb)
-        newdb = updatedb_incremental(base_db, segment_rows, self.cfg, now_ms)
-        if self.cfg.scoring_depth_enabled:
-            # newly discovered URLs take min(parent depth)+1; redirect
-            # targets (no stamp) restart at depth 1 per initialScore
-            # (broadcast segment-scale join; no frontier shuffle)
-            from nutch_spark.operators.depth import patch_new_url_depth
-
-            newdb = patch_new_url_depth(newdb, base_db, segment_rows, self.cfg)
-        if self.cfg.urlmeta_tags:
-            from nutch_spark.operators.urlmeta import patch_new_url_meta
-
-            newdb = patch_new_url_meta(
-                newdb, base_db, segment_rows, list(self.cfg.urlmeta_tags)
-            )
-
-        # the parquet write is the only execution of the merge lineage;
-        # the CrawlDb status counts ride it via DataFrame.observe — no
-        # post-commit re-scan of the committed snapshot (read-contract
-        # probe in test_crawl_loop)
-        obs_db = Observation(f"cycle_{cycle_id}_db_status")
-        observed_db = newdb.observe(
-            obs_db, F.count(F.lit(1)).alias("total"), *_status_sums(_DB_STATUS_CODES)
-        )
-        snap = self.catalog.commit(
-            observed_db, CRAWLDB, now_ms=now_ms,
-            lineage={
-                "stage": "updatedb",
-                "cycle_id": cycle_id,
-                "crawldb_parent_snapshot": parent,
-                "segment_snapshots": segment_snapshots,
-            },
-            metrics={
-                "generated": generated,
-                "fetched": fetched,
-                "virtual_makespan_ms": int(makespan - now_ms),
-                "fetch_status_counts": fetch_status_counts,
-            },
-            expected_parent=parent,
-        )
-        # the write completed, so the observed metrics are available
-        # immediately (get would otherwise block)
-        _db_row = obs_db.get
-        status_counts = _named_counts(_db_row, _DB_STATUS_CODES)
-        db_size = int(_db_row["total"])
-        self.catalog.update_snapshot_metrics(
-            CRAWLDB, snap.snapshot_id, {"db_status_counts": status_counts}
-        )
-        fl.unpersist()
-        return CycleResult(
-            cycle_id=cycle_id,
-            generated=generated,
-            fetched=fetched,
-            db_size=db_size,
-            status_counts=status_counts,
-            virtual_makespan_ms=int(makespan - now_ms),
-            wall_seconds=time.time() - t0,
-            snapshot_id=snap.snapshot_id,
-        )
+        finally:
+            for h in (fl, crawl_fetch, *wave_handles):
+                if h is not None:
+                    h.unpersist()
 
     def crawl(self, seeds, n_cycles: int, start_ms: int, top_n: int = 50000,
               cycle_ms: int = 3_600_000) -> list[CycleResult]:

@@ -62,15 +62,14 @@ def start_seed_stream(
             spark, old, batch_df, cfg, now_ms, url_filter_rules=url_filter_rules
         )
         # commit FIRST — the parquet write is the only execution of the
-        # inject lineage; the urls metric then comes from a count of the
-        # committed snapshot (metadata-only scan) instead of re-running
-        # the whole merge DAG per micro-batch
+        # inject lineage; the urls metric then comes from the committed
+        # snapshot's manifest instead of re-running the merge DAG per
+        # micro-batch
         snap = catalog.commit(
             newdb, CRAWLDB, now_ms=now_ms,
             lineage={"stage": "inject_stream", "batch_id": batch_id},
         )
-        n = catalog.read(spark, CRAWLDB, snap.snapshot_id).count()
-        catalog.update_snapshot_metrics(CRAWLDB, snap.snapshot_id, {"urls": n})
+        catalog.update_snapshot_metrics(CRAWLDB, snap.snapshot_id, {"urls": snap.rows})
 
     writer = (
         lines.writeStream.foreachBatch(handle)

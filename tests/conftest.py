@@ -15,3 +15,12 @@ def spark():
         },
     )
     yield s
+
+
+@pytest.fixture(scope="session")
+def web(spark):
+    """The small synthetic web (300 docs on 10 hosts) the crawl-cycle
+    tests run over."""
+    from nutch_spark.data.frontier import synth_web
+
+    return synth_web(spark, n_docs=300, n_hosts=10)

@@ -155,3 +155,71 @@ def test_commit_records_per_file_manifest(spark, tmp_path):
     snap2 = cat.commit(spark.range(7).toDF("id"), "u", now_ms=2)
     assert sum(f["rows"] for f in snap2.manifest) == 7
     assert all("url_min" not in f for f in snap2.manifest)
+
+
+def _sorted_rows(df):
+    return sorted(repr(r) for r in df.collect())
+
+
+def test_recorded_schema_reads_like_inference_for_a_crawl_cycle(spark, web, tmp_path):
+    """Every table one crawl cycle commits (the CrawlDb and the six
+    segment tables) reads back through its recorded schema with the
+    schema and rows that parquet inference gives, and its manifest row
+    count equals a count of the table."""
+    import os
+
+    from nutch_spark.config import NutchConfig
+    from nutch_spark.pipeline.crawl_loop import Crawler
+    from nutch_spark.urls.filters import CRAWL_RULES
+
+    cat = SnapshotCatalog(str(tmp_path / "cat"))
+    crawler = Crawler(
+        spark, cat, NutchConfig(fetch_partitions=4), web["docs"], web["robots"],
+        web["outcomes"], url_filter_rules=CRAWL_RULES,
+    )
+    crawler.inject(web["seeds"], 1_700_000_000_000)
+    crawler.run_cycle(1, 1_700_003_600_000, top_n=50)
+    tables = cat.tables()
+    assert len(tables) == 7
+    for table in tables:
+        snap = cat.snapshot(table)
+        assert snap.schema is not None
+        read = cat.read(spark, table)
+        inferred = spark.read.parquet(os.path.join(cat.root, table, snap.path))
+        assert read.schema == inferred.schema, table
+        assert _sorted_rows(read) == _sorted_rows(inferred), table
+        assert snap.rows == read.count(), table
+
+
+def test_read_starts_no_spark_job(spark, tmp_path):
+    cat = SnapshotCatalog(str(tmp_path / "cat"))
+    cat.commit(spark.range(7).selectExpr("id", "cast(id as string) AS url"), "t")
+    sc = spark.sparkContext
+    sc.setJobGroup("catalog_read", "catalog.read")
+    try:
+        df = cat.read(spark, "t")
+        assert df.columns == ["id", "url"]
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert sc.statusTracker().getJobIdsForGroup("catalog_read") == []
+    assert cat.snapshot("t").rows == df.count() == 7
+
+
+def test_snapshot_without_recorded_schema_still_reads(spark, tmp_path):
+    """A snapshot committed before schemas were recorded is read by
+    parquet inference."""
+    import json
+
+    cat = SnapshotCatalog(str(tmp_path / "cat"))
+    df = spark.range(4).selectExpr("id", "map('k', id) AS m")
+    snap = cat.commit(df, "t")
+    recorded = cat.read(spark, "t")
+    meta_path = tmp_path / "cat" / "t" / "metadata.json"
+    meta = json.loads(meta_path.read_text())
+    del meta["snapshots"][0]["schema"]
+    meta_path.write_text(json.dumps(meta))
+    assert cat.snapshot("t").schema is None
+    old = cat.read(spark, "t")
+    assert old.schema == recorded.schema
+    assert _sorted_rows(old) == _sorted_rows(recorded)
+    assert cat.snapshot("t", snap.snapshot_id).rows == 4

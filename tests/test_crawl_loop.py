@@ -9,16 +9,11 @@ from pyspark.sql import types as T
 from nutch_spark import schema as S
 from nutch_spark.catalog import SnapshotCatalog
 from nutch_spark.config import NutchConfig
-from nutch_spark.data.frontier import synth_seeds, synth_web
+from nutch_spark.data.frontier import synth_seeds
 from nutch_spark.pipeline.crawl_loop import Crawler
 from nutch_spark.urls.filters import CRAWL_RULES
 
 START = 1_700_000_000_000
-
-
-@pytest.fixture(scope="module")
-def web(spark):
-    return synth_web(spark, n_docs=300, n_hosts=10)
 
 
 def make_crawler(spark, web, tmp_path, **cfg_kw):
@@ -307,3 +302,107 @@ def test_crawl_loop_with_outlink_follow(spark, web, tmp_path):
     # URL-seen invariant survives duplicate in-fetch datums
     db = cat.read(spark, "crawldb")
     assert db.count() == db.select("url").distinct().count()
+
+
+def _no_count(self):
+    raise AssertionError("count() re-executes a plan the catalog has already sized")
+
+
+def test_inject_and_merge_dispatch_run_no_count(spark, web, tmp_path, monkeypatch):
+    """Inject commits first and sizes the CrawlDb from the snapshot
+    manifest, and the merge dispatch sizes the CrawlDb and the segment
+    from the manifests, so neither executes its plan a second time
+    through DataFrame.count."""
+    from nutch_spark.pipeline import crawl_loop
+
+    # the session's concrete DataFrame class, which defines count()
+    DataFrame = type(web["docs"])
+    crawler, cat = make_crawler(spark, web, tmp_path)
+    with monkeypatch.context() as m:
+        m.setattr(DataFrame, "count", _no_count)
+        n = crawler.inject(web["seeds"], START)
+    assert n == cat.read(spark, "crawldb").count() > 0
+    assert cat.snapshot("crawldb").metrics == {"urls": n}
+
+    dispatch = crawl_loop.updatedb_incremental
+
+    def guarded_dispatch(*args, **kw):
+        with monkeypatch.context() as m:
+            m.setattr(DataFrame, "count", _no_count)
+            return dispatch(*args, **kw)
+
+    monkeypatch.setattr(crawl_loop, "updatedb_incremental", guarded_dispatch)
+    res = crawler.run_cycle(1, START + 3_600_000, top_n=100)
+    assert res.generated > 0
+    assert res.db_size == cat.read(spark, "crawldb").count()
+
+
+SEGMENT_PRODUCTS = (
+    "crawl_fetch", "crawl_parse", "crawl_redirect", "parse_text", "parse_data", "parse_meta",
+)
+
+
+def test_concurrent_segment_commits_run_in_the_callers_job_group(spark, web, tmp_path):
+    """The segment commits run on pool threads: each of their jobs
+    still carries the caller's job group, so no job of the cycle is
+    untagged, and the lineage names the tables in the order the cycle
+    builds them, not in the order the commits finished."""
+    crawler, cat = make_crawler(spark, web, tmp_path)
+    crawler.inject(web["seeds"], START)
+    sc = spark.sparkContext
+    tracker = sc.statusTracker()
+    untagged_before = set(tracker.getJobIdsForGroup(None))
+    sc.setJobGroup("run_cycle_group", "run_cycle")
+    try:
+        crawler.run_cycle(1, START + 3_600_000, top_n=100)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert tracker.getJobIdsForGroup("run_cycle_group")
+    assert set(tracker.getJobIdsForGroup(None)) - untagged_before == set()
+    lineage = cat.snapshot("crawldb").lineage
+    assert list(lineage["segment_snapshots"]) == [
+        f"segment_0001_{t}" for t in SEGMENT_PRODUCTS
+    ]
+
+
+def test_failed_segment_commit_leaves_no_cache_and_no_crawldb_commit(
+    spark, web, tmp_path, monkeypatch
+):
+    """A cycle whose parse_data commit fails raises to the caller after
+    its sibling commits finish, commits no CrawlDb, unpersists every
+    frame it cached and leaves no pool thread behind; re-running the
+    cycle then gives the CrawlDb of an uninterrupted run."""
+    import threading
+
+    now_ms = START + 3_600_000
+    clean, clean_cat = make_crawler(spark, web, tmp_path / "clean")
+    clean.inject(web["seeds"], START)
+    clean.run_cycle(1, now_ms, top_n=100)
+
+    crawler, cat = make_crawler(spark, web, tmp_path / "failed")
+    crawler.inject(web["seeds"], START)
+    injected = cat.current_snapshot_id("crawldb")
+    jsc = spark.sparkContext._jsc
+    persisted, threads = jsc.getPersistentRDDs().size(), threading.active_count()
+    commit = SnapshotCatalog.commit
+
+    def failing_commit(self, df, table, **kw):
+        if table == "segment_0001_parse_data":
+            raise OSError("segment_0001_parse_data: disk full")
+        return commit(self, df, table, **kw)
+
+    with monkeypatch.context() as m:
+        m.setattr(SnapshotCatalog, "commit", failing_commit)
+        with pytest.raises(OSError, match="disk full"):
+            crawler.run_cycle(1, now_ms, top_n=100)
+    assert cat.current_snapshot_id("crawldb") == injected
+    assert jsc.getPersistentRDDs().size() == persisted
+    assert threading.active_count() == threads
+    # the siblings of the failed commit finished before the error surfaced
+    assert cat.exists("segment_0001_parse_meta")
+    assert not cat.exists("segment_0001_parse_data")
+
+    crawler.run_cycle(1, now_ms, top_n=100)
+    assert _value_hash(cat.read(spark, "crawldb")) == _value_hash(
+        clean_cat.read(spark, "crawldb")
+    )

@@ -40,3 +40,25 @@ def test_changed_or_missing_plan_is_written(tmp_path):
     assert path.read_text() == changed
     # an id that is not volatile text (a different column) still counts
     assert explain_audit.normalize_plan("[url#1]") != explain_audit.normalize_plan("[host#1]")
+
+
+def test_committed_sf_dir_reads_the_plan_header(tmp_path, monkeypatch):
+    path = tmp_path / "q.txt"
+    path.write_text(
+        "query: q\nsf_dir: /data/sf0.01\nexchanges: 3\npython_nodes: 0\n"
+        + "=" * 72 + "\n" + PLAN
+    )
+    assert explain_audit.committed_sf_dir(str(path)) == "/data/sf0.01"
+    # no committed file, or a file without the header: the default sf
+    monkeypatch.setattr(explain_audit, "DEFAULT_SF_DIR", "/data/sf0.001")
+    assert explain_audit.committed_sf_dir(str(tmp_path / "new.txt")) == "/data/sf0.001"
+    path.write_text(PLAN)
+    assert explain_audit.committed_sf_dir(str(path)) == "/data/sf0.001"
+
+
+def test_committed_plans_keep_their_scale_factor():
+    """The four plans made at sf0.01 rerun there by default."""
+    for name in ("parse_outlinks", "crawldb_404_purge", "meta_directives",
+                 "parse_meta_effects"):
+        assert explain_audit.committed_sf_dir(f"BENCH/plans/{name}.txt").endswith("sf0.01")
+    assert explain_audit.committed_sf_dir("BENCH/plans/dedup_mark.txt").endswith("sf0.001")

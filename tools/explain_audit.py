@@ -10,6 +10,11 @@ variable names, exchange ``plan_id``s, JVM object addresses);
 otherwise the query prints ``unchanged``.
 
     python tools/explain_audit.py [sf_dir] [query ...]
+
+An ``sf_dir`` argument applies to every query. Without one, each query
+reruns at the ``sf_dir:`` its committed plan file names, so a default
+run does not rewrite a plan that was made at another scale factor; a
+query with no committed file uses ``DEFAULT_SF_DIR``.
 """
 
 from __future__ import annotations
@@ -21,6 +26,8 @@ import sys
 from contextlib import redirect_stdout
 
 sys.path.insert(0, ".")
+
+DEFAULT_SF_DIR = "/root/testdata/sf0.001"
 
 DEFAULT_QUERIES = [
     "updatedb_states",
@@ -64,9 +71,23 @@ def write_if_changed(path: str, text: str) -> bool:
     return True
 
 
+def committed_sf_dir(path: str) -> str:
+    """The ``sf_dir:`` header of the plan file at ``path``, or
+    ``DEFAULT_SF_DIR`` when there is no file or no such header."""
+    if os.path.exists(path):
+        with open(path) as f:
+            for line in f:
+                if line.startswith("sf_dir: "):
+                    return line[len("sf_dir: "):].strip()
+                if line.startswith("="):  # end of the summary header
+                    break
+    return DEFAULT_SF_DIR
+
+
 def main() -> int:
-    sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.001"
-    names = sys.argv[2:] or DEFAULT_QUERIES
+    args = sys.argv[1:]
+    given_sf_dir = args.pop(0) if args and os.path.isdir(args[0]) else None
+    names = args or DEFAULT_QUERIES
 
     import __spark_entry__ as E
     from nutch_spark.session import get_spark
@@ -76,6 +97,8 @@ def main() -> int:
     qs = E.queries()
     rc = 0
     for name in names:
+        path = f"BENCH/plans/{name}.txt"
+        sf_dir = given_sf_dir or committed_sf_dir(path)
         # one bad name / one analysis error must not abort the audit and
         # leave the remaining plan files silently stale
         try:
@@ -104,7 +127,7 @@ def main() -> int:
             + ("\n".join(flags) + "\n" if flags else "")
             + "=" * 72 + "\n"
         )
-        wrote = write_if_changed(f"BENCH/plans/{name}.txt", summary + text)
+        wrote = write_if_changed(path, summary + text)
         print(
             f"{name}: exchanges={n_exchange} python_nodes={n_python} "
             f"{'written' if wrote else 'unchanged'} {' '.join(flags)}"

@@ -253,6 +253,10 @@ class SnapshotCatalog:
         self, spark: SparkSession, table: str, snapshot_id: int | None = None
     ) -> DataFrame:
         snap = self.snapshot(table, snapshot_id)
+        if os.path.basename(snap.path) != snap.path or snap.path in ("", ".", ".."):
+            # metadata.json is data: a path that leaves the table dir
+            # would read files outside the warehouse
+            raise ValueError(f"{table}: snapshot path {snap.path!r} leaves the table dir")
         reader = spark.read
         if snap.schema is not None:
             reader = reader.schema(StructType.fromJson(json.loads(snap.schema)))

@@ -53,10 +53,6 @@ def crawldb_stats(crawldb: DataFrame) -> DataFrame:
     )
 
 
-def retries_histogram(crawldb: DataFrame) -> DataFrame:
-    return crawldb.groupBy("retries").count().orderBy("retries")
-
-
 def top_n(crawldb: DataFrame, n: int, min_score: float | None = None) -> DataFrame:
     """readdb -topN: global top-N by score (TakeOrdered, scalable)."""
     df = crawldb

@@ -69,16 +69,6 @@ STATUS_NAMES = {
 }
 
 
-def has_db_status(status: int) -> bool:
-    """CrawlDatum.hasDbStatus — status in the DB byte range (≤ 0x1f)."""
-    return 0 < status <= 0x1F
-
-
-def has_fetch_status(status: int) -> bool:
-    """CrawlDatum.hasFetchStatus — status in the fetch byte range."""
-    return 0x20 <= status <= 0x3F
-
-
 # Metadata keys (metadata/Nutch.java:33-86). The two hot ones are hoisted
 # to typed columns; the rest live in the open string->string metadata map.
 META_GENERATE_TIME = "_ngt_"
@@ -150,28 +140,3 @@ def new_datum(
         (v if isinstance(v, Column) else F.lit(v)).cast(f.dataType).alias(f.name)
         for f, v in zip(crawldb_schema().fields, values)
     ]
-
-
-def spans_schema() -> T.ArrayType:
-    """The interleaved text+media document payload (BASELINE.json input_hint)."""
-    return T.ArrayType(
-        T.StructType(
-            [
-                T.StructField("kind", T.StringType(), True),
-                T.StructField("text", T.StringType(), True),
-                T.StructField("media_ref", T.StringType(), True),
-                T.StructField("offset", T.IntegerType(), True),
-            ]
-        )
-    )
-
-
-def docs_schema() -> T.StructType:
-    """The fetchable corpus: doc_id (canonical URL) -> ordered spans."""
-    return T.StructType(
-        [
-            T.StructField("doc_id", T.StringType(), False),
-            T.StructField("spans", spans_schema(), True),
-        ]
-    )
-

@@ -1,9 +1,12 @@
 """bin/nutch-style CLI dispatcher: a reference user's playbook —
-inject, generate, readdb, mergedb, checkers — runs end-to-end over
-parquet table dirs (tools/nutch.py)."""
+inject, generate, fetch, parse, updatedb, readdb, mergedb, checkers —
+runs end-to-end over a crawl directory's catalog tables and plain
+parquet dirs (tools/nutch.py)."""
 
 import os
 import sys
+
+import pytest
 
 sys.path.insert(0, "tools")
 
@@ -21,9 +24,8 @@ def test_inject_generate_readdb_roundtrip(spark, tmp_path, capsys):
     assert nutch_cli.main(["inject", db, str(seeds)]) == 0
     assert "2 urls" in capsys.readouterr().out
 
-    fl = str(tmp_path / "fetchlist")
-    assert nutch_cli.main(["generate", db, fl, "--top-n", "10"]) == 0
-    assert "2 urls" in capsys.readouterr().out
+    assert nutch_cli.main(["generate", db, "--top-n", "10"]) == 0
+    assert f"2 urls in {tmp_path / 'segment_0001'}" in capsys.readouterr().out
 
     assert nutch_cli.main(["readdb", db, "-stats"]) == 0
     out = capsys.readouterr().out
@@ -38,13 +40,14 @@ def test_mergedb_and_checkers(spark, tmp_path, capsys):
     s1, s2 = tmp_path / "s1.txt", tmp_path / "s2.txt"
     s1.write_text("http://a.example.com/\n")
     s2.write_text("http://c.example.com/\n")
-    d1, d2 = str(tmp_path / "db1"), str(tmp_path / "db2")
+    d1, d2 = str(tmp_path / "c1" / "crawldb"), str(tmp_path / "c2" / "crawldb")
     nutch_cli.main(["inject", d1, str(s1)])
     nutch_cli.main(["inject", d2, str(s2)])
     capsys.readouterr()
-    out_db = str(tmp_path / "merged")
+    out_db = str(tmp_path / "merged" / "crawldb")
     assert nutch_cli.main(["mergedb", out_db, d1, d2]) == 0
     assert "2 urls" in capsys.readouterr().out
+    assert nutch_cli._read(spark, out_db).count() == 2
 
     assert nutch_cli.main(
         ["normalizerchecker", "HTTP://WWW.Example.COM:80/a/../b.html"]
@@ -82,28 +85,6 @@ def test_parsechecker_and_indexchecker(spark, tmp_path, capsys):
     assert "host :\th.example.com" in out
     assert "type :\ttext/html" in out
     assert "digest :" in out and "quality :" in out
-
-
-def test_install_preserves_old_until_new_lands(tmp_path):
-    """_install renames the previous table aside before the new one
-    moves in (CrawlDb.install): no window where the live dir is gone."""
-    import os
-
-    from nutch import _install
-
-    target = tmp_path / "db"
-    os.makedirs(target); (target / "a.parquet").write_text("old")
-    tmp = tmp_path / "db.tmp"
-    os.makedirs(tmp); (tmp / "b.parquet").write_text("new")
-    _install(str(tmp), str(target))
-    assert (target / "b.parquet").read_text() == "new"
-    assert not os.path.exists(tmp_path / "db.old")
-    assert not os.path.exists(tmp)
-    # fresh-install path (no previous table)
-    tmp2 = tmp_path / "db2.tmp"
-    os.makedirs(tmp2); (tmp2 / "c.parquet").write_text("new2")
-    _install(str(tmp2), str(tmp_path / "db2"))
-    assert (tmp_path / "db2" / "c.parquet").read_text() == "new2"
 
 
 def test_readlinkdb_dump_and_url(spark, tmp_path, capsys):
@@ -253,7 +234,10 @@ def test_readseg_dumps_redirect_datums(spark, tmp_path, capsys):
 
 
 def _stage_crawldb(spark, path, rows):
-    """rows: (url, status, score) triples -> full datum-schema parquet."""
+    """rows: (url, status, score) triples -> a full-datum-schema CrawlDb
+    committed as table ``crawldb`` of the warehouse ``path``'s parent."""
+    from nutch_spark.catalog import SnapshotCatalog
+
     df = spark.createDataFrame(
         [
             (u, s, 1_000, 0, 2592000, sc, f"sig_{u}", 0, {}, 900, None)
@@ -264,42 +248,40 @@ def _stage_crawldb(spark, path, rows):
         " modified_time long, metadata map<string,string>, gen_time long,"
         " repr_url string",
     )
-    df.write.parquet(path)
+    SnapshotCatalog(os.path.dirname(path)).commit(df, "crawldb")
     return df
 
 
-def test_freegen_fetch_parse_pipeline(spark, tmp_path, capsys):
-    """The reference playbook freegen -> fetch -> parse over the CLI:
-    a fetchlist built straight from seeds, fetched with the default
-    all-success outcomes, parsed into segment part tables."""
-    seeds = tmp_path / "seeds.txt"
-    seeds.write_text("http://a.example.com/x\nhttp://b.example.com/y\n")
-    fl = str(tmp_path / "fetchlist")
-    assert nutch_cli.main(["freegen", str(seeds), fl]) == 0
-    assert "2 urls" in capsys.readouterr().out
+def test_freegen_fetch_parse_pipeline(spark, web, tmp_path, capsys):
+    """The reference playbook freegen -> fetch -> parse over the CLI: a
+    fetchlist built straight from seeds as the segment's crawl_generate,
+    fetched with the default all-success outcomes, its pages parsed from
+    the docs corpus into the segment's parse tables."""
+    from nutch_spark.catalog import SnapshotCatalog
 
-    seg = str(tmp_path / "seg")
-    assert nutch_cli.main(["fetch", fl, seg]) == 0
+    urls = [r["value"] for r in web["seeds"].orderBy("value").limit(2).collect()]
+    seeds = tmp_path / "seeds.txt"
+    seeds.write_text("".join(u + "\n" for u in urls))
+    docs = str(tmp_path / "docs")
+    web["docs"].write.parquet(docs)
+    crawl = str(tmp_path / "crawl")
+    assert nutch_cli.main(["freegen", str(seeds), crawl]) == 0
+    assert "2 urls in " + os.path.join(crawl, "segment_0001") in capsys.readouterr().out
+
+    seg = os.path.join(crawl, "segment_0001")
+    assert nutch_cli.main(["fetch", seg]) == 0
     assert "2 urls fetched" in capsys.readouterr().out
-    cf = spark.read.parquet(seg + "_crawl_fetch")
+    cat = SnapshotCatalog(crawl)
+    cf = cat.read(spark, "segment_0001_crawl_fetch")
     assert cf.filter("status = 33").count() == 2  # fetch_success
 
-    content = str(tmp_path / "content")
-    spark.createDataFrame(
-        [
-            ("http://a.example.com/x", 1.0, 1_000, 900,
-             [("text", "hello world", None, 0),
-              ("link", "b", "http://b.example.com/y", 1)], True),
-        ],
-        "url string, score float, fetch_time long, gen_time long,"
-        " spans array<struct<kind:string,text:string,media_ref:string,offset:int>>,"
-        " is_canonical boolean",
-    ).write.parquet(content)
-    out = str(tmp_path / "parsed")
-    assert nutch_cli.main(["parse", content, out]) == 0
-    assert "1 documents parsed" in capsys.readouterr().out
-    links = spark.read.parquet(out + "_outlinks").collect()
-    assert [r["to_url"] for r in links] == ["http://b.example.com/y"]
+    assert nutch_cli.main(["parse", seg, "--docs", docs]) == 0
+    assert "2 documents parsed" in capsys.readouterr().out
+    links = cat.read(spark, "segment_0001_crawl_parse").filter("status = 67")
+    assert links.count() > 0  # linked: the outlinks the pages carry
+    # updatedb needs a CrawlDb to merge into
+    assert nutch_cli.main(["updatedb", os.path.join(crawl, "crawldb"), seg]) == 2
+    assert "inject first" in capsys.readouterr().err
 
 
 def test_index_clean_dump_exports(spark, tmp_path, capsys):
@@ -367,7 +349,7 @@ def test_webgraph_linkrank_scoreupdater_nodedumper(spark, tmp_path, capsys):
     db = str(tmp_path / "crawldb")
     _stage_crawldb(spark, db, [("http://a.example.com/", 2, 1.0)])
     assert nutch_cli.main(["scoreupdater", db, scores]) == 0
-    row = spark.read.parquet(db).first()
+    row = nutch_cli._read(spark, db).first()
     lr = spark.read.parquet(scores).where(
         "url = 'http://a.example.com/'").first()["score"]
     assert abs(row["score"] - lr) < 1e-6
@@ -439,10 +421,10 @@ def test_mergesegs_and_mergelinkdb(spark, tmp_path, capsys):
             [("http://t.example.com/", [(f"http://{frm}.example.com/", frm)])],
             "url string, inlinks array<struct<from_url:string,anchor:string>>",
         ).write.parquet(p)
-    ml = str(tmp_path / "ml")
+    ml = str(tmp_path / "linkdb")
     assert nutch_cli.main(["mergelinkdb", ml, l1, l2]) == 0
     assert "1 targets" in capsys.readouterr().out
-    assert len(spark.read.parquet(ml).first()["inlinks"]) == 2
+    assert len(nutch_cli._read(spark, ml).first()["inlinks"]) == 2
 
 
 def test_arc_segment_creator_cli(spark, tmp_path, capsys):
@@ -505,3 +487,154 @@ def test_filedump_and_resolveurls_cli(spark, tmp_path, capsys):
                           "host string, ip string").write.parquet(hosts)
     assert nutch_cli.main(["resolveurls", str(urls), "--hosts", hosts]) == 0
     assert "total: 2, resolved: 1, errored: 1" in capsys.readouterr().out
+
+
+START = 1_700_000_000_000
+HOUR = 3_600_000
+
+
+def _stage_web(spark, web, tmp_path):
+    """The web's seeds (ten per host, so some fetches redirect) as a
+    seed file, and its docs/robots/outcomes as parquet tables."""
+    from nutch_spark.data.frontier import synth_seeds
+
+    seeds = tmp_path / "seeds.txt"
+    lines = [r["value"] for r in synth_seeds(web["docs"], per_host=10).collect()]
+    seeds.write_text("".join(u + "\n" for u in lines))
+    paths = {"seeds": str(seeds)}
+    for name in ("docs", "robots", "outcomes"):
+        paths[name] = str(tmp_path / name)
+        web[name].write.parquet(paths[name])
+    return paths
+
+
+def _cli_cycle(crawl, web_paths, top_n):
+    """inject -> generate -> fetch -> parse -> updatedb over ``crawl``."""
+    db, seg = os.path.join(crawl, "crawldb"), os.path.join(crawl, "segment_0001")
+    now = ["--now-ms", str(START + HOUR)]
+    steps = [
+        ["--now-ms", str(START), "inject", db, web_paths["seeds"]],
+        now + ["generate", db, "--top-n", str(top_n)],
+        now + ["fetch", seg, "--robots", web_paths["robots"],
+               "--outcomes", web_paths["outcomes"]],
+        now + ["parse", seg, "--docs", web_paths["docs"]],
+        now + ["updatedb", db, seg],
+    ]
+    for argv in steps:
+        assert nutch_cli.main(argv) == 0, argv
+
+
+def test_cli_steps_commit_what_run_cycle_commits(spark, web, tmp_path, capsys):
+    """The five CLI step commands on one warehouse and Crawler.inject +
+    run_cycle on another, over the same inputs, NutchConfig() and clock,
+    commit equal CrawlDbs and six equal segment tables, and the CLI's
+    CrawlDb lineage names the six segment snapshots."""
+    from test_crawl_loop import SEGMENT_PRODUCTS, _value_hash
+
+    from nutch_spark.catalog import SnapshotCatalog
+    from nutch_spark.config import NutchConfig
+    from nutch_spark.pipeline.crawl_loop import Crawler
+
+    web_paths = _stage_web(spark, web, tmp_path)
+    crawl = str(tmp_path / "crawl")
+    _cli_cycle(crawl, web_paths, top_n=100)
+    capsys.readouterr()
+
+    ref = SnapshotCatalog(str(tmp_path / "ref"))
+    crawler = Crawler(spark, ref, NutchConfig(), web["docs"], web["robots"], web["outcomes"])
+    crawler.inject(web_paths["seeds"], START)
+    res = crawler.run_cycle(1, START + HOUR, top_n=100)
+    assert res.fetched > 0
+
+    cli = SnapshotCatalog(crawl)
+    tables = ["crawldb", *(f"segment_0001_{t}" for t in SEGMENT_PRODUCTS)]
+    for t in tables:
+        assert _value_hash(cli.read(spark, t)) == _value_hash(ref.read(spark, t)), t
+    assert cli.read(spark, "segment_0001_crawl_redirect").count() > 0
+    lineage = cli.snapshot("crawldb").lineage
+    assert lineage["segment_snapshots"] == {
+        t: cli.current_snapshot_id(t) for t in tables[1:]
+    }
+    assert lineage["crawldb_parent_snapshot"] == cli.snapshot("segment_0001_crawl_generate").lineage[
+        "crawldb_parent_snapshot"
+    ]
+    # the fetcher counters: the same in both CrawlDb snapshots' metrics
+    cli_m, ref_m = cli.snapshot("crawldb").metrics, ref.snapshot("crawldb").metrics
+    assert cli_m == ref_m and cli_m["fetched"] == res.fetched
+    # the next generate numbers its segment after the updated cycle
+    assert nutch_cli.main(["generate", os.path.join(crawl, "crawldb")]) == 0
+    assert "segment_0002" in capsys.readouterr().out
+
+
+def test_updatedb_refuses_a_crawldb_that_moved(spark, tmp_path, capsys):
+    """updatedb merges into the CrawlDb snapshot its segment was
+    generated from; a CrawlDb committed in between fails the commit."""
+    from nutch_spark.catalog import ConcurrentCommitError
+
+    seeds = tmp_path / "seeds.txt"
+    seeds.write_text("http://a.example.com/\nhttp://b.example.com/\n")
+    db, seg = str(tmp_path / "crawldb"), str(tmp_path / "segment_0001")
+    for argv in (["inject", db, str(seeds)], ["generate", db], ["fetch", seg]):
+        assert nutch_cli.main(argv) == 0
+    docs = str(tmp_path / "docs")
+    spark.createDataFrame(
+        [("http://a.example.com/", [("text", "a page", None, 0)], True)],
+        "doc_id string,"
+        " spans array<struct<kind:string,text:string,media_ref:string,offset:int>>,"
+        " is_canonical boolean",
+    ).write.parquet(docs)
+    assert nutch_cli.main(["parse", seg, "--docs", docs]) == 0
+    assert nutch_cli.main(["dedup", db]) == 0
+    with pytest.raises(ConcurrentCommitError):
+        nutch_cli.main(["updatedb", db, seg])
+
+
+def test_crawldb_writers_keep_the_snapshot_history(spark, tmp_path, capsys):
+    """dedup and scoreupdater commit a new CrawlDb snapshot: every
+    earlier one stays, and the table stays a catalog table."""
+    from nutch_spark.catalog import SnapshotCatalog
+
+    seeds = tmp_path / "seeds.txt"
+    seeds.write_text("http://a.example.com/\nhttp://b.example.com/\n")
+    db = str(tmp_path / "crawl" / "crawldb")
+    assert nutch_cli.main(["inject", db, str(seeds)]) == 0
+    assert nutch_cli.main(["inject", db, str(seeds)]) == 0
+    scores = str(tmp_path / "scores")
+    spark.createDataFrame(
+        [("http://a.example.com/", 0.5)], "url string, score float"
+    ).write.parquet(scores)
+    cat = SnapshotCatalog(str(tmp_path / "crawl"))
+    before = [s.snapshot_id for s in cat.snapshots("crawldb")]
+    assert nutch_cli.main(["dedup", db]) == 0
+    assert nutch_cli.main(["scoreupdater", db, scores]) == 0
+    snaps = cat.snapshots("crawldb")
+    assert [s.snapshot_id for s in snaps][:2] == before and len(snaps) == 4
+    assert [s.lineage["stage"] for s in snaps[2:]] == ["dedup", "scoreupdater"]
+    assert cat.exists("crawldb")
+    for s in snaps:
+        assert cat.read(spark, "crawldb", s.snapshot_id).count() == 2
+    scored = cat.read(spark, "crawldb").filter("url = 'http://a.example.com/'")
+    assert scored.first()["score"] == 0.5
+
+
+def test_writers_refuse_a_plain_parquet_table(spark, tmp_path, capsys):
+    """A CrawlDb or LinkDb writer whose target is plain parquet exits 2
+    and leaves the directory as it was."""
+    db = str(tmp_path / "crawldb")
+    spark.createDataFrame([("http://a.example.com/",)], "url string").write.parquet(db)
+    files = sorted(os.listdir(db))
+    seeds = tmp_path / "seeds.txt"
+    seeds.write_text("http://a.example.com/\n")
+    for argv in (["inject", db, str(seeds)], ["dedup", db], ["generate", db]):
+        assert nutch_cli.main(argv) == 2, argv
+        assert "plain parquet" in capsys.readouterr().err
+    assert sorted(os.listdir(db)) == files
+    ol = str(tmp_path / "outlinks")
+    spark.createDataFrame(
+        [("http://a.example.com/", "http://t.example.com/", "t")],
+        "url string, to_url string, anchor string",
+    ).write.parquet(ol)
+    assert nutch_cli.main(["invertlinks", db, ol]) == 2
+    # a CrawlDb is the crawldb table of its crawl dir
+    assert nutch_cli.main(["inject", str(tmp_path / "db"), str(seeds)]) == 2
+    assert "<crawl>/crawldb" in capsys.readouterr().err

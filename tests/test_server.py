@@ -75,10 +75,23 @@ def test_job_create_runs_the_cli(server):
     # flags map to --options
     _post(base, "/job/create", {
         "type": "GENERATE",
-        "args": {"crawldb": "a", "segment_dir": "b", "flags": {"top-n": 5}},
+        "args": {"crawldb": "c/crawldb", "flags": {"top-n": 5}},
     })
+    # the crawl steps name the crawl dir's crawldb and segment; parse
+    # takes its docs table as a required flag
+    _post(base, "/job/create", {
+        "type": "PARSE", "args": {"segment": "c/segment_0001", "docs": "d"},
+    })
+    _post(base, "/job/create", {
+        "type": "UPDATEDB", "args": {"crawldb": "c/crawldb", "segment": "c/segment_0001"},
+    })
+    assert _post(base, "/job/create", {
+        "type": "PARSE", "args": {"segment": "c/segment_0001"},
+    }) == (400, "PARSE args missing ['docs']")
     time.sleep(0.3)
-    assert ["generate", "a", "b", "--top-n", "5"] in calls
+    assert ["generate", "c/crawldb", "--top-n", "5"] in calls
+    assert ["parse", "c/segment_0001", "--docs", "d"] in calls
+    assert ["updatedb", "c/crawldb", "c/segment_0001"] in calls
 
 
 def test_job_states_list_and_errors(server):
@@ -149,6 +162,8 @@ def test_seed_and_admin(server, tmp_path):
 
 def test_end_to_end_inject_via_rest(spark, tmp_path):
     # the default runner is the real tools/nutch.py CLI
+    from nutch_spark.catalog import SnapshotCatalog
+
     seeds = tmp_path / "seeds.txt"
     seeds.write_text("http://a.example.com/\nhttp://b.example.com/\n")
     db = str(tmp_path / "crawldb")
@@ -163,7 +178,7 @@ def test_end_to_end_inject_via_rest(spark, tmp_path):
         })
         info = _wait_state(base, info["id"], timeout=120)
         assert info["state"] == "FINISHED"
-        assert spark.read.parquet(db).count() == 2
+        assert SnapshotCatalog(str(tmp_path)).read(spark, "crawldb").count() == 2
     finally:
         srv.shutdown()
 
@@ -281,5 +296,15 @@ def test_db_crawldb_end_to_end(spark, tmp_path, tmp_path_factory):
             base, "/reader/sequence/read?count=true", {"path": "crawl/crawldb"}
         )
         assert code == 200 and out["count"] == 2
+        # a catalog table under the root whose metadata points a snapshot
+        # outside it is refused, not followed
+        meta_path = crawl_id / "crawldb" / "metadata.json"
+        meta = json.loads(meta_path.read_text())
+        meta["snapshots"][-1]["path"] = f"../../../{outside.name}/db"
+        meta_path.write_text(json.dumps(meta))
+        code, _ = _post(base, "/reader/sequence/read?count=true", {"path": "crawl/crawldb"})
+        assert code == 400
+        code, _ = _post(base, "/db/crawldb", {"crawlId": str(crawl_id), "type": "stats"})
+        assert code == 400
     finally:
         srv.shutdown()

@@ -1,50 +1,55 @@
-"""bin/nutch-style command dispatcher over parquet table directories.
+"""bin/nutch-style command dispatcher over a crawl directory.
 
 The reference exposes each crawl stage as a CLI subcommand
 (``src/bin/nutch``); this is the same operational surface on Spark so
-a reference user can run their existing playbook verbatim:
+a reference user can run their existing playbook:
 
-    python tools/nutch.py inject   crawldb/ seeds.txt
-    python tools/nutch.py generate crawldb/ fetchlist/ --top-n 50000 --num-lists 8
-    python tools/nutch.py updatedb crawldb/ segment_rows/
-    python tools/nutch.py readdb   crawldb/ -stats
-    python tools/nutch.py readdb   crawldb/ -topN 10
-    python tools/nutch.py readdb   crawldb/ -dump out/ [--status N] [--regex R]
-    python tools/nutch.py mergedb  out/ db1/ db2/ ...
-    python tools/nutch.py invertlinks linkdb/ outlinks/
-    python tools/nutch.py readseg  -list wh/segment_0001 [...]
-    python tools/nutch.py readseg  wh/segment_0001 -dump out/ | -get URL
-    python tools/nutch.py dedup    crawldb/
-    python tools/nutch.py hostdb   crawldb/ hostdb/   (alias: updatehostdb)
+    python tools/nutch.py inject   crawl/crawldb seeds.txt
+    python tools/nutch.py generate crawl/crawldb --top-n 50000 [--num-lists 8]
+    python tools/nutch.py fetch    crawl/segment_0001 [--robots R --outcomes O --dns D]
+    python tools/nutch.py parse    crawl/segment_0001 --docs D
+    python tools/nutch.py updatedb crawl/crawldb crawl/segment_0001
+    python tools/nutch.py readdb   crawl/crawldb -stats
+    python tools/nutch.py readdb   crawl/crawldb -topN 10
+    python tools/nutch.py readdb   crawl/crawldb -dump out/ [--status N] [--regex R]
+    python tools/nutch.py mergedb  merged/crawldb crawl1/crawldb crawl2/crawldb ...
+    python tools/nutch.py invertlinks crawl/linkdb outlinks/
+    python tools/nutch.py readlinkdb crawl/linkdb -url http://t.example.com/1
+    python tools/nutch.py readseg  -list crawl/segment_0001 [...]
+    python tools/nutch.py readseg  crawl/segment_0001 -dump out/ | -get URL
+    python tools/nutch.py dedup    crawl/crawldb
+    python tools/nutch.py hostdb   crawl/crawldb hostdb/   (alias: updatehostdb)
     python tools/nutch.py readhostdb hostdb/ -get host.example.com
-    python tools/nutch.py freegen  seeds.txt fetchlist/
-    python tools/nutch.py fetch    fetchlist/ seg [--robots R --outcomes O]
-    python tools/nutch.py parse    seg_content/ seg
+    python tools/nutch.py freegen  seeds.txt crawl
     python tools/nutch.py mergesegs out/ seg1_rows/ seg2_rows/ [--slice N]
-    python tools/nutch.py mergelinkdb out/ ldb1/ ldb2/
-    python tools/nutch.py index    crawldb/ seg_parse_text/ out/ [--format csv]
-    python tools/nutch.py clean    crawldb/ deletes/
+    python tools/nutch.py mergelinkdb merged/linkdb ldb1/ ldb2/
+    python tools/nutch.py index    crawl/crawldb seg_parse_text/ out/ [--format csv]
+    python tools/nutch.py clean    crawl/crawldb deletes/
     python tools/nutch.py dump     seg_parse_text/ files/
     python tools/nutch.py commoncrawldump pages/ out/
-    python tools/nutch.py arc     arcs/ segments/
+    python tools/nutch.py arc      arcs/ segments/
     python tools/nutch.py warc     seg_content/ out/
-    python tools/nutch.py domainstats crawldb/ [--mode host|domain|suffix|tld]
-    python tools/nutch.py protocolstats crawldb/
-    python tools/nutch.py crawlcomplete crawldb/ [--mode host|domain]
+    python tools/nutch.py domainstats crawl/crawldb [--mode host|domain|suffix|tld]
+    python tools/nutch.py protocolstats crawl/crawldb
+    python tools/nutch.py crawlcomplete crawl/crawldb [--mode host|domain]
     python tools/nutch.py webgraph outlinks/ graph/
     python tools/nutch.py linkrank graph/ scores/ [--iterations 10]
-    python tools/nutch.py scoreupdater crawldb/ scores/
+    python tools/nutch.py scoreupdater crawl/crawldb scores/
     python tools/nutch.py nodedumper --group in --webgraph graph/ --topn 10
-    python tools/nutch.py sitemap  crawldb/ sitemaps/ [--overwrite]
-    python tools/nutch.py snapshots wh/ crawldb [-manifest]
+    python tools/nutch.py sitemap  crawl/crawldb sitemaps/ [--overwrite]
+    python tools/nutch.py snapshots crawl crawldb [-manifest]
     python tools/nutch.py showproperties
     python tools/nutch.py normalizerchecker 'http://WWW.Ex.COM:80/a/../b'
     python tools/nutch.py filterchecker 'https://example.com/x'
 
-Tables are parquet directories (the SnapshotCatalog wraps the same
-operators for versioned/resumable production use — crawl_loop.py);
-every subcommand is a thin shell over the operator modules, so command
-semantics and scale behavior are exactly the library's.
+A crawl directory is a SnapshotCatalog warehouse: ``crawl/crawldb`` is
+its table ``crawldb`` and ``crawl/segment_NNNN`` prefixes one cycle's
+segment tables. inject, generate, fetch, parse and updatedb run
+``Crawler``'s stages (``pipeline/crawl_loop.py``), the code
+``run_cycle`` runs. CrawlDb and LinkDb writers commit to the catalog and
+refuse a plain parquet target (exit 2); readers take either; other
+outputs are plain directories. Every subcommand is a thin shell over
+the library.
 """
 
 from __future__ import annotations
@@ -55,25 +60,16 @@ import sys
 
 sys.path.insert(0, os.path.join(os.path.dirname(__file__), ".."))
 
+from nutch_spark.catalog import SnapshotCatalog  # noqa: E402
 from nutch_spark.config import NutchConfig  # noqa: E402
+from nutch_spark.pipeline.crawl_loop import (  # noqa: E402
+    CRAWLDB, SEGMENT_TABLES, Crawler, commit_crawldb, last_cycle_id, segment_name,
+)
 
 
-def _install(tmp: str, target: str) -> None:
-    """CrawlDb.install semantics: the previous table is renamed aside
-    BEFORE the new one moves in, so a crash between steps leaves either
-    the old db or both — never neither. (A bare rmtree-then-replace has
-    a window where the live frontier is simply gone.)"""
-    import shutil
-
-    old = target.rstrip("/") + ".old"
-    if os.path.exists(old):
-        shutil.rmtree(old)
-    had_old = os.path.exists(target)
-    if had_old:
-        os.replace(target, old)
-    os.replace(tmp, target)
-    if had_old:
-        shutil.rmtree(old)
+class UsageError(Exception):
+    """A command refused its arguments; ``main`` prints why and exits 2,
+    as it does for a table or file that does not exist."""
 
 
 def _spark():
@@ -94,10 +90,6 @@ def _spark():
     )
 
 
-def _now(args) -> int:
-    return args.now_ms
-
-
 def _read(spark, path):
     """Read a table dir: plain parquet, or — when the dir carries a
     SnapshotCatalog ``metadata.json`` (crawl_loop's committed tables,
@@ -106,8 +98,6 @@ def _read(spark, path):
     loop's warehouse, not just bench-style plain-parquet prefixes."""
     p = path.rstrip("/")
     if os.path.exists(os.path.join(p, "metadata.json")):
-        from nutch_spark.catalog import SnapshotCatalog
-
         cat = SnapshotCatalog(os.path.dirname(p) or ".")
         return cat.read(spark, os.path.basename(p))
     return spark.read.parquet(path)
@@ -117,48 +107,99 @@ def _write(df, path):
     df.write.mode("overwrite").parquet(path)
 
 
-def cmd_inject(args) -> int:
-    from nutch_spark.operators.inject import inject_full
+def _table(path: str):
+    """A writer's target ``<dir>/<name>`` -> (catalog ``<dir>``, ``name``).
+    A plain parquet directory is refused, not converted: the catalog
+    would keep none of its history."""
+    p = path.rstrip("/")
+    if os.path.isdir(p) and os.listdir(p) and not os.path.exists(os.path.join(p, "metadata.json")):
+        raise UsageError(f"{path} is a plain parquet directory, not a catalog table")
+    return SnapshotCatalog(os.path.dirname(p) or "."), os.path.basename(p)
 
-    spark = _spark()
-    cfg = NutchConfig()
-    db = _read(spark, args.crawldb) if os.path.exists(args.crawldb) else None
-    out = inject_full(spark, db, args.seeds, cfg, _now(args))
-    # write-then-swap semantics belong to the catalog; plain CLI mode
-    # writes to a temp dir then replaces, mirroring CrawlDb.install
-    tmp = args.crawldb.rstrip("/") + ".tmp"
-    _write(out, tmp)
-    _install(tmp, args.crawldb)
-    print(f"inject: crawldb now {_read(spark, args.crawldb).count()} urls")
+
+def _crawldb(path: str) -> SnapshotCatalog:
+    cat, name = _table(path)
+    if name != CRAWLDB:
+        raise UsageError(f"{path}: a CrawlDb is the table <crawl>/{CRAWLDB}")
+    return cat
+
+
+def _segment(path: str, part: str):
+    """``<crawl>/segment_NNNN`` and one of its tables -> (catalog
+    ``<crawl>``, cycle NNNN, the table's name); the table must exist."""
+    p = path.rstrip("/")
+    name = os.path.basename(p)
+    if not (name.startswith("segment_") and name[8:].isdigit()):
+        raise UsageError(f"{path}: a segment is <crawl>/segment_NNNN")
+    cat, cycle_id = SnapshotCatalog(os.path.dirname(p) or "."), int(name[8:])
+    table = f"{segment_name(cycle_id)}_{part}"
+    cat.snapshot(table)
+    return cat, cycle_id, table
+
+
+def _crawler(cat: SnapshotCatalog, **web) -> Crawler:
+    return Crawler(_spark(), cat, NutchConfig(), **web)
+
+
+def cmd_inject(args) -> int:
+    n = _crawler(_crawldb(args.crawldb)).inject(args.seeds, args.now_ms)
+    print(f"inject: crawldb now {n} urls")
     return 0
 
 
-def cmd_generate(args) -> int:
-    from nutch_spark.operators.generate import generate
+def _commit_fetchlist(crawler: Crawler, fl, now_ms: int, parent_id) -> str:
+    """Commit ``fl`` as the next cycle's ``crawl_generate``, naming the
+    CrawlDb snapshot it came from; returns what to print."""
+    cycle_id = last_cycle_id(crawler.catalog) + 1
+    (snap,) = crawler.commit_segment(
+        cycle_id, now_ms, {"crawl_generate": fl}, crawldb_parent_snapshot=parent_id
+    ).values()
+    return f"{snap.rows} urls in {os.path.join(crawler.catalog.root, segment_name(cycle_id))}"
 
-    spark = _spark()
-    cfg = NutchConfig()
-    fl = generate(
-        _read(spark, args.crawldb), cfg, _now(args),
+
+def cmd_generate(args) -> int:
+    cat = _crawldb(args.crawldb)
+    parent = cat.current_snapshot_id(CRAWLDB)
+    crawler = _crawler(cat)
+    fl = crawler.generate(
+        cat.read(crawler.spark, CRAWLDB, parent), args.now_ms,
         top_n=args.top_n, num_lists=args.num_lists, jexl=args.expr,
     )
-    _write(fl, args.out)
-    print(f"generate: {_read(spark, args.out).count()} urls in fetchlist")
+    print("generate: " + _commit_fetchlist(crawler, fl, args.now_ms, parent))
     return 0
 
 
 def cmd_updatedb(args) -> int:
-    from nutch_spark.operators.updatedb import updatedb
-
-    spark = _spark()
-    cfg = NutchConfig()
-    db = _read(spark, args.crawldb) if os.path.exists(args.crawldb) else None
-    out = updatedb(db, _read(spark, args.segment), cfg, _now(args))
-    tmp = args.crawldb.rstrip("/") + ".tmp"
-    _write(out, tmp)
-    _install(tmp, args.crawldb)
-    print(f"updatedb: crawldb now {_read(spark, args.crawldb).count()} urls")
+    """The update stage over the segment's committed tables, into the
+    CrawlDb snapshot its fetchlist came from: a CrawlDb that moved since
+    raises ConcurrentCommitError."""
+    cat = _crawldb(args.crawldb)
+    seg_cat, cycle_id, gen_table = _segment(args.segment, "crawl_generate")
+    if os.path.abspath(seg_cat.root) != os.path.abspath(cat.root):
+        raise UsageError(f"{args.segment} is not a segment of {cat.root}")
+    gen = cat.snapshot(gen_table)
+    parent = gen.lineage["crawldb_parent_snapshot"]
+    if parent is None:
+        raise UsageError(f"{args.segment} was generated without a CrawlDb; inject first")
+    seg = segment_name(cycle_id)
+    tables = {t: cat.snapshot(t).snapshot_id for t in (f"{seg}_{n}" for n in SEGMENT_TABLES)}
+    crawler = _crawler(cat)
+    res = crawler.update(
+        cycle_id, args.now_ms, cat.read(crawler.spark, CRAWLDB, parent),
+        cat.snapshot(CRAWLDB, parent), cat.read(crawler.spark, gen_table, gen.snapshot_id),
+        gen.rows, tables,
+    )
+    print(f"updatedb: crawldb now {res.db_size} urls")
     return 0
+
+
+def _update_crawldb(args, stage: str, fn):
+    """Commit ``fn(CrawlDb)`` as the next CrawlDb snapshot, expecting
+    the snapshot it read to be current still."""
+    cat = _crawldb(args.crawldb)
+    parent = cat.current_snapshot_id(CRAWLDB)
+    out = fn(cat.read(_spark(), CRAWLDB, parent))
+    return commit_crawldb(cat, out, args.now_ms, stage, expected_parent=parent)
 
 
 def cmd_readdb(args) -> int:
@@ -196,8 +237,8 @@ def cmd_mergedb(args) -> int:
     spark = _spark()
     cfg = NutchConfig()
     out = merge_crawldbs([_read(spark, p) for p in args.dbs], cfg)
-    _write(out, args.out)
-    print(f"mergedb: {_read(spark, args.out).count()} urls")
+    snap = commit_crawldb(_crawldb(args.out), out, args.now_ms, "mergedb")
+    print(f"mergedb: {snap.rows} urls")
     return 0
 
 
@@ -206,15 +247,15 @@ def cmd_invertlinks(args) -> int:
 
     spark = _spark()
     cfg = NutchConfig()
+    cat, table = _table(args.linkdb)
     new = invert_links(_read(spark, args.outlinks), cfg)
-    existing = (
-        _read(spark, args.linkdb) if os.path.exists(args.linkdb) else None
+    parent = cat.current_snapshot_id(table)
+    existing = cat.read(spark, table, parent) if parent is not None else None
+    snap = cat.commit(
+        merge_linkdbs(existing, new, cfg), table, now_ms=args.now_ms,
+        lineage={"stage": "invertlinks"}, expected_parent=parent,
     )
-    out = merge_linkdbs(existing, new, cfg)
-    tmp = args.linkdb.rstrip("/") + ".tmp"
-    _write(out, tmp)
-    _install(tmp, args.linkdb)
-    print(f"invertlinks: linkdb now {_read(spark, args.linkdb).count()} targets")
+    print(f"invertlinks: linkdb now {snap.rows} targets")
     return 0
 
 
@@ -249,12 +290,7 @@ def cmd_readlinkdb(args) -> int:
 def cmd_dedup(args) -> int:
     from nutch_spark.operators.dedup import dedup
 
-    spark = _spark()
-    cfg = NutchConfig()
-    out = dedup(_read(spark, args.crawldb), cfg)
-    tmp = args.crawldb.rstrip("/") + ".tmp"
-    _write(out, tmp)
-    _install(tmp, args.crawldb)
+    _update_crawldb(args, "dedup", lambda db: dedup(db, NutchConfig()))
     print("dedup: done")
     return 0
 
@@ -346,8 +382,9 @@ def cmd_indexchecker(args) -> int:
 
 
 # SegmentReader parts (segment/SegmentReader.java:66-74) — ours are the
-# parquet tables crawl_loop commits per cycle; crawl_generate/content
-# only exist when a caller staged them (bench does), and a missing part
+# parquet tables a cycle commits; crawl_generate exists when the CLI's
+# generate/freegen wrote the segment (run_cycle keeps its fetchlist in
+# memory) and content only when a caller staged it, and a missing part
 # prints '?' exactly like the reference's per-part flags. crawl_redirect
 # holds the redirect-target datums the reference keeps in crawl_fetch
 _SEG_PARTS = (
@@ -491,15 +528,17 @@ def cmd_readseg(args) -> int:
 
 
 def cmd_freegen(args) -> int:
-    """FreeGenerator (``tools/FreeGenerator.java``): fetchlist straight
-    from seed text, skipping the CrawlDb."""
+    """FreeGenerator (``tools/FreeGenerator.java``): the next segment's
+    fetchlist straight from seed text, skipping the CrawlDb."""
     from nutch_spark.operators.generate import free_generate
 
-    spark = _spark()
-    cfg = NutchConfig()
-    fl = free_generate(spark, args.seeds, cfg, _now(args), num_lists=args.num_lists)
-    _write(fl, args.out)
-    print(f"freegen: {_read(spark, args.out).count()} urls in fetchlist")
+    cat = SnapshotCatalog(args.crawl)
+    crawler = _crawler(cat)
+    fl = free_generate(
+        crawler.spark, args.seeds, crawler.cfg, args.now_ms, num_lists=args.num_lists
+    )
+    parent = cat.current_snapshot_id(CRAWLDB)
+    print("freegen: " + _commit_fetchlist(crawler, fl, args.now_ms, parent))
     return 0
 
 
@@ -514,17 +553,15 @@ def _empty_robots(spark):
 def cmd_fetch(args) -> int:
     """Fetcher (``fetcher/Fetcher.java``) over the simulated web: the
     politeness/robots/redirect machinery is real; the network is a
-    table. ``--outcomes`` is the (url, outcome, redirect_to,
-    latency_ms) protocol fixture — absent, every fetchlist url succeeds
-    at 100 ms (an operator smoke run). Writes ``<out>_crawl_fetch`` and
-    ``<out>_redirects``."""
+    table. Fetches the segment's ``crawl_generate`` into its
+    ``crawl_fetch`` and ``crawl_redirect``. ``--outcomes`` is the (url,
+    outcome, redirect_to, latency_ms) protocol fixture — absent, every
+    fetchlist url succeeds at 100 ms (an operator smoke run)."""
     from pyspark.sql import functions as F
 
-    from nutch_spark.operators.fetchsim import fetch
-
+    cat, cycle_id, table = _segment(args.segment, "crawl_generate")
     spark = _spark()
-    cfg = NutchConfig()
-    fl = _read(spark, args.fetchlist)
+    fl = cat.read(spark, table)
     robots = _read(spark, args.robots) if args.robots else _empty_robots(spark)
     if args.outcomes:
         outcomes = _read(spark, args.outcomes)
@@ -536,28 +573,35 @@ def cmd_fetch(args) -> int:
             F.lit(100).cast("long").alias("latency_ms"),
         )
     dns = _read(spark, args.dns) if args.dns else None
-    crawl_fetch, redirects = fetch(fl, robots, outcomes, cfg, _now(args), dns=dns)
-    _write(crawl_fetch, args.out.rstrip("/") + "_crawl_fetch")
-    _write(redirects, args.out.rstrip("/") + "_redirects")
-    n = _read(spark, args.out.rstrip("/") + "_crawl_fetch").count()
-    print(f"fetch: {n} urls fetched")
+    crawler = _crawler(cat, robots=robots, outcomes=outcomes)
+    crawl_fetch, crawl_redirect = crawler.fetch(fl, args.now_ms, dns=dns)
+    try:
+        fetched, _ = crawler.commit_segment(cycle_id, args.now_ms, {
+            "crawl_fetch": crawl_fetch, "crawl_redirect": crawl_redirect,
+        }).values()
+    finally:
+        crawl_fetch.unpersist()
+    print(f"fetch: {fetched.rows} urls fetched")
     return 0
 
 
 def cmd_parse(args) -> int:
-    """ParseSegment (``parse/ParseSegment.java``): parse fetched
-    content (url, score, fetch_time, gen_time, spans, is_canonical)
-    into the segment part tables ``<out>_{parse_text,parse_data,
-    parse_meta,crawl_parse}`` and ``<out>_outlinks``."""
-    from nutch_spark.operators.parse import parse
-
+    """ParseSegment (``parse/ParseSegment.java``): parse the pages of
+    the segment's ``crawl_fetch``, their content read from the
+    ``--docs`` corpus table (doc_id, spans, is_canonical), into its
+    ``crawl_parse``, ``parse_text``, ``parse_data`` and ``parse_meta``."""
+    cat, cycle_id, table = _segment(args.segment, "crawl_fetch")
     spark = _spark()
-    cfg = NutchConfig()
-    parsed = parse(_read(spark, args.content), cfg)
-    base = args.out.rstrip("/")
-    for part in ("parse_text", "parse_data", "parse_meta", "crawl_parse", "outlinks"):
-        _write(parsed[part], f"{base}_{part}")
-    n = _read(spark, base + "_parse_text").count()
+    crawler = _crawler(cat, docs=_read(spark, args.docs))
+    handles: list = []
+    try:
+        committed = crawler.commit_segment(
+            cycle_id, args.now_ms, crawler.parse(cat.read(spark, table), handles)
+        )
+    finally:
+        for h in handles:
+            h.unpersist()
+    n = committed[f"{segment_name(cycle_id)}_parse_text"].rows
     print(f"parse: {n} documents parsed")
     return 0
 
@@ -586,8 +630,9 @@ def cmd_mergelinkdb(args) -> int:
     acc = _read(spark, args.dbs[0])
     for p in args.dbs[1:]:
         acc = merge_linkdbs(acc, _read(spark, p), cfg)
-    _write(acc, args.out)
-    print(f"mergelinkdb: {_read(spark, args.out).count()} targets")
+    cat, table = _table(args.out)
+    snap = cat.commit(acc, table, now_ms=args.now_ms, lineage={"stage": "mergelinkdb"})
+    print(f"mergelinkdb: {snap.rows} targets")
     return 0
 
 
@@ -822,11 +867,8 @@ def cmd_linkrank(args) -> int:
 def cmd_scoreupdater(args) -> int:
     from nutch_spark.operators.webgraph import score_updater
 
-    spark = _spark()
-    out = score_updater(_read(spark, args.crawldb), _read(spark, args.scores))
-    tmp = args.crawldb.rstrip("/") + ".tmp"
-    _write(out, tmp)
-    _install(tmp, args.crawldb)
+    scores = _read(_spark(), args.scores)
+    _update_crawldb(args, "scoreupdater", lambda db: score_updater(db, scores))
     print("scoreupdater: crawldb scores updated")
     return 0
 
@@ -890,15 +932,11 @@ def cmd_sitemap(args) -> int:
     spark = _spark()
     cfg = NutchConfig()
     entries, index_refs = parse_sitemaps(_read(spark, args.sitemaps), cfg)
-    out = sitemap_merge(
-        _read(spark, args.crawldb), entries, cfg, _now(args),
-        overwrite=args.overwrite,
-    )
-    tmp = args.crawldb.rstrip("/") + ".tmp"
-    _write(out, tmp)
-    _install(tmp, args.crawldb)
+    snap = _update_crawldb(args, "sitemap", lambda db: sitemap_merge(
+        db, entries, cfg, args.now_ms, overwrite=args.overwrite,
+    ))
     n_idx = index_refs.count()
-    print(f"sitemap: crawldb now {_read(spark, args.crawldb).count()} urls"
+    print(f"sitemap: crawldb now {snap.rows} urls"
           f" ({n_idx} child sitemaps not followed)")
     return 0
 
@@ -908,8 +946,6 @@ def cmd_snapshots(args) -> int:
     one line per snapshot with stage/cycle lineage and metrics, plus —
     with -manifest — the per-file row/byte/url-range manifest the
     commit recorded from the parquet footers (per-partition lineage)."""
-    from nutch_spark.catalog import SnapshotCatalog
-
     cat = SnapshotCatalog(args.warehouse)
     snaps = cat.snapshots(args.table)
     if not snaps:
@@ -970,24 +1006,34 @@ def main(argv: list[str] | None = None) -> int:
                    help="injected clock (determinism)")
     sub = p.add_subparsers(dest="cmd", required=True)
 
-    s = sub.add_parser("inject")
-    s.add_argument("crawldb"); s.add_argument("seeds")
-    s.set_defaults(fn=cmd_inject)
+    def cmd(name, *positional, aliases=()):
+        """Subcommand ``name``, run by ``cmd_<name>``, and its
+        positional arguments."""
+        s = sub.add_parser(name, aliases=list(aliases))
+        for a in positional:
+            s.add_argument(a)
+        s.set_defaults(fn=globals()[f"cmd_{name}"])
+        return s
 
-    s = sub.add_parser("generate")
-    s.add_argument("crawldb"); s.add_argument("out")
+    cmd("inject", "crawldb", "seeds")
+    s = cmd("generate", "crawldb")
     s.add_argument("--top-n", type=int, default=50_000)
-    s.add_argument("--num-lists", type=int, default=1)
+    s.add_argument("--num-lists", type=int, default=None,
+                   help="fetch partitions (default: fetch_partitions)")
     s.add_argument("-expr", "--expr", default=None, dest="expr",
                    help="JEXL eligibility filter (generate.expr)")
-    s.set_defaults(fn=cmd_generate)
+    s = cmd("freegen", "seeds", "crawl")
+    s.add_argument("--num-lists", type=int, default=None)
+    s = cmd("fetch", "segment")
+    s.add_argument("--robots", default=None)
+    s.add_argument("--outcomes", default=None)
+    s.add_argument("--dns", default=None)
+    s = cmd("parse", "segment")
+    s.add_argument("--docs", required=True,
+                   help="corpus table the fetched pages are read from")
+    cmd("updatedb", "crawldb", "segment")
 
-    s = sub.add_parser("updatedb")
-    s.add_argument("crawldb"); s.add_argument("segment")
-    s.set_defaults(fn=cmd_updatedb)
-
-    s = sub.add_parser("readdb")
-    s.add_argument("crawldb")
+    s = cmd("readdb", "crawldb")
     s.add_argument("-stats", action="store_true", dest="stats")
     s.add_argument("-topN", type=int, default=None, dest="topN")
     s.add_argument("-dump", default=None, dest="dump")
@@ -997,193 +1043,79 @@ def main(argv: list[str] | None = None) -> int:
     s.add_argument("--regex", default=None)
     s.add_argument("-expr", "--expr", default=None, dest="expr",
                    help="JEXL filter over the CrawlDatum context")
-    s.set_defaults(fn=cmd_readdb)
-
-    s = sub.add_parser("mergedb")
-    s.add_argument("out"); s.add_argument("dbs", nargs="+")
-    s.set_defaults(fn=cmd_mergedb)
-
-    s = sub.add_parser("invertlinks")
-    s.add_argument("linkdb"); s.add_argument("outlinks")
-    s.set_defaults(fn=cmd_invertlinks)
-
-    s = sub.add_parser("readlinkdb")
-    s.add_argument("linkdb")
+    cmd("mergedb", "out").add_argument("dbs", nargs="+")
+    cmd("invertlinks", "linkdb", "outlinks")
+    s = cmd("readlinkdb", "linkdb")
     s.add_argument("-dump", dest="dump")
     s.add_argument("-regex", dest="regex")
     s.add_argument("-url", dest="url")
-    s.set_defaults(fn=cmd_readlinkdb)
-
-    s = sub.add_parser("dedup")
-    s.add_argument("crawldb")
-    s.set_defaults(fn=cmd_dedup)
-
-    s = sub.add_parser("hostdb")
-    s.add_argument("crawldb"); s.add_argument("hostdb")
-    s.set_defaults(fn=cmd_hostdb)
-
-    s = sub.add_parser("parsechecker")
-    s.add_argument("file"); s.add_argument("--url", default="http://example.com/")
-    s.set_defaults(fn=cmd_parsechecker)
-
-    s = sub.add_parser("indexchecker")
-    s.add_argument("file"); s.add_argument("--url", default="http://example.com/")
-    s.set_defaults(fn=cmd_indexchecker)
-
-    s = sub.add_parser("readseg")
+    cmd("dedup", "crawldb")
+    cmd("hostdb", "crawldb", "hostdb", aliases=["updatehostdb"])
+    cmd("parsechecker", "file").add_argument("--url", default="http://example.com/")
+    cmd("indexchecker", "file").add_argument("--url", default="http://example.com/")
+    s = cmd("readseg")
     s.add_argument("segments", nargs="+",
                    help="segment dir(s) or catalog table prefix(es)")
     s.add_argument("-list", action="store_true", dest="list")
     s.add_argument("-dump", default=None, dest="dump")
     s.add_argument("-get", default=None, dest="get")
-    s.set_defaults(fn=cmd_readseg)
-
-    s = sub.add_parser("freegen")
-    s.add_argument("seeds"); s.add_argument("out")
-    s.add_argument("--num-lists", type=int, default=None)
-    s.set_defaults(fn=cmd_freegen)
-
-    s = sub.add_parser("fetch")
-    s.add_argument("fetchlist"); s.add_argument("out")
-    s.add_argument("--robots", default=None)
-    s.add_argument("--outcomes", default=None)
-    s.add_argument("--dns", default=None)
-    s.set_defaults(fn=cmd_fetch)
-
-    s = sub.add_parser("parse")
-    s.add_argument("content"); s.add_argument("out")
-    s.set_defaults(fn=cmd_parse)
-
-    s = sub.add_parser("mergesegs")
-    s.add_argument("out"); s.add_argument("segments", nargs="+")
+    s = cmd("mergesegs", "out")
+    s.add_argument("segments", nargs="+")
     s.add_argument("--slice", type=int, default=None)
-    s.set_defaults(fn=cmd_mergesegs)
-
-    s = sub.add_parser("mergelinkdb")
-    s.add_argument("out"); s.add_argument("dbs", nargs="+")
-    s.set_defaults(fn=cmd_mergelinkdb)
-
-    s = sub.add_parser("index")
-    s.add_argument("crawldb"); s.add_argument("parse_text"); s.add_argument("out")
+    cmd("mergelinkdb", "out").add_argument("dbs", nargs="+")
+    s = cmd("index", "crawldb", "parse_text", "out")
     s.add_argument("--format", choices=["jsonl", "csv"], default="jsonl")
-    s.set_defaults(fn=cmd_index)
-
-    s = sub.add_parser("clean")
-    s.add_argument("crawldb"); s.add_argument("out")
-    s.set_defaults(fn=cmd_clean)
-
-    s = sub.add_parser("dump")
-    s.add_argument("parse_text"); s.add_argument("out")
-    s.set_defaults(fn=cmd_dump)
-
-    s = sub.add_parser("commoncrawldump")
-    s.add_argument("pages"); s.add_argument("out")
-    s.set_defaults(fn=cmd_commoncrawldump)
-
-    s = sub.add_parser("warc")
-    s.add_argument("content"); s.add_argument("out")
-    s.set_defaults(fn=cmd_warc)
-
-    s = sub.add_parser("filedump")
-    s.add_argument("content"); s.add_argument("out", nargs="?", default=None)
+    cmd("clean", "crawldb", "out")
+    cmd("dump", "parse_text", "out")
+    cmd("commoncrawldump", "pages", "out")
+    cmd("warc", "content", "out")
+    s = cmd("filedump", "content")
+    s.add_argument("out", nargs="?", default=None)
     s.add_argument("--mime-type", action="append", default=None)
     s.add_argument("--flat", action="store_true")
     s.add_argument("--mime-stats", action="store_true")
     s.add_argument("--reverse-url-dirs", action="store_true")
-    s.set_defaults(fn=cmd_filedump)
-
-    s = sub.add_parser("resolveurls")
-    s.add_argument("urls")
-    s.add_argument("--hosts", default=None)
-    s.set_defaults(fn=cmd_resolveurls)
-
-    s = sub.add_parser("linkdumper")
-    s.add_argument("webgraph")
+    cmd("resolveurls", "urls").add_argument("--hosts", default=None)
+    s = cmd("linkdumper", "webgraph")
     s.add_argument("--scores", default=None)
     s.add_argument("--out", default=None)
     s.add_argument("--url", default=None)
     s.add_argument("--max-inlinks", type=int, default=50000)
-    s.set_defaults(fn=cmd_linkdumper)
-
-    s = sub.add_parser("arc")
-    s.add_argument("arc_files"); s.add_argument("segments_out")
-    s.add_argument("--segment-name", default=None)
-    s.set_defaults(fn=cmd_arc)
-
-    s = sub.add_parser("domainstats")
-    s.add_argument("crawldb")
+    cmd("arc", "arc_files", "segments_out").add_argument("--segment-name", default=None)
+    s = cmd("domainstats", "crawldb")
     s.add_argument("--mode", choices=["domain", "host", "suffix", "tld"],
                    default="domain")
     s.add_argument("--out", default=None)
     s.add_argument("--limit", type=int, default=50)
-    s.set_defaults(fn=cmd_domainstats)
-
-    s = sub.add_parser("protocolstats")
-    s.add_argument("crawldb")
-    s.set_defaults(fn=cmd_protocolstats)
-
-    s = sub.add_parser("crawlcomplete")
-    s.add_argument("crawldb")
-    s.add_argument("--mode", choices=["host", "domain"], default="host")
-    s.set_defaults(fn=cmd_crawlcomplete)
-
-    s = sub.add_parser("webgraph")
-    s.add_argument("outlinks"); s.add_argument("out")
-    s.set_defaults(fn=cmd_webgraph)
-
-    s = sub.add_parser("linkrank")
-    s.add_argument("webgraph"); s.add_argument("out")
-    s.add_argument("--iterations", type=int, default=10)
-    s.set_defaults(fn=cmd_linkrank)
-
-    s = sub.add_parser("scoreupdater")
-    s.add_argument("crawldb"); s.add_argument("scores")
-    s.set_defaults(fn=cmd_scoreupdater)
-
-    s = sub.add_parser("nodedumper")
+    cmd("protocolstats", "crawldb")
+    cmd("crawlcomplete", "crawldb").add_argument(
+        "--mode", choices=["host", "domain"], default="host")
+    cmd("webgraph", "outlinks", "out")
+    cmd("linkrank", "webgraph", "out").add_argument("--iterations", type=int, default=10)
+    cmd("scoreupdater", "crawldb", "scores")
+    s = cmd("nodedumper")
     s.add_argument("--group", choices=["in", "out", "scores"], default="in")
     s.add_argument("--webgraph", default=None)
     s.add_argument("--scores", default=None)
     s.add_argument("--topn", type=int, default=10)
     s.add_argument("--out", default=None)
-    s.set_defaults(fn=cmd_nodedumper)
-
-    s = sub.add_parser("updatehostdb")
-    s.add_argument("crawldb"); s.add_argument("hostdb")
-    s.set_defaults(fn=cmd_hostdb)
-
-    s = sub.add_parser("readhostdb")
-    s.add_argument("hostdb")
+    s = cmd("readhostdb", "hostdb")
     s.add_argument("-dump", default=None, dest="dump")
     s.add_argument("-get", default=None, dest="get")
     s.add_argument("-expr", "--expr", default=None, dest="expr",
                    help="JEXL filter (hostdb.filter.expression)")
-    s.set_defaults(fn=cmd_readhostdb)
-
-    s = sub.add_parser("sitemap")
-    s.add_argument("crawldb"); s.add_argument("sitemaps")
-    s.add_argument("--overwrite", action="store_true")
-    s.set_defaults(fn=cmd_sitemap)
-
-    s = sub.add_parser("snapshots")
-    s.add_argument("warehouse")
-    s.add_argument("table")
-    s.add_argument("-manifest", action="store_true")
-    s.set_defaults(fn=cmd_snapshots)
-
-    s = sub.add_parser("showproperties")
-    s.set_defaults(fn=cmd_showproperties)
-
-    s = sub.add_parser("normalizerchecker")
-    s.add_argument("url")
-    s.set_defaults(fn=cmd_normalizerchecker)
-
-    s = sub.add_parser("filterchecker")
-    s.add_argument("url")
-    s.set_defaults(fn=cmd_filterchecker)
+    cmd("sitemap", "crawldb", "sitemaps").add_argument("--overwrite", action="store_true")
+    cmd("snapshots", "warehouse", "table").add_argument("-manifest", action="store_true")
+    cmd("showproperties")
+    cmd("normalizerchecker", "url")
+    cmd("filterchecker", "url")
 
     args = p.parse_args(argv)
-    return args.fn(args)
+    try:
+        return args.fn(args)
+    except (UsageError, FileNotFoundError) as exc:
+        print(f"{args.cmd}: {exc}", file=sys.stderr)
+        return 2
 
 
 if __name__ == "__main__":

@@ -27,8 +27,9 @@ Mirrors the reference's service layer
   like NutchServer.canStop).
 - ``resources/DbResource.java``: ``POST /db/crawldb`` with DbQuery
   ``{crawlId, type: stats|dump|topN|url, args}`` delegating to the
-  ``operators/stats`` readers over ``<crawlId>/crawldb`` (the
-  reference's CrawlDbReader.query path convention), and
+  ``operators/stats`` readers over ``<crawlId>/crawldb``, the catalog
+  table the CLI's inject and updatedb commit (the reference's
+  CrawlDbReader.query path convention), and
   ``GET /db/fetchdb?from=&to=`` over the in-process fetch-node
   registry (FetchNodeDb is likewise an in-JVM singleton that is empty
   unless the REST-driven fetcher ran).
@@ -37,16 +38,19 @@ Mirrors the reference's service layer
   ``POST /reader/{sequence|link|node}/read`` with
   ``{path}`` + ``?nrows=&start=&end=&count=`` — the reference's
   performRead decision tree (count > slice(start,end) > head(nrows) >
-  read-all) over parquet, with a hard ``MAX_READ_ROWS`` cap on any
-  driver-side collect (a REST endpoint must never materialize O(data);
+  read-all) over a catalog table or parquet dir, with a hard
+  ``MAX_READ_ROWS`` cap on any driver-side collect (a REST endpoint must never materialize O(data);
   responses carry ``truncated: true`` when the cap bites — a
   deliberate, visible deviation from the reference's unbounded
   stream).
 
 Jobs execute the repo's operator CLI (``tools/nutch.py``) in-process —
 the same thin-shell layer a terminal user drives, so the REST surface
-adds job control without a second code path. Typed args map to the
-common tool signatures; ``args.argv`` passes any command verbatim.
+adds job control without a second code path: INJECT, GENERATE, FETCH,
+PARSE and UPDATEDB run ``Crawler``'s stages over the crawl dir their
+``crawldb``/``segment`` args name, as ``run_cycle`` does. Typed args map
+to the tool signatures (``_JOB_ARGV``); ``args.argv`` passes any
+command verbatim.
 """
 
 from __future__ import annotations
@@ -65,25 +69,24 @@ MAX_READ_ROWS = 10_000
 # Hadoop glob metacharacters (and its escape), refused by _confined
 _GLOB_CHARS = frozenset("{}[]*?,\\")
 
-JOB_TYPES = (
-    "INJECT", "GENERATE", "FETCH", "PARSE", "UPDATEDB",
-    "INDEX", "READDB", "INVERTLINKS", "DEDUP",
-)
-
-# JobType -> (command, ordered arg keys) over tools/nutch.py; optional
-# keys map to flags. Key names follow the reference's tool arg maps
-# (crawldb/url_dir/segment/linkdb).
+# JobType -> (command, arg keys) over tools/nutch.py: a key is a
+# positional argument, a ``--key`` a flag that takes args[key]; further
+# optional keys go under ``flags``. The crawl steps name the crawl dir's
+# tables as the CLI does (crawldb: ``<crawl>/crawldb``, segment:
+# ``<crawl>/segment_NNNN``), and parse reads the pages from the docs
+# table; key names follow the reference's tool arg maps.
 _JOB_ARGV = {
     "INJECT": ("inject", ["crawldb", "url_dir"]),
-    "GENERATE": ("generate", ["crawldb", "segment_dir"]),
-    "FETCH": ("fetch", ["fetchlist", "segment_dir"]),
-    "PARSE": ("parse", ["segment_dir", "out"]),
-    "UPDATEDB": ("updatedb", ["crawldb", "segment_dir"]),
+    "GENERATE": ("generate", ["crawldb"]),
+    "FETCH": ("fetch", ["segment"]),
+    "PARSE": ("parse", ["segment", "--docs"]),
+    "UPDATEDB": ("updatedb", ["crawldb", "segment"]),
     "INDEX": ("index", ["pages", "out"]),
     "READDB": ("readdb", ["crawldb"]),
     "INVERTLINKS": ("invertlinks", ["linkdb", "outlinks"]),
     "DEDUP": ("dedup", ["crawldb"]),
 }
+JOB_TYPES = tuple(_JOB_ARGV)
 
 
 class JobWorker(threading.Thread):
@@ -172,10 +175,12 @@ class NutchServerState:
             argv = [str(a) for a in args["argv"]]
         else:
             cmd, keys = _JOB_ARGV[jtype]
-            missing = [k for k in keys if k not in args]
+            missing = [k.lstrip("-") for k in keys if k.lstrip("-") not in args]
             if missing:
                 raise ValueError(f"{jtype} args missing {missing}")
-            argv = [cmd] + [str(args[k]) for k in keys]
+            argv = [cmd]
+            for k in keys:
+                argv += [k, str(args[k[2:]])] if k.startswith("--") else [str(args[k])]
             for flag, val in (args.get("flags") or {}).items():
                 argv += [f"--{flag}", str(val)]
         with self.lock:
@@ -192,10 +197,11 @@ class NutchServerState:
 
     # --- db + reader reads (DbResource / ReaderResouce) ---------------
     @staticmethod
-    def _session():
+    def _read(path: str):
+        """A catalog table or a plain parquet dir, as the CLI reads it."""
         import nutch as nutch_cli  # tools/nutch.py
 
-        return nutch_cli._spark()
+        return nutch_cli._read(nutch_cli._spark(), path)
 
     @staticmethod
     def _rows(df, limit):
@@ -233,8 +239,7 @@ class NutchServerState:
         if not crawl_id or not qtype:
             raise ValueError("crawlId and type are required")
         args = body.get("args") or {}
-        spark = self._session()
-        db = spark.read.parquet(self._confined(str(Path(crawl_id) / "crawldb")))
+        db = self._read(self._confined(str(Path(crawl_id) / "crawldb")))
         if qtype == "stats":
             rows, _ = self._rows(stats.crawldb_stats(db), -1)
             return {"type": "stats", "result": rows}
@@ -294,8 +299,7 @@ class NutchServerState:
         path = (body or {}).get("path")
         if not path:
             raise ValueError("path is required")
-        spark = self._session()
-        df = spark.read.parquet(self._confined(path))
+        df = self._read(self._confined(path))
 
         def qi(name, default):
             return int(q.get(name, [default])[0])
